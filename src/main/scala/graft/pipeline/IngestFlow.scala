@@ -90,11 +90,6 @@ object IngestFlow {
       threshold: Double,
       name: String = "volume_level_shift")
 
-  /** Commit a staged lake artifact: retire any previous live copy, then
-    * one rename activates the staged batch — a crash leaves either the
-    * old artifact, the retired copy (restored on the next run), or the
-    * new one, never a half-written table (the rewriteSwap discipline,
-    * sized down to a rename decision). */
   /** Restore a DANGLING retired copy (live missing, `__retired`
     * present — a crash between retiring live and renaming staged).
     * Runs at the START of every ingestion pass for every table, not
@@ -112,15 +107,19 @@ object IngestFlow {
       require(fs.rename(retired, liveP), s"could not restore $retired")
   }
 
+  /** Commit a staged lake artifact: retire any previous live copy, then
+    * one rename activates the staged batch — a crash leaves either the
+    * old artifact, the retired copy (restored on the next run), or the
+    * new one, never a half-written table (the rewriteSwap discipline,
+    * sized down to a rename decision). */
   private def promoteStaged(spark: SparkSession, staging: String,
       live: String): Unit = {
+    restoreRetired(spark, live)
     val fs = new org.apache.hadoop.fs.Path(live)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val (liveP, stagP) = (new org.apache.hadoop.fs.Path(live),
       new org.apache.hadoop.fs.Path(staging))
     val retired = new org.apache.hadoop.fs.Path(live + "__retired")
-    if (!fs.exists(liveP) && fs.exists(retired))
-      require(fs.rename(retired, liveP), s"could not restore $retired")
     fs.delete(retired, true)
     if (fs.exists(liveP))
       require(fs.rename(liveP, retired), s"could not retire $live")

@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 
 import graft.operators.{AnnSearch, Dedup, TextSearch}
 
@@ -79,7 +80,7 @@ object SilverIndex {
     * fingerprint serve STALE centroids after a rebuild
     * (SilverIndexSpec's maintainIvfPq case caught it). Hidden subtrees
     * skipped whole, as [[readIfData]]. */
-  private def dataStats(fs: org.apache.hadoop.fs.FileSystem,
+  private def dataStats(fs: FileSystem,
       dir: Path): (Long, Long, Long) = {
     def walk(d: Path): (Long, Long, Long) =
       fs.listStatus(d).foldLeft((0L, 0L, 0L)) { case ((n, b, t), st) =>
@@ -96,7 +97,7 @@ object SilverIndex {
   }
 
   /** The fingerprint string shared by sidecar and caches. */
-  private def fingerprint(fs: org.apache.hadoop.fs.FileSystem,
+  private def fingerprint(fs: FileSystem,
       dir: String): String = {
     val (files, bytes, mtime) = dataStats(fs, new Path(dir))
     s"$files:$bytes:$mtime"
@@ -111,27 +112,32 @@ object SilverIndex {
     * without it every refresh pays two full-table count jobs, and at
     * 10¹¹ indexed rows even a footer-statistics count is a distributed
     * job over every file. */
-  private def readMetaRows(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Option[Long] = {
-    val f = metaFile(dir)
+  private def readMetaRows(fs: FileSystem,
+      dir: String): Option[Long] =
+    readSidecar(fs, metaFile(dir)) { kv =>
+      if (kv("fp") == fingerprint(fs, dir)) Some(kv("rows").toLong) else None
+    }
+
+  /** A flat one-line JSON sidecar read as key → value (quotes stripped)
+    * and handed to `parse`; a missing, torn or unparseable file is None,
+    * never an error — every sidecar here is a cache with a recount or a
+    * rebuild behind it. */
+  private def readSidecar[T](fs: FileSystem, f: Path)(
+      parse: Map[String, String] => Option[T]): Option[T] =
     if (!fs.exists(f)) None
     else
       try {
         val in = fs.open(f)
         val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
-        val kv = txt.stripPrefix("{").stripSuffix("}").split(",").map { p =>
+        parse(txt.stripPrefix("{").stripSuffix("}").split(",").map { p =>
           val Array(k, v) = p.split(":", 2)
-          k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim
-        }.toMap
-        if (kv("fp").stripPrefix("\"").stripSuffix("\"") ==
-            fingerprint(fs, dir))
-          Some(kv("rows").toLong)
-        else None
+          k.trim.stripPrefix("\"").stripSuffix("\"") ->
+            v.trim.stripPrefix("\"").stripSuffix("\"")
+        }.toMap)
       } catch { case scala.util.control.NonFatal(_) => None }
-  }
 
-  private def writeMetaRows(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeMetaRows(fs: FileSystem,
       dir: String, rows: Long): Unit = {
     val fp = fingerprint(fs, dir)
     val out = fs.create(metaFile(dir), true)
@@ -144,7 +150,7 @@ object SilverIndex {
     * count otherwise. */
   private def existingRows(spark: SparkSession, dir: String,
       existing: Option[DataFrame]): Long = existing.fold(0L) { df =>
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = hadoopFs(spark, dir)
     readMetaRows(fs, dir).getOrElse(df.count())
   }
 
@@ -164,10 +170,229 @@ object SilverIndex {
       .parquet(dir)
     val appended = obs.get("n").asInstanceOf[Long]
     val total = before + appended
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = hadoopFs(spark, dir)
     writeMetaRows(fs, dir, total)
     Refresh(appended, total)
   }
+
+  // ------------------------------------------------- commit disciplines
+  //
+  // Every artifact below commits through one of three disciplines, each
+  // written once here: APPEND ([[appendNew]] — id anti-join, replays
+  // append nothing), PAIR DELTA ([[pairDeltaBatch]] — transaction
+  // intent, then a per-batch overwrite partition) and VERSIONED FOLD
+  // ([[commitVersion]]/[[latestVersion]] — stage, one rename, retire).
+  // [[onEachBatch]] drives any of them from Structured Streaming.
+
+  private def hadoopFs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** The ONE-ROW config probe: an append-only table keeps its config
+    * columns uniform (every append writes the build's values), so one
+    * stored row — a CollectLimit, one row group — exposes a mismatch,
+    * where a max/distinct over the column would scan it on every call.
+    * `checks` are (what, stored column, requested value); NULL stored
+    * values pass. */
+  private def probeConfig(ix: DataFrame, path: String, verb: String,
+      checks: (String, Column, Any)*): Unit =
+    ix.select(checks.map(_._2): _*).limit(1).collect().headOption
+      .foreach { r =>
+        checks.zipWithIndex.foreach { case ((what, _, want), i) =>
+          require(r.isNullAt(i) || r.get(i) == want,
+            s"index at $path has $what ${r.get(i)}, $verb $want — " +
+              "rebuild, don't mix")
+        }
+      }
+
+  /** The APPEND discipline: fold `input` into the append-only table at
+    * `path`. Rows whose `key` is already stored (as `storedKey`) drop by
+    * anti-join, `build` derives the stored rows of the rest, and
+    * [[appendCounted]] appends them with zero count jobs. A build that is
+    * a pure per-row function makes the union row-identical to a
+    * from-scratch build, and a replayed batch appends nothing (the
+    * exactly-once argument at [[streamingRefresh]]). `probe` sees the
+    * stored table before anything is derived ([[probeConfig]]). */
+  private def appendNew(input: DataFrame, key: String, path: String,
+      storedKey: String = "doc", probe: DataFrame => Unit = _ => (),
+      partitionCols: Seq[String] = Nil,
+      shape: DataFrame => DataFrame = identity)(
+      build: DataFrame => DataFrame): Refresh = {
+    val spark = input.sparkSession
+    val existing = readIfData(spark, path)
+    existing.foreach(probe)
+    val fresh = existing.fold(input)(ix => input.join(
+      ix.select(col(storedKey).as(key)).distinct(), Seq(key), "left_anti"))
+    val before = existingRows(spark, path, existing)
+    appendCounted(build(fresh), path, partitionCols, before, shape)
+  }
+
+  /** The PAIR-DELTA discipline — one micro-batch of every streaming pair
+    * emitter (s6, m9, d18, d20, d22, d25, s19):
+    *  1. the batch's NEW ids through the transaction intent
+    *     ([[intentNewIds]]);
+    *  2. `refresh` appends the artifact rows of exactly those ids — the
+    *     batch is semi-joined to the intent first, so the refresh's own
+    *     anti-join (kept: it is the append's replay guard) runs on the
+    *     already-new side only;
+    *  3. `pairs` derives the pairs touching a new id from the post-append
+    *     artifact into the batch's own partition by OVERWRITE: a replay
+    *     recomputes the identical pairs (same stored intent, same
+    *     artifact) into the same partition, where an append would
+    *     duplicate them.
+    * Each pair lands exactly once — in the batch where its later member
+    * arrives — so the accumulated pairs equal the from-scratch operator
+    * over the same corpus, and a replay of a finished batch re-emits the
+    * same partition. */
+  private def pairDeltaBatch(batch: DataFrame, batchId: Long,
+      idCol: String, sigPath: String, pairsPath: String)(
+      refresh: DataFrame => Refresh)(pairs: DataFrame => DataFrame): Unit = {
+    val newIds = intentNewIds(batch.sparkSession, sigPath, batchId,
+      batch.select(col(idCol).as("doc")).distinct())
+    refresh(batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
+      "left_semi"))
+    pairs(newIds).write.mode("overwrite")
+      .parquet(s"$pairsPath/batch=$batchId")
+  }
+
+  /** The transaction intent of [[pairDeltaBatch]]: the batch's NEW id
+    * set (`ids`, a `doc` column, anti-joined against the artifact at
+    * `sigPath`), persisted before any table mutates. The artifact append
+    * and the pair write are not atomic together — a crash between them
+    * would otherwise lose the batch's pairs forever, because a replay's
+    * anti-join against the ALREADY-APPENDED rows finds nothing new. The
+    * stored intent makes the replay reuse the original id set instead of
+    * re-deriving it against mutated state. One tiny file per batch,
+    * kept (deleting it would reopen the same window).
+    *
+    * The guard is on COMMITTED data files, not bare existence: the dir
+    * exists as soon as a write STARTS, and fs.exists would send the
+    * replay into a failing (or empty) read over leftover debris. The
+    * intent itself commits by stage-then-rename (one file via
+    * coalesce(1), staged under `_tmp_`, one atomic dir rename): a direct
+    * multi-file write commits part files one rename at a time, so a
+    * crash mid-commit could leave a readable but INCOMPLETE id set and
+    * the replay would silently drop the missing ids. Any pre-rename
+    * crash leaves no committed data files and the replay re-derives
+    * (nothing has mutated before the intent commit). */
+  private def intentNewIds(spark: SparkSession, sigPath: String,
+      batchId: Long, ids: DataFrame): DataFrame = {
+    val intentDir = s"$sigPath/_intent/batch$batchId"
+    if (hasDataFiles(spark, intentDir)) spark.read.parquet(intentDir)
+    else {
+      val fresh = readIfData(spark, sigPath)
+        .fold(ids)(ix =>
+          ids.join(ix.select("doc"), Seq("doc"), "left_anti"))
+        .localCheckpoint(true)
+      val fs = hadoopFs(spark, sigPath)
+      val tmp = s"$sigPath/_intent/_tmp_batch$batchId"
+      fresh.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val dst = new Path(intentDir)
+      if (fs.exists(dst)) fs.delete(dst, true) // pre-fix debris
+      require(fs.rename(new Path(tmp), dst),
+        s"intent commit rename failed: $tmp -> $intentDir")
+      fresh
+    }
+  }
+
+  /** The committed versions under `root`: one `v<n>` directory per
+    * committed fold ([[commitVersion]]). */
+  private def versionsUnder(fs: FileSystem, root: String): Seq[Long] = {
+    val p = new Path(root)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .map(_.getPath.getName)
+      .collect { case n if n.startsWith("v") &&
+        n.drop(1).forall(_.isDigit) => n.drop(1).toLong }
+  }
+
+  /** The VERSIONED-FOLD discipline of KMV, Bloom, HLL, CMS, the drift
+    * ledger, the max rollup, components and SCD2: one committed `v<n>`
+    * directory per fold under `root`; readers serve the highest
+    * ([[latestVersion]]).
+    *
+    * `fold` gets the highest committed version (None before the first
+    * commit) and returns the Refresh count plus a stager that writes the
+    * next state into a given dir — or None for an empty fold, which
+    * commits nothing (an empty version has no parquet schema to read
+    * back, which would wedge every later fold). The stager writes
+    * `_tmp_v<n>`; ONE rename commits it; only then are the superseded
+    * versions retired. A crash before the rename leaves an orphan
+    * `_tmp_v<n>` that readers never see and the replay clears; a crash
+    * after it leaves an unretired old version that readers skip and the
+    * next fold retires. An in-place overwrite would instead
+    * delete the only copy before its job commits, silently losing the
+    * accumulated state (raw keys are never stored). Rename failures
+    * REPORT false rather than throw, hence the require: retiring after a
+    * failed rename would delete the only committed copy.
+    *
+    * `batchId` picks the numbering:
+    *  - Some(id), TRANSACTIONAL (the additive or non-idempotent folds):
+    *    n is the micro-batch id, so one rename commits the state AND its
+    *    transaction record together — a separate marker file would leave
+    *    a window where one is durable without the other (double-count on
+    *    replay, or a truncated marker wedging every later batch). A
+    *    replay of an id at or below the last committed one is a no-op,
+    *    Refresh(0, last); foreachBatch delivers ids monotonically, so the
+    *    directory name is the whole transaction log.
+    *  - None, SEQUENCE (the duplicate-insensitive folds): n is last + 1
+    *    and only orders the copies — a replay folds to the identical
+    *    state by construction. */
+  private def commitVersion(spark: SparkSession, root: String,
+      what: String, batchId: Option[Long] = None)(
+      fold: Option[Long] => Option[(Long, String => Unit)]): Refresh = {
+    val fs = hadoopFs(spark, root)
+    val committed = versionsUnder(fs, root)
+    val last = if (committed.isEmpty) -1L else committed.max
+    if (batchId.exists(_ <= last)) return Refresh(0, last)
+    fold(if (last < 0) None else Some(last)) match {
+      case None => Refresh(0, if (batchId.isEmpty) 0L else last)
+      case Some((n, stage)) =>
+        val nv = batchId.getOrElse(last + 1)
+        val tmp = s"$root/_tmp_v$nv"
+        fs.delete(new Path(tmp), true)
+        stage(tmp)
+        require(fs.rename(new Path(tmp), new Path(s"$root/v$nv")),
+          s"$what commit rename failed: $tmp -> $root/v$nv " +
+            "(old versions kept)")
+        committed.foreach(v => fs.delete(new Path(s"$root/v$v"), true))
+        Refresh(n, n)
+    }
+  }
+
+  /** A [[commitVersion]] stager writing `next` as the version's table. */
+  private def staged(n: Long, next: DataFrame)
+      : Option[(Long, String => Unit)] =
+    Some(n -> (dir => next.write.mode("overwrite").parquet(dir)))
+
+  /** A sequence fold's [[commitVersion]] result: its row count as the
+    * Refresh, and nothing to commit when it is empty. */
+  private def stagedNonEmpty(next: DataFrame)
+      : Option[(Long, String => Unit)] = {
+    val n = next.count()
+    if (n == 0) None else staged(n, next)
+  }
+
+  /** The highest committed version under `root` — the reader side of
+    * [[commitVersion]]: an unretired older version is skipped and an
+    * orphan `_tmp_v<n>` is invisible. */
+  private def latestVersion(spark: SparkSession, root: String,
+      what: String): Long = {
+    val vs = versionsUnder(hadoopFs(spark, root), root)
+    require(vs.nonEmpty, s"no committed $what under $root")
+    vs.max
+  }
+
+  /** The file's one Structured Streaming face: `f` runs on every
+    * micro-batch of `rows` with its batch id, checkpointed under
+    * `home`/_checkpoint so the artifact and its stream travel together.
+    * foreachBatch is at-least-once; every `f` here is replay-safe by its
+    * own discipline (anti-join, batch-id version, or intent). */
+  private def onEachBatch(rows: DataFrame, home: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
+      .foreachBatch { (batch: Dataset[Row], id: Long) => f(batch.toDF(), id) }
+      .option("checkpointLocation", s"$home/_checkpoint")
+      .start()
 
   // ---------------------------------------------------------------- MinHash
 
@@ -178,30 +403,13 @@ object SilverIndex {
     * stored signature length is authoritative downstream, so a mismatch
     * is caught by the width check here rather than silently mixed. */
   def refreshMinhash(docs: DataFrame, idCol: String, textCol: String,
-      n: Int, numHashes: Int, path: String): Refresh = {
-    val spark = docs.sparkSession
-    val existing = readIfData(spark, path)
-    val newDocs = existing.fold(docs) { ix =>
-      // width sanity from ONE stored row (CollectLimit — reads a single
-      // row group): the append-only discipline writes uniform widths, so
-      // any row exposes a config mismatch, while the previous
-      // max(size(sig)) was an unpushable full scan of the signature
-      // column on EVERY refresh (~0.5 GB at 1M docs × 64 hashes)
-      ix.select(size(col("sig")).as("w")).limit(1).collect()
-        .headOption.foreach { width =>
-          require(width.isNullAt(0) || width.getInt(0) == numHashes,
-            s"index at $path has signature width ${width.get(0)}, " +
-              s"refresh requested $numHashes — rebuild, don't mix")
-        }
-      docs.join(ix.select(col("doc").as(idCol)), Seq(idCol), "left_anti")
-    }
-    val before = existingRows(spark, path, existing)
-    // appended measured by an Observation on the write job itself (and
-    // the sidecar carries the running total), so a refresh pays zero
-    // count jobs — see appendCounted
-    appendCounted(Dedup.minhashSets(newDocs, idCol, textCol, n, numHashes),
-      path, Nil, before)
-  }
+      n: Int, numHashes: Int, path: String): Refresh =
+    // the width probe replaced a max(size(sig)) full scan of the
+    // signature column on EVERY refresh (~0.5 GB at 1M docs × 64 hashes)
+    appendNew(docs, idCol, path, probe = probeConfig(_, path,
+        "refresh requested", ("signature width", size(col("sig")),
+          numHashes)))(
+      Dedup.minhashSets(_, idCol, textCol, n, numHashes))
 
   /** The signature table as [[graft.operators.Dedup.minhashPairsFromSets]]
     * consumes it: (doc, sh, sig). */
@@ -229,19 +437,11 @@ object SilverIndex {
     * means rebuild (or version the path); a SUBJECT doc is erased via
     * [[eraseFingerprints]] (the p6 path). */
   def refreshFingerprints(frames: DataFrame, idCol: String,
-      frameIdxCol: String, frameCol: String, path: String): Refresh = {
-    val spark = frames.sparkSession
-    val existing = readIfData(spark, path)
-    val newDocs = existing.fold(frames)(ix => frames.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(newDocs.select(col(idCol).as("doc"),
+      frameIdxCol: String, frameCol: String, path: String): Refresh =
+    appendNew(frames, idCol, path)(_.select(col(idCol).as("doc"),
       col(frameIdxCol).cast("int").as("frame_idx"),
       graft.operators.Multimodal.dhashFingerprint(col(frameCol))
-        .as("fingerprint")),
-      path, Nil, before)
-  }
+        .as("fingerprint")))
 
   /** The fingerprint table as stored: (doc, frame_idx, fingerprint). */
   def fingerprintIndex(spark: SparkSession, path: String): DataFrame =
@@ -259,36 +459,26 @@ object SilverIndex {
           col("fingerprint").as("simhash")),
       maxDist)
 
-  /** One micro-batch of [[streamingFramePairs]] — the [[nearDupBatch]]
-    * protocol verbatim over frame fingerprints: transaction intent
-    * (the same crash windows, the same stage-then-rename commit),
-    * fingerprint append for the intent's new docs only, then the
-    * batch's pairs ([[Dedup.hammingPairsDelta]] — pairs touching a new
-    * doc, canonicalized) into a per-batch OVERWRITE partition so a
-    * replay re-emits identically instead of duplicating. */
+  /** One micro-batch of [[streamingFramePairs]] — [[pairDeltaBatch]]
+    * over frame fingerprints: the pairs touching a new doc
+    * ([[Dedup.hammingPairsDelta]] over frame keys, canonicalized). */
   private[pipeline] def frameNearDupBatch(batch: DataFrame,
       batchId: Long, idCol: String, frameIdxCol: String,
       frameCol: String, frameStride: Long, maxDist: Int,
-      sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshFingerprints(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, frameIdxCol, frameCol, sigPath)
-    val keyed = fingerprintIndex(spark, sigPath)
-      .select(col("doc"),
-        (col("doc") * frameStride + col("frame_idx")).as("fid"),
-        col("fingerprint"))
-    Dedup.hammingPairsDelta(
-        keyed.select(col("fid").as("doc"),
-          col("fingerprint").as("simhash")),
-        keyed.join(newIds, Seq("doc"), "left_semi").select("fid"),
-        maxDist)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+      sigPath: String, pairsPath: String): Unit =
+    pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshFingerprints(_, idCol, frameIdxCol, frameCol, sigPath)) {
+      newIds =>
+        val keyed = fingerprintIndex(batch.sparkSession, sigPath)
+          .select(col("doc"),
+            (col("doc") * frameStride + col("frame_idx")).as("fid"),
+            col("fingerprint"))
+        Dedup.hammingPairsDelta(
+          keyed.select(col("fid").as("doc"),
+            col("fingerprint").as("simhash")),
+          keyed.join(newIds, Seq("doc"), "left_semi").select("fid"),
+          maxDist)
+    }
 
   /** Continuous frame near-dup maintenance: each micro-batch appends
     * its new docs' fingerprints and emits exactly the pairs involving
@@ -297,14 +487,8 @@ object SilverIndex {
       frameIdxCol: String, frameCol: String, frameStride: Long,
       maxDist: Int, sigPath: String, pairsPath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    frames.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        frameNearDupBatch(batch.toDF(), batchId, idCol, frameIdxCol,
-          frameCol, frameStride, maxDist, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    onEachBatch(frames, sigPath)(frameNearDupBatch(_, _, idCol,
+      frameIdxCol, frameCol, frameStride, maxDist, sigPath, pairsPath))
 
   // ------------------------- symmetric-delete edit-pair index (d18)
 
@@ -320,27 +504,12 @@ object SilverIndex {
     * means rebuild (or version the path); a subject row is erased via
     * [[eraseEditIndex]] (the p6 path). */
   def refreshEditIndex(df: DataFrame, idCol: String, strCol: String,
-      maxDist: Int, path: String): Refresh = {
-    val spark = df.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach { ix =>
-      ix.select(col("d")).limit(1).collect().headOption.foreach { r =>
-        require(r.isNullAt(0) || r.getInt(0) == maxDist,
-          s"edit index at $path was built at maxDist ${r.get(0)}, " +
-            s"refresh requested $maxDist — rebuild, don't mix")
-      }
-    }
-    val newDocs = existing.fold(df)(ix => df.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(
-      graft.operators.Dedup
-        .editVariantKeys(newDocs, idCol, strCol, maxDist)
+      maxDist: Int, path: String): Refresh =
+    appendNew(df, idCol, path, probe = probeConfig(_, path,
+        "refresh requested", ("maxDist", col("d"), maxDist)))(
+      graft.operators.Dedup.editVariantKeys(_, idCol, strCol, maxDist)
         .select(col("id").as("doc"), col("str"), col("vk"),
-          lit(maxDist).as("d")),
-      path, Nil, before)
-  }
+          lit(maxDist).as("d")))
 
   /** The variant-key table as stored: (doc, str, vk, d). */
   def editIndex(spark: SparkSession, path: String): DataFrame =
@@ -355,40 +524,24 @@ object SilverIndex {
   def editPairsFromIndex(spark: SparkSession, path: String,
       maxDist: Int, maxVariantOcc: Long = Long.MaxValue): DataFrame = {
     val ix = editIndex(spark, path)
-    ix.select(col("d")).limit(1).collect().headOption.foreach { r =>
-      require(r.isNullAt(0) || r.getInt(0) == maxDist,
-        s"edit index at $path was built at maxDist ${r.get(0)}, " +
-          s"serve requested $maxDist")
-    }
+    probeConfig(ix, path, "serve requested", ("maxDist", col("d"), maxDist))
     graft.operators.Dedup.editPairsFromKeys(
       ix.select(col("doc").as("id"), col("str"), col("vk")),
       maxDist, maxVariantOcc)
   }
 
-  /** One micro-batch of [[streamingEditPairs]] — the [[nearDupBatch]]
-    * transaction-intent protocol verbatim over variant keys: intent
-    * (same crash windows, same stage-then-rename commit), variant
-    * append for the intent's new ids only, then exactly the pairs
-    * touching a new id ([[graft.operators.Dedup.editPairsDelta]],
-    * canonicalized) into a per-batch OVERWRITE partition so a replay
-    * re-emits identically instead of duplicating. */
+  /** One micro-batch of [[streamingEditPairs]] — [[pairDeltaBatch]]
+    * over variant keys: exactly the pairs touching a new id
+    * ([[graft.operators.Dedup.editPairsDelta]], canonicalized). */
   private[pipeline] def editPairsBatch(batch: DataFrame, batchId: Long,
       idCol: String, strCol: String, maxDist: Int, maxVariantOcc: Long,
-      sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshEditIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, strCol, maxDist, sigPath)
-    graft.operators.Dedup.editPairsDelta(
-        editIndex(spark, sigPath)
+      sigPath: String, pairsPath: String): Unit =
+    pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshEditIndex(_, idCol, strCol, maxDist, sigPath))(
+      graft.operators.Dedup.editPairsDelta(
+        editIndex(batch.sparkSession, sigPath)
           .select(col("doc").as("id"), col("str"), col("vk")),
-        newIds, maxDist, maxVariantOcc)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+        _, maxDist, maxVariantOcc))
 
   /** Continuous edit-pair maintenance: each micro-batch appends its
     * new ids' deletion variants and emits exactly the pairs involving
@@ -397,14 +550,8 @@ object SilverIndex {
       maxDist: Int, sigPath: String, pairsPath: String,
       maxVariantOcc: Long = Long.MaxValue)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        editPairsBatch(batch.toDF(), batchId, idCol, strCol, maxDist,
-          maxVariantOcc, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    onEachBatch(rows, sigPath)(editPairsBatch(_, _, idCol, strCol,
+      maxDist, maxVariantOcc, sigPath, pairsPath))
 
   // ---------------- persisted containment-pairs index (d20, r19)
 
@@ -428,43 +575,21 @@ object SilverIndex {
     * is erased via [[eraseContainmentIndex]] (the p6 path). */
   def refreshContainmentIndex(df: DataFrame, idCol: String,
       textCol: String, n: Int, path: String,
-      kind: String = "word"): Refresh = {
-    val spark = df.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach(ix => probeShingleBuild(ix, path, n, kind,
-      "refresh requested"))
-    val newDocs = existing.fold(df)(ix => df.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(
-      graft.operators.Dedup
-        .containmentDocRows(newDocs, idCol, textCol, n, kind)
+      kind: String = "word"): Refresh =
+    appendNew(df, idCol, path,
+        probe = probeShingleBuild(_, path, n, kind, "refresh requested"))(
+      graft.operators.Dedup.containmentDocRows(_, idCol, textCol, n, kind)
         .withColumn("n", lit(n))
-        .withColumn("kind", lit(kind)),
-      path, Nil, before)
-  }
+        .withColumn("kind", lit(kind)))
 
-  /** One-row probe that a stored shingle table was built at the
-    * requested (n, kind) — the d18 uniform-config discipline: the
-    * append-only refresh keeps the config columns uniform, so ONE row
-    * exposes a mismatch. A table written before the `kind` column
-    * existed reads as the word build it necessarily was. */
+  /** [[probeConfig]] of a stored shingle table's (n, kind). A table
+    * written before the `kind` column existed reads as the word build it
+    * necessarily was. */
   private def probeShingleBuild(ix: DataFrame, path: String, n: Int,
-      kind: String, verb: String): Unit = {
-    ix.select(col("n")).limit(1).collect().headOption.foreach { r =>
-      require(r.isNullAt(0) || r.getInt(0) == n,
-        s"shingle index at $path was built at n=${r.get(0)}, " +
-          s"$verb $n — rebuild, don't mix")
-    }
-    val storedKind =
-      if (!ix.columns.contains("kind")) Some("word")
-      else ix.select(col("kind")).limit(1).collect().headOption
-        .flatMap(r => Option(r.getString(0)))
-    storedKind.foreach(k => require(k == kind,
-      s"shingle index at $path was built over $k grams, " +
-        s"$verb $kind — rebuild, don't mix"))
-  }
+      kind: String, verb: String): Unit =
+    probeConfig(ix, path, verb, ("shingle width n", col("n"), n),
+      ("gram kind", if (ix.columns.contains("kind")) col("kind")
+        else lit("word"), kind))
 
   /** The stored per-doc shingle-hash table: (doc, sz, hashes, n, kind). */
   def containmentIndex(spark: SparkSession, path: String): DataFrame =
@@ -486,32 +611,20 @@ object SilverIndex {
       ix.select(col("doc"), col("sz"), col("hashes")), theta)
   }
 
-  /** One micro-batch of [[streamingContainmentPairs]] — the
-    * [[editPairsBatch]] transaction-intent protocol verbatim over
-    * shingle-hash rows: intent (same crash windows, same stage-then-
-    * rename commit), row append for the intent's new docs only, then
-    * exactly the pairs touching a new doc ([[graft.operators.Dedup
-    * .containmentPairsDelta]] — rarity ranked as-of-batch, choice-
-    * independent, so the union of deltas ≡ the full serve with NO
-    * valve caveat) into a per-batch OVERWRITE partition so a replay
-    * re-emits identically instead of duplicating. */
+  /** One micro-batch of [[streamingContainmentPairs]] —
+    * [[pairDeltaBatch]] over shingle-hash rows: exactly the pairs
+    * touching a new doc ([[graft.operators.Dedup.containmentPairsDelta]]
+    * — rarity ranked as-of-batch, choice-independent, so the union of
+    * deltas ≡ the full serve with NO valve caveat). */
   private[pipeline] def containmentPairsBatch(batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, n: Int,
-      theta: Double, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshContainmentIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, textCol, n, sigPath)
-    graft.operators.Dedup.containmentPairsDelta(
-        containmentIndex(spark, sigPath)
+      theta: Double, sigPath: String, pairsPath: String): Unit =
+    pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshContainmentIndex(_, idCol, textCol, n, sigPath))(
+      graft.operators.Dedup.containmentPairsDelta(
+        containmentIndex(batch.sparkSession, sigPath)
           .select(col("doc"), col("sz"), col("hashes")),
-        newIds, theta)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+        _, theta))
 
   /** Continuous containment-pair maintenance: each micro-batch appends
     * its new docs' shingle-hash rows and emits exactly the pairs
@@ -520,14 +633,8 @@ object SilverIndex {
   def streamingContainmentPairs(rows: DataFrame, idCol: String,
       textCol: String, n: Int, theta: Double, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        containmentPairsBatch(batch.toDF(), batchId, idCol, textCol, n,
-          theta, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    onEachBatch(rows, sigPath)(containmentPairsBatch(_, _, idCol, textCol,
+      n, theta, sigPath, pairsPath))
 
   /** Symmetric exact-Jaccard pairs served from the SAME persisted
     * shingle-hash artifact [[refreshContainmentIndex]] maintains — the
@@ -552,30 +659,20 @@ object SilverIndex {
       ix.select(col("doc"), col("sz"), col("hashes")), theta)
   }
 
-  /** One micro-batch of [[streamingJaccardPairs]] — the
-    * [[containmentPairsBatch]] transaction-intent protocol verbatim,
-    * emitting the SYMMETRIC criterion's delta ([[graft.operators.Dedup
-    * .jaccardPairsDelta]] — prefix order as-of-batch, union of deltas
-    * ≡ the full serve, each pair exactly once) into a per-batch
-    * OVERWRITE partition so a replay re-emits identically instead of
-    * duplicating. */
+  /** One micro-batch of [[streamingJaccardPairs]] — [[pairDeltaBatch]]
+    * over the shared shingle-hash rows, emitting the SYMMETRIC
+    * criterion's delta ([[graft.operators.Dedup.jaccardPairsDelta]] —
+    * prefix order as-of-batch, union of deltas ≡ the full serve, each
+    * pair exactly once). */
   private[pipeline] def jaccardPairsBatch(batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, n: Int,
-      theta: Double, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshContainmentIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, textCol, n, sigPath)
-    graft.operators.Dedup.jaccardPairsDelta(
-        containmentIndex(spark, sigPath)
+      theta: Double, sigPath: String, pairsPath: String): Unit =
+    pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshContainmentIndex(_, idCol, textCol, n, sigPath))(
+      graft.operators.Dedup.jaccardPairsDelta(
+        containmentIndex(batch.sparkSession, sigPath)
           .select(col("doc"), col("sz"), col("hashes")),
-        newIds, theta)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+        _, theta))
 
   /** Continuous symmetric-Jaccard pair maintenance over the shared
     * shingle-hash artifact: each micro-batch appends its new docs'
@@ -584,14 +681,8 @@ object SilverIndex {
   def streamingJaccardPairs(rows: DataFrame, idCol: String,
       textCol: String, n: Int, theta: Double, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        jaccardPairsBatch(batch.toDF(), batchId, idCol, textCol, n,
-          theta, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    onEachBatch(rows, sigPath)(jaccardPairsBatch(_, _, idCol, textCol, n,
+      theta, sigPath, pairsPath))
 
   // ---------------- persisted simhash signature index (d25, r19)
 
@@ -609,26 +700,11 @@ object SilverIndex {
     * nothing distance-shaped is stored, so one index answers any
     * audit radius. Erasure: [[eraseSimhashIndex]] (p6). */
   def refreshSimhashIndex(df: DataFrame, idCol: String,
-      textCol: String, shingleN: Int, path: String): Refresh = {
-    val spark = df.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach { ix =>
-      ix.select(col("n")).limit(1).collect().headOption.foreach { r =>
-        require(r.isNullAt(0) || r.getInt(0) == shingleN,
-          s"simhash index at $path was built at n=${r.get(0)}, " +
-            s"refresh requested $shingleN — rebuild, don't mix")
-      }
-    }
-    val newDocs = existing.fold(df)(ix => df.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol),
-      "left_anti"))
-    val before = existingRows(spark, path, existing)
-    appendCounted(
-      graft.operators.Dedup.simhashDocs(newDocs, idCol, textCol,
-          shingleN)
-        .withColumn("n", lit(shingleN)),
-      path, Nil, before)
-  }
+      textCol: String, shingleN: Int, path: String): Refresh =
+    appendNew(df, idCol, path, probe = probeConfig(_, path,
+        "refresh requested", ("shingle width n", col("n"), shingleN)))(
+      graft.operators.Dedup.simhashDocs(_, idCol, textCol, shingleN)
+        .withColumn("n", lit(shingleN)))
 
   /** The stored signature table: (doc, simhash, n). */
   def simhashIndex(spark: SparkSession, path: String): DataFrame =
@@ -646,39 +722,26 @@ object SilverIndex {
   def simhashPairsFromIndex(spark: SparkSession, path: String,
       shingleN: Int, maxDist: Int): DataFrame = {
     val ix = simhashIndex(spark, path)
-    ix.select(col("n")).limit(1).collect().headOption.foreach { r =>
-      require(r.isNullAt(0) || r.getInt(0) == shingleN,
-        s"simhash index at $path was built at n=${r.get(0)}, " +
-          s"serve requested $shingleN")
-    }
+    probeConfig(ix, path, "serve requested",
+      ("shingle width n", col("n"), shingleN))
     graft.operators.Dedup.hammingPairs(
       ix.select(col("doc"), col("simhash")), maxDist)
   }
 
-  /** One micro-batch of [[streamingSimhashPairs]] — the
-    * [[containmentPairsBatch]] transaction-intent protocol verbatim
-    * over signature rows, emitting exactly the Hamming pairs touching
-    * this batch's new docs ([[graft.operators.Dedup
-    * .hammingPairsDelta]] — chunk buckets are corpus-state-free, so
-    * the union of deltas ≡ the full serve, each pair exactly once)
-    * into a per-batch OVERWRITE partition so a replay re-emits
-    * identically. */
+  /** One micro-batch of [[streamingSimhashPairs]] — [[pairDeltaBatch]]
+    * over signature rows: exactly the Hamming pairs touching this
+    * batch's new docs ([[graft.operators.Dedup.hammingPairsDelta]] —
+    * chunk buckets are corpus-state-free, so the union of deltas ≡ the
+    * full serve, each pair exactly once). */
   private[pipeline] def simhashPairsBatch(batch: DataFrame,
       batchId: Long, idCol: String, textCol: String, shingleN: Int,
-      maxDist: Int, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col(idCol).as("doc")).distinct())
-    refreshSimhashIndex(
-      batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-        "left_semi"),
-      idCol, textCol, shingleN, sigPath)
-    graft.operators.Dedup.hammingPairsDelta(
-        simhashIndex(spark, sigPath).select(col("doc"), col("simhash")),
-        newIds, maxDist)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+      maxDist: Int, sigPath: String, pairsPath: String): Unit =
+    pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshSimhashIndex(_, idCol, textCol, shingleN, sigPath))(
+      graft.operators.Dedup.hammingPairsDelta(
+        simhashIndex(batch.sparkSession, sigPath)
+          .select(col("doc"), col("simhash")),
+        _, maxDist))
 
   /** Continuous simhash-pair maintenance: each micro-batch appends its
     * new docs' signatures and emits exactly the Hamming pairs
@@ -687,14 +750,8 @@ object SilverIndex {
   def streamingSimhashPairs(rows: DataFrame, idCol: String,
       textCol: String, shingleN: Int, maxDist: Int, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        simhashPairsBatch(batch.toDF(), batchId, idCol, textCol,
-          shingleN, maxDist, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    onEachBatch(rows, sigPath)(simhashPairsBatch(_, _, idCol, textCol,
+      shingleN, maxDist, sigPath, pairsPath))
 
   /** p6 staged-swap erasure for the simhash signature table. */
   def eraseSimhashIndex(spark: SparkSession, path: String,
@@ -743,43 +800,27 @@ object SilverIndex {
     * [[eraseSemanticLsh]]. */
   def refreshSemanticLsh(train: DataFrame, dim: Int, bits: Int,
       tables: Int, path: String): Refresh = {
-    val spark = train.sparkSession
-    val existing = readIfData(spark, path)
-    existing.foreach { ix =>
-      ix.select(col("bits"), col("tables"), col("dim")).limit(1)
-        .collect().headOption.foreach { r =>
-          require(r.getInt(0) == bits && r.getInt(1) == tables &&
-            r.getInt(2) == dim,
-            s"semantic index at $path was built at (bits=${r.getInt(0)}, " +
-              s"tables=${r.getInt(1)}, dim=${r.getInt(2)}), refresh " +
-              s"requested ($bits, $tables, $dim) — rebuild, don't mix")
-        }
+    val fs = hadoopFs(train.sparkSession, path)
+    val r = appendNew(train, "doc", path, probe = probeConfig(_, path,
+        "refresh requested", ("bits", col("bits"), bits),
+        ("tables", col("tables"), tables), ("dim", col("dim"), dim))) {
+      newTriples =>
+        // feeds both table writes — batch-sized by the anti-join
+        val vecs = graft.operators.Dedup
+          .sparseDocVectors(newTriples, dim, "refreshSemanticLsh")
+          .localCheckpoint(true)
+        // intent marker: single-file create is the atomic commit point (a
+        // leading underscore keeps it invisible to hasDataFiles/dataStats)
+        fs.create(semIntentPath(path), true).close()
+        appendNew(vecs, "doc", semVecsPath(path))(identity)
+        // the signature rows the outer append writes
+        vecs.withColumn("__bk", explode(
+            graft.operators.AnnSearch.sparseTableSigs(
+              col("buckets"), col("weights"), bits, tables)))
+          .select(col("doc"), col("__bk.tbl").as("tbl"),
+            col("__bk.sig").as("sig"), lit(bits).as("bits"),
+            lit(tables).as("tables"), lit(dim).as("dim"))
     }
-    val newTriples = existing.fold(train)(ix =>
-      train.join(ix.select(col("doc")).distinct(), Seq("doc"), "left_anti"))
-    // feeds both table writes — batch-sized by the anti-join
-    val vecs = graft.operators.Dedup
-      .sparseDocVectors(newTriples, dim, "refreshSemanticLsh")
-      .localCheckpoint(true)
-    // intent marker: single-file create is the atomic commit point (a
-    // leading underscore keeps it invisible to hasDataFiles/dataStats)
-    val fs = new Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.create(semIntentPath(path), true).close()
-    val vdir = semVecsPath(path)
-    val existingV = readIfData(spark, vdir)
-    val newVecs = existingV.fold(vecs)(vx =>
-      vecs.join(vx.select(col("doc")).distinct(), Seq("doc"), "left_anti"))
-    appendCounted(newVecs, vdir, Nil,
-      existingRows(spark, vdir, existingV))
-    val sigs = vecs.withColumn("__bk", explode(
-        graft.operators.AnnSearch.sparseTableSigs(
-          col("buckets"), col("weights"), bits, tables)))
-      .select(col("doc"), col("__bk.tbl").as("tbl"),
-        col("__bk.sig").as("sig"), lit(bits).as("bits"),
-        lit(tables).as("tables"), lit(dim).as("dim"))
-    val r = appendCounted(sigs, path, Nil,
-      existingRows(spark, path, existing))
     fs.delete(semIntentPath(path), false)
     r
   }
@@ -795,10 +836,8 @@ object SilverIndex {
     * an operator (and the crash-window spec) can OBSERVE the window
     * rather than infer it from row-count forensics. */
   def semanticLshRefreshPending(spark: SparkSession,
-      path: String): Boolean = {
-    val p = semIntentPath(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+      path: String): Boolean =
+    hadoopFs(spark, path).exists(semIntentPath(path))
 
   /** The signature table as stored: (doc, tbl, sig, bits, tables, dim). */
   def semanticLshIndex(spark: SparkSession, path: String): DataFrame =
@@ -867,34 +906,25 @@ object SilverIndex {
       .where(col("cosine") >= theta)
   }
 
-  /** One micro-batch of [[streamingSemanticPairs]] — the
-    * transaction-intent protocol verbatim over hyperplane signatures
-    * (the [[editPairsBatch]] shape): intent (same crash windows, same
-    * stage-then-rename commit), signature+vector append for the
-    * intent's new docs only, then exactly the pairs whose TRAIN doc is
-    * new (the eval side is a frozen benchmark frame, so train-only
-    * growth makes the union of deltas ≡ the full serve EXACTLY —
-    * signatures are per-doc deterministic under the frozen fit, and a
-    * pair exists iff its train doc collides, which is decided the
-    * batch that doc arrives) into a per-batch OVERWRITE partition so
-    * a replay re-emits identically. */
+  /** One micro-batch of [[streamingSemanticPairs]] — [[pairDeltaBatch]]
+    * over hyperplane signatures + vectors: exactly the pairs whose
+    * TRAIN doc is new (the eval side is a frozen benchmark frame, so
+    * train-only growth makes the union of deltas ≡ the full serve
+    * EXACTLY — signatures are per-doc deterministic under the frozen
+    * fit, and a pair exists iff its train doc collides, which is
+    * decided the batch that doc arrives). */
   private[pipeline] def semanticPairsBatch(batch: DataFrame,
       batchId: Long, evalTriples: DataFrame, theta: Double, dim: Int,
-      bits: Int, tables: Int, sigPath: String, pairsPath: String): Unit = {
-    val spark = batch.sparkSession
-    val newIds = intentNewIds(spark, sigPath, batchId,
-      batch.select(col("doc")).distinct())
-    refreshSemanticLsh(
-      batch.join(newIds, Seq("doc"), "left_semi"),
-      dim, bits, tables, sigPath)
-    val sigs = semanticLshIndex(spark, sigPath)
-      .join(newIds, Seq("doc"), "left_semi")
-    val vecs = spark.read.parquet(semVecsPath(sigPath))
-      .join(newIds, Seq("doc"), "left_semi")
-    semanticPairsOver(sigs, vecs, evalTriples, theta, dim, bits, tables)
-      .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-    ()
-  }
+      bits: Int, tables: Int, sigPath: String, pairsPath: String): Unit =
+    pairDeltaBatch(batch, batchId, "doc", sigPath, pairsPath)(
+      refreshSemanticLsh(_, dim, bits, tables, sigPath)) { newIds =>
+      val spark = batch.sparkSession
+      semanticPairsOver(
+        semanticLshIndex(spark, sigPath).join(newIds, Seq("doc"), "left_semi"),
+        spark.read.parquet(semVecsPath(sigPath))
+          .join(newIds, Seq("doc"), "left_semi"),
+        evalTriples, theta, dim, bits, tables)
+    }
 
   /** Continuous banded semantic-decontam maintenance: each micro-batch
     * of train-side TF-IDF triples (under the frozen fit) appends its
@@ -920,14 +950,8 @@ object SilverIndex {
   def streamingSemanticPairs(rows: DataFrame, evalTriples: DataFrame,
       theta: Double, dim: Int, bits: Int, tables: Int, sigPath: String,
       pairsPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        semanticPairsBatch(batch.toDF(), batchId, evalTriples, theta,
-          dim, bits, tables, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    onEachBatch(rows, sigPath)(semanticPairsBatch(_, _, evalTriples, theta,
+      dim, bits, tables, sigPath, pairsPath))
 
   /** Erasure for the banded semantic index (the p6 path): the
     * subject's signature AND vector rows drop, so
@@ -956,46 +980,40 @@ object SilverIndex {
   def refreshPostings(docs: DataFrame, idCol: String, textCol: String,
       path: String): Refresh = {
     val spark = docs.sparkSession
-    val existing = readIfData(spark, path)
-    val newDocs = existing.fold(docs)(ix => docs.join(
-      ix.select(col("doc").as(idCol)).distinct(), Seq(idCol), "left_anti"))
-    val before = existingRows(spark, path, existing)
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = hadoopFs(spark, path)
     // was the doclen companion in sync BEFORE this append? (valid meta =
     // fast incremental path; anything else → one idempotent rebuild)
     val auxBefore = readBm25Meta(fs, path)
-    // one tokenize/explode pass feeds both the doc-length companion
-    // append and the postings append. ORDER MATTERS: `newPost` anti-joins
-    // against the postings dir's listing, so every action that evaluates
-    // it must run BEFORE the postings append mutates that dir — a cached
-    // frame is a best-effort optimization, not a correctness guarantee
-    // (evict + re-list after the append would silently empty the delta).
-    // The doclen append therefore goes FIRST; a crash between the two
-    // leaves the companion ahead of the postings, which the next
-    // [[readBm25Meta]] fingerprint check detects (meta not yet written →
-    // stale) and [[ensureBm25Aux]] rebuilds wholesale.
-    val newPost = graft.ManagedCache.swap("SilverIndex.refreshPostings",
-      TextSearch.postings(newDocs, idCol, textCol))
-    val r = auxBefore match {
-      case Some(st) =>
-        val obs = org.apache.spark.sql.Observation()
+    val lens = org.apache.spark.sql.Observation()
+    // term-sorted within each file: a driver-known query's pushed
+    // In(term, …) predicate then skips row groups by min/max stats
+    val r = appendNew(docs, idCol, path,
+        shape = _.sortWithinPartitions(col("term"))) { newDocs =>
+      // one tokenize/explode pass feeds both the doc-length companion
+      // append and the postings append. ORDER MATTERS: `newPost`
+      // anti-joins against the postings dir's listing, so every action
+      // that evaluates it must run BEFORE the postings append mutates that
+      // dir — a cached frame is a best-effort optimization, not a
+      // correctness guarantee (evict + re-list after the append would
+      // silently empty the delta). The doclen append therefore goes
+      // FIRST, here; a crash between the two leaves the companion ahead
+      // of the postings, which the next [[readBm25Meta]] fingerprint
+      // check detects (meta not yet written → stale) and
+      // [[ensureBm25Aux]] rebuilds wholesale.
+      val newPost = graft.ManagedCache.swap("SilverIndex.refreshPostings",
+        TextSearch.postings(newDocs, idCol, textCol))
+      if (auxBefore.isDefined)
         newPost.groupBy("doc").agg(sum(col("tf")).as("len"))
-          .observe(obs, count(lit(1)).as("n"),
+          .observe(lens, count(lit(1)).as("n"),
             coalesce(sum(col("len")), lit(0L)).as("s"))
           .write.mode("append").parquet(doclenPath(path))
-        // term-sorted within each file: a driver-known query's pushed
-        // In(term, …) predicate then skips row groups by min/max stats
-        val r0 = appendCounted(newPost, path, Nil, before,
-          shape = _.sortWithinPartitions(col("term")))
-        writeBm25Meta(fs, path, Bm25Stats(
-          st.docs + obs.get("n").asInstanceOf[Long],
-          st.totalLen + obs.get("s").asInstanceOf[Long]))
-        r0
-      case None =>
-        val r0 = appendCounted(newPost, path, Nil, before,
-          shape = _.sortWithinPartitions(col("term")))
-        ensureBm25Aux(spark, path)
-        r0
+      newPost
+    }
+    auxBefore match {
+      case Some(st) => writeBm25Meta(fs, path, Bm25Stats(
+        st.docs + lens.get("n").asInstanceOf[Long],
+        st.totalLen + lens.get("s").asInstanceOf[Long]))
+      case None => ensureBm25Aux(spark, path)
     }
     graft.ManagedCache.release("SilverIndex.refreshPostings")
     r
@@ -1023,27 +1041,16 @@ object SilverIndex {
     * the sidecar write AND postings unchanged since the doclen sync) —
     * a crash between the postings append and the doclen append, a
     * legacy index, or out-of-band writes all invalidate it. */
-  private def readBm25Meta(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[Bm25Stats] = {
-    val f = bm25MetaFile(path)
-    if (!fs.exists(f)) return None
-    try {
-      val in = fs.open(f)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val kv = txt.stripPrefix("{").stripSuffix("}").split(",").map { p =>
-        val Array(k, v) = p.split(":", 2)
-        k.trim.stripPrefix("\"").stripSuffix("\"") ->
-          v.trim.stripPrefix("\"").stripSuffix("\"")
-      }.toMap
+  private def readBm25Meta(fs: FileSystem,
+      path: String): Option[Bm25Stats] =
+    readSidecar(fs, bm25MetaFile(path)) { kv =>
       if (kv("doclen_fp") == fingerprint(fs, doclenPath(path)) &&
           kv("post_fp") == fingerprint(fs, path))
         Some(Bm25Stats(kv("docs").toLong, kv("total_len").toLong))
       else None
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
+    }
 
-  private def writeBm25Meta(fs: org.apache.hadoop.fs.FileSystem,
+  private def writeBm25Meta(fs: FileSystem,
       path: String, st: Bm25Stats): Unit = {
     val dlFp = fingerprint(fs, doclenPath(path))
     val pFp = fingerprint(fs, path)
@@ -1058,7 +1065,7 @@ object SilverIndex {
     * recovery path covers legacy indexes, crashes between the two
     * appends, and out-of-band writes. */
   private def ensureBm25Aux(spark: SparkSession, path: String): Bm25Stats = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = hadoopFs(spark, path)
     readBm25Meta(fs, path).getOrElse {
       spark.read.parquet(path)
         .groupBy("doc").agg(sum(col("tf")).as("len"))
@@ -1128,13 +1135,6 @@ object SilverIndex {
   private def centPath(path: String) = s"$path/centroids"
   private def asgPath(path: String) = s"$path/assigned"
 
-  /** Per-path cache of the FROZEN quantizer rows, keyed by the centroid
-    * dir's data-file fingerprint: the quantizer freezes at first build
-    * (the IVF append discipline), yet every delta refresh and every
-    * probe re-read + re-collected its ≤ nlist rows from parquet — two
-    * extra jobs per a6-shaped run. The fingerprint (files:bytes) makes a
-    * re-trained index (dir deleted + rebuilt) a cache miss, never a
-    * stale hit. Values are driver Rows (KBs at any realistic nlist·dim). */
   /** Access-ordered LRU for the driver-side frozen-quantizer caches
     * (ADVICE-class, VERDICT r17 "what's wrong" #2): entries are small
     * (nlist / m·ksub rows) but were never evicted, so a long-lived
@@ -1165,14 +1165,20 @@ object SilverIndex {
     }
   }
 
+  /** Per-path cache of the FROZEN quantizer rows, keyed by the centroid
+    * dir's data-file fingerprint: the quantizer freezes at first build
+    * (the IVF append discipline), yet every delta refresh and every
+    * probe re-read + re-collected its ≤ nlist rows from parquet — two
+    * extra jobs per a6-shaped run. The fingerprint (files:bytes) makes a
+    * re-trained index (dir deleted + rebuilt) a cache miss, never a
+    * stale hit. Values are driver Rows (KBs at any realistic nlist·dim). */
   private val centCache = new DriverLru[
     (String, Array[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType)]
 
   private def loadCents(spark: SparkSession, path: String): DataFrame = {
     val dir = centPath(path)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fingerprint(fs, dir)
+    val fp = fingerprint(hadoopFs(spark, dir), dir)
     val hit = centCache.get(dir)
     val (rows, schema) = hit match {
       case Some((hfp, r, sch)) if hfp == fp => (r, sch)
@@ -1190,8 +1196,25 @@ object SilverIndex {
   private def cacheCents(spark: SparkSession, path: String,
       built: DataFrame): Unit = {
     val dir = centPath(path)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    centCache.put(dir, (fingerprint(fs, dir), built.collect(), built.schema))
+    centCache.put(dir,
+      (fingerprint(hadoopFs(spark, dir), dir), built.collect(), built.schema))
+  }
+
+  /** The frozen coarse quantizer at `path`: loaded (cached) once built,
+    * else trained on `c` and persisted. A centroids dir without data
+    * files means the quantizer was "built" on an empty corpus (e.g. a
+    * quiet first streaming micro-batch) — train it for real on the
+    * first non-empty one. */
+  private def frozenCents(c: DataFrame, nlist: Int,
+      path: String): DataFrame = {
+    val spark = c.sparkSession
+    if (hasDataFiles(spark, centPath(path))) loadCents(spark, path)
+    else {
+      val built = AnnSearch.ivfCentroids(c, nlist)
+      built.write.mode("overwrite").parquet(centPath(path))
+      cacheCents(spark, path, built)
+      built
+    }
   }
 
   /** Bring the IVF index at `path` up to date with `corpus`. First call
@@ -1202,32 +1225,21 @@ object SilverIndex {
     * prune to nprobe/nlist of the files. */
   def refreshIvf(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, path: String): Refresh = {
-    val spark = corpus.sparkSession
     val c = AnnSearch.ivfCorpus(corpus, idCol, vecCol)
-    // a centroids dir without data files means the quantizer was "built"
-    // on an empty corpus (e.g. a quiet first streaming micro-batch) —
-    // train it for real on the first non-empty one
-    val cents =
-      if (hasDataFiles(spark, centPath(path))) loadCents(spark, path)
-      else {
-        val built = AnnSearch.ivfCentroids(c, nlist)
-        built.write.mode("overwrite").parquet(centPath(path))
-        cacheCents(spark, path, built)
-        built
-      }
-    val existing = readIfData(spark, asgPath(path))
-    val newC = existing.fold(c)(ix =>
-      c.join(ix.select(col("neighbor_id")), Seq("neighbor_id"), "left_anti"))
-    val before = existingRows(spark, asgPath(path), existing)
-    // co-locate each list's rows before the partitioned write: without
-    // it every input task emits a file into every list dir (tasks ×
-    // nlist tiny files), which the anti-join listing and every probe
-    // read then pay for. One narrow shuffle of (id, cv, list_id) rows
-    // buys one file per (task, list) with AQE coalescing — at cluster
-    // scale, add more write tasks, not more files per list.
-    appendCounted(AnnSearch.ivfAssign(newC, cents), asgPath(path),
-      Seq("list_id"), before, shape = _.repartition(col("list_id")))
+    val cents = frozenCents(c, nlist, path)
+    appendNew(c, "neighbor_id", asgPath(path), storedKey = "neighbor_id",
+        partitionCols = Seq("list_id"), shape = listColocated)(
+      AnnSearch.ivfAssign(_, cents))
   }
+
+  /** Co-locate each list's rows before a `list_id`-partitioned write:
+    * without it every input task emits a file into every list dir
+    * (tasks × nlist tiny files), which the anti-join listing and every
+    * probe read then pay for. One narrow shuffle of (id, cv, list_id)
+    * rows buys one file per (task, list) with AQE coalescing — at
+    * cluster scale, add more write tasks, not more files per list. */
+  private def listColocated(df: DataFrame): DataFrame =
+    df.repartition(col("list_id"))
 
   /** The persisted assignment, shaped for
     * [[AnnSearch.ivfTopKFromAssigned]]: (neighbor_id, cv, list_id) with
@@ -1312,16 +1324,9 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val c = AnnSearch.ivfCorpus(corpus, idCol, vecCol)
     val sub = AnnSearch.pqSubDim(c, m)
-    val cents =
-      if (hasDataFiles(spark, centPath(path))) loadCents(spark, path)
-      else {
-        val built = AnnSearch.ivfCentroids(c, nlist)
-        built.write.mode("overwrite").parquet(centPath(path))
-        cacheCents(spark, path, built)
-        built
-      }
+    val cents = frozenCents(c, nlist, path)
     val books =
-      if (readIfData(spark, bookPath(path)).isDefined)
+      if (hasDataFiles(spark, bookPath(path)))
         loadCodebooks(spark, path, m, sub)
       else {
         // codebooks train on what they will encode: the residuals
@@ -1337,21 +1342,18 @@ object SilverIndex {
           .write.mode("overwrite").parquet(bookPath(path))
         frames.map(AnnSearch.centMatrix)
       }
-    val existing = readIfData(spark, codesPath(path))
-    val newC = existing.fold(c)(ix =>
-      c.join(ix.select(col("neighbor_id")), Seq("neighbor_id"), "left_anti"))
-    val before = existingRows(spark, codesPath(path), existing)
-    val coded = AnnSearch.ivfAssign(newC, cents)
-      .join(broadcast(cents), "list_id")
-      .withColumn("codes", AnnSearch.pqEncode(
-        graft.functions.VectorFunctions.sub(col("cv"), col("centv")),
-        books, sub))
-      .select(col("neighbor_id"), col("codes"),
-        AnnSearch.pqReconNorm2(col("centv"), col("codes"), books, sub)
-          .as("rnorm2"),
-        col("list_id"))
-    appendCounted(coded, codesPath(path), Seq("list_id"), before,
-      shape = _.repartition(col("list_id"))) // one file per (task, list) — see refreshIvf
+    appendNew(c, "neighbor_id", codesPath(path), storedKey = "neighbor_id",
+        partitionCols = Seq("list_id"), shape = listColocated) { newC =>
+      AnnSearch.ivfAssign(newC, cents)
+        .join(broadcast(cents), "list_id")
+        .withColumn("codes", AnnSearch.pqEncode(
+          graft.functions.VectorFunctions.sub(col("cv"), col("centv")),
+          books, sub))
+        .select(col("neighbor_id"), col("codes"),
+          AnnSearch.pqReconNorm2(col("centv"), col("codes"), books, sub)
+            .as("rnorm2"),
+          col("list_id"))
+    }
   }
 
   /** Per-path cache of the FROZEN codebook rows (the centCache pattern):
@@ -1362,13 +1364,6 @@ object SilverIndex {
     (String, Array[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.DataType)]
 
-  /** The frozen per-subspace codebooks reloaded as the kernel matrices:
-    * filtering each subspace and re-running [[AnnSearch.centMatrix]]
-    * reproduces the code → matrix-row mapping exactly (list_id-ascending
-    * ordering, same driver-side widening — here via the sorted-rows
-    * entry point on the cached driver rows). Widths are validated
-    * against the refresh parameters so a mismatched re-run fails
-    * loudly. */
   /** The fingerprint-validated book rows (shared by [[loadCodebooks]]
     * and the [[bookShape]] stat derivation — one collect per (JVM,
     * frozen-books fingerprint), after which every from-index query is
@@ -1377,8 +1372,7 @@ object SilverIndex {
       : (Array[org.apache.spark.sql.Row],
          org.apache.spark.sql.types.DataType) = {
     val dir = bookPath(path)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val fp = fingerprint(fs, dir)
+    val fp = fingerprint(hadoopFs(spark, dir), dir)
     bookCache.get(dir) match {
       case Some((hfp, r, t)) if hfp == fp => (r, t)
       case _ =>
@@ -1409,6 +1403,13 @@ object SilverIndex {
     (m, sub)
   }
 
+  /** The frozen per-subspace codebooks reloaded as the kernel matrices:
+    * filtering each subspace and re-running [[AnnSearch.centMatrix]]
+    * reproduces the code → matrix-row mapping exactly (list_id-ascending
+    * ordering, same driver-side widening — here via the sorted-rows
+    * entry point on the cached driver rows). Widths are validated
+    * against the refresh parameters so a mismatched re-run fails
+    * loudly. */
   private def loadCodebooks(spark: SparkSession, path: String, m: Int,
       sub: Int): IndexedSeq[AnnSearch.CentMatrix] = {
     val (rows, idType) = loadBookRows(spark, path)
@@ -1501,20 +1502,14 @@ object SilverIndex {
   def streamingRefresh(docs: DataFrame, path: String)(
       refresh: DataFrame => Refresh)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], _: Long) =>
-        refresh(batch); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    onEachBatch(docs, path)((batch, _) => refresh(batch))
 
   /** Visible (non-hidden) plain FILES directly under `dir` — the
     * pre-versioned flat sketch layout's data files; version subdirs
     * don't match (they are directories). */
-  private def flatDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Seq[org.apache.hadoop.fs.Path] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+  private def flatDataFiles(fs: FileSystem,
+      dir: String): Seq[Path] = {
+    val p = new Path(dir)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.filter { st =>
       val n = st.getPath.getName
@@ -1540,23 +1535,15 @@ object SilverIndex {
     * sketch is eagerly materialized (localCheckpoint) BEFORE the
     * commit, since the lazy plan reads the table being replaced.
     *
-    * The commit uses the [[refreshCms]] stage-then-rename discipline
-    * (versioned `v<n>` dirs under `path`/sketch, one atomic rename per
-    * fold, superseded versions retired AFTER the rename): an in-place
-    * overwrite would delete the directory before the job commits, so a
-    * crash mid-write would lose the ONLY copy of the accumulated
-    * k-minima (raw keys are never stored) and every later estimate
-    * would be silently low. Unlike CMS the version number carries no
-    * transaction meaning — the fold is duplicate-insensitive, so a
-    * replay folding into an already-folded sketch is a no-op by
-    * construction — it only orders the copies so readers take max. */
+    * Commits as a SEQUENCE [[commitVersion]] under `path`/sketch: an
+    * in-place overwrite would lose the ONLY copy of the accumulated
+    * k-minima on a crash mid-write, and every later estimate would be
+    * silently low. */
   def refreshKmv(batch: DataFrame, groupCol: String, keyCol: String,
       k: Int, path: String): Refresh = {
     val spark = batch.sparkSession
     val root = s"$path/sketch"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, root)
+    val fs = hadoopFs(spark, root)
     // one-time migration from the pre-versioned layout (parquet files
     // directly under root): fold it in as the stored side WHEN no
     // version exists yet — silently ignoring it would restart the
@@ -1571,37 +1558,21 @@ object SilverIndex {
       .select(col(groupCol).as("grp"),
         graft.operators.Sketches.kmvHash(col(keyCol)).as("hk"))
       .distinct()
-    val stored =
-      if (committed.nonEmpty)
-        Some(spark.read.parquet(s"$root/v${committed.max}"))
-      else if (flat.nonEmpty) Some(spark.read.parquet(root))
-      else None
-    val all = stored
-      .map(_.select(col("grp"), explode(col("kmins")).as("hk")))
-      .fold(batchHashes)(batchHashes.unionByName(_).distinct())
-    val agg = udaf(new graft.operators.Sketches.KmvAgg(k))
-    val next = graft.operators.Sketches.stampShape(
-      all.groupBy("grp").agg(agg(col("hk")).as("kmins")),
-      "kmins", graft.operators.Sketches.KmvKKey -> k.toLong)
-      .localCheckpoint(true)
-    val groups = next.count()
-    // empty fold (first batch with no usable rows): committing an
-    // empty v0 would leave a version dir spark.read can't infer a
-    // schema from, wedging every later fold — skip, state is unchanged
-    if (groups == 0) return Refresh(0, 0)
-    val nv = if (committed.isEmpty) 0L else committed.max + 1
-    val tmp = s"$root/_tmp_v$nv"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw — proceeding to
-    // the retirement below on a failed rename would delete the only
-    // durable copies of the accumulated k-minima
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$root/v$nv")),
-      s"KMV commit rename failed: $tmp -> $root/v$nv (old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true))
-    flat.foreach(f => fs.delete(f, false))
-    Refresh(groups, groups)
+    val r = commitVersion(spark, root, "KMV") { last =>
+      val stored = last.map(v => s"$root/v$v")
+        .orElse(if (flat.nonEmpty) Some(root) else None)
+      val all = stored
+        .map(spark.read.parquet(_)
+          .select(col("grp"), explode(col("kmins")).as("hk")))
+        .fold(batchHashes)(batchHashes.unionByName(_).distinct())
+      val agg = udaf(new graft.operators.Sketches.KmvAgg(k))
+      stagedNonEmpty(graft.operators.Sketches.stampShape(
+        all.groupBy("grp").agg(agg(col("hk")).as("kmins")),
+        "kmins", graft.operators.Sketches.KmvKKey -> k.toLong)
+        .localCheckpoint(true))
+    }
+    if (r.total > 0) flat.foreach(f => fs.delete(f, false))
+    r
   }
 
   /** Bloom BIT-SET maintenance: fold a batch of keys into the stored
@@ -1612,40 +1583,25 @@ object SilverIndex {
     * replayed at-least-once micro-batch folds to the identical bit set
     * and the final table equals the from-scratch batch build
     * regardless of arrival order or chunking (the s10 gate contract).
-    * Commits by the same stage-then-rename versioned protocol as the
-    * KMV sketch (crash-window rationale there); each fold shuffles
-    * O(bits-set + batch-distinct-positions) narrow long rows, never
-    * the historical key bag. */
+    * Commits as a SEQUENCE [[commitVersion]] under `path`/bloom; each
+    * fold shuffles O(bits-set + batch-distinct-positions) narrow long
+    * rows, never the historical key bag. */
   def refreshBloom(batch: DataFrame, keyCol: String, numHashes: Int,
       mBits: Int, path: String): Refresh = {
     val spark = batch.sparkSession
     val root = s"$path/bloom"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, root)
-    val batchBits = graft.operators.Sketches
-      .bloomBuild(batch, keyCol, numHashes, mBits)
-    // re-stamp: the union/distinct against the stored side does not
-    // reliably keep the builder's shape metadata
-    val next = graft.operators.Sketches.stampShape(
-      (if (committed.isEmpty) batchBits
-        else batchBits
-          .unionByName(spark.read.parquet(s"$root/v${committed.max}"))
-          .distinct()),
-      "pos", graft.operators.Sketches.BloomHashesKey -> numHashes.toLong,
-      graft.operators.Sketches.BloomBitsKey -> mBits.toLong)
-      .localCheckpoint(true)
-    val bits = next.count()
-    if (bits == 0) return Refresh(0, 0)
-    val nv = if (committed.isEmpty) 0L else committed.max + 1
-    val tmp = s"$root/_tmp_v$nv"
-    next.write.mode("overwrite").parquet(tmp)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$root/v$nv")),
-      s"Bloom commit rename failed: $tmp -> $root/v$nv (old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true))
-    Refresh(bits, bits)
+    commitVersion(spark, root, "Bloom") { last =>
+      val batchBits = graft.operators.Sketches
+        .bloomBuild(batch, keyCol, numHashes, mBits)
+      // re-stamp: the union/distinct against the stored side does not
+      // reliably keep the builder's shape metadata
+      stagedNonEmpty(graft.operators.Sketches.stampShape(
+        last.fold(batchBits)(v => batchBits
+          .unionByName(spark.read.parquet(s"$root/v$v")).distinct()),
+        "pos", graft.operators.Sketches.BloomHashesKey -> numHashes.toLong,
+        graft.operators.Sketches.BloomBitsKey -> mBits.toLong)
+        .localCheckpoint(true))
+    }
   }
 
   /** [[streamingRefresh]] pre-wired to [[refreshBloom]]. */
@@ -1659,11 +1615,8 @@ object SilverIndex {
     * committed version under `path`/bloom. */
   def bloomIndex(spark: SparkSession, path: String): DataFrame = {
     val root = s"$path/bloom"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, root)
-    require(vs.nonEmpty, s"no committed Bloom bit set under $root")
-    spark.read.parquet(s"$root/v${vs.max}")
+    spark.read.parquet(
+      s"$root/v${latestVersion(spark, root, "Bloom bit set")}")
   }
 
   /** HyperLogLog register maintenance under streaming arrival — the
@@ -1672,37 +1625,23 @@ object SilverIndex {
     * at-least-once replay of any batch is a no-op by construction and
     * the maintained register table is row-identical to the
     * from-scratch batch build (the s12 gate contract — k5's oracle
-    * applies verbatim). Commits by the stage-then-rename versioned
-    * protocol (crash rationale at refreshKmv). Fold cost: the stored
-    * side is ≤ groups·m register rows, the batch side its
-    * map-combined partial maxima — O(sketch) per batch, never
-    * O(events). */
+    * applies verbatim). Commits as a SEQUENCE [[commitVersion]] under
+    * `path`/hll. Fold cost: the stored side is ≤ groups·m register
+    * rows, the batch side its map-combined partial maxima — O(sketch)
+    * per batch, never O(events). */
   def refreshHll(batch: DataFrame, groupCols: Seq[String],
       keyCol: String, path: String): Refresh = {
     val spark = batch.sparkSession
     val root = s"$path/hll"
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, root)
-    val batchRegs = graft.operators.Sketches
-      .hllBuild(batch, groupCols, keyCol)
-    val next = (if (committed.isEmpty) batchRegs
-      else batchRegs
-        .unionByName(spark.read.parquet(s"$root/v${committed.max}"))
-        .groupBy((groupCols :+ "bucket").map(col): _*)
-        .agg(max(col("reg")).cast("int").as("reg")))
-      .localCheckpoint(true)
-    val n = next.count()
-    if (n == 0) return Refresh(0, 0)
-    val nv = if (committed.isEmpty) 0L else committed.max + 1
-    val tmp = s"$root/_tmp_v$nv"
-    next.write.mode("overwrite").parquet(tmp)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$root/v$nv")),
-      s"HLL commit rename failed: $tmp -> $root/v$nv (old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/v$v"), true))
-    Refresh(n, n)
+    commitVersion(spark, root, "HLL") { last =>
+      val batchRegs = graft.operators.Sketches
+        .hllBuild(batch, groupCols, keyCol)
+      stagedNonEmpty(last.fold(batchRegs)(v => batchRegs
+          .unionByName(spark.read.parquet(s"$root/v$v"))
+          .groupBy((groupCols :+ "bucket").map(col): _*)
+          .agg(max(col("reg")).cast("int").as("reg")))
+        .localCheckpoint(true))
+    }
   }
 
   /** [[streamingRefresh]] pre-wired to [[refreshHll]]. */
@@ -1716,28 +1655,23 @@ object SilverIndex {
     * under `path`/hll. */
   def hllIndex(spark: SparkSession, path: String): DataFrame = {
     val root = s"$path/hll"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, root)
-    require(vs.nonEmpty, s"no committed HLL register table under $root")
-    spark.read.parquet(s"$root/v${vs.max}")
+    spark.read.parquet(
+      s"$root/v${latestVersion(spark, root, "HLL register table")}")
   }
 
   /** Quantile-SAMPLE maintenance: fold a batch into the deterministic
     * hash sample behind [[graft.operators.Sketches.sampleQuantiles]]
     * (the k3 sketch). Membership is a pure per-row function of
     * (salt, id) — a batch contributes exactly its qualifying rows —
-    * and the id anti-join makes an at-least-once REPLAY append zero
-    * (the [[streamingRefresh]] discipline), so the stored sample is
-    * row-identical to the batch gate over everything that arrived and
+    * and the [[appendNew]] id anti-join makes an at-least-once REPLAY
+    * append zero, so the stored sample is row-identical to the batch
+    * gate over everything that arrived and
     * [[graft.operators.Sketches.rankSelect]] serves the identical
     * quantiles. Scale: each fold appends rate·|batch| narrow rows;
     * quantile serving sorts only the stored sample. */
   def refreshQuantileSample(batch: DataFrame, idCol: String,
       valCol: String, groupCols: Seq[String], salt: String, rate: Double,
       path: String): Refresh = {
-    val spark = batch.sparkSession
-    val samplePath = s"$path/sample"
     val sample = batch
       .where(col(valCol).isNotNull && col(idCol).isNotNull &&
         graft.operators.Splits.hashKey(col(idCol), salt) <
@@ -1745,13 +1679,7 @@ object SilverIndex {
       .select(groupCols.map(col) ++ Seq(col(idCol).as("__id"),
         col(valCol).as("__v"),
         graft.operators.Splits.hashKey(col(idCol), salt).as("__hk")): _*)
-    val newRows = readIfData(spark, samplePath)
-      .fold(sample)(ix => sample.join(ix.select(col("__id")),
-        Seq("__id"), "left_anti"))
-      .localCheckpoint(true)
-    newRows.write.mode("append").parquet(samplePath)
-    val appended = newRows.count()
-    Refresh(appended, appended)
+    appendNew(sample, "__id", s"$path/sample", storedKey = "__id")(identity)
   }
 
   /** [[streamingRefresh]] pre-wired to [[refreshQuantileSample]]. */
@@ -1776,65 +1704,27 @@ object SilverIndex {
     * [[refreshQuantileSample]]'s append dedupes on row ids — but CMS
     * counts can do neither (a replayed batch would double-count, and
     * the sketch keeps no ids to anti-join). Exactly-once here is the
-    * standard foreachBatch TRANSACTIONAL guard: every fold writes the
-    * micro-batch id it committed alongside the counters, and a replay
-    * of batch ≤ the stored id is a no-op. foreachBatch delivers batch
-    * ids monotonically, so one stored long is the whole transaction
-    * log. Fold cost: the stored side is depth·width rows, the batch
-    * side its map-side-combined partial counts — O(sketch) per batch,
-    * never O(events). */
-  /** The committed sketch versions under `path`: one `v<n>` directory
-    * per committed fold (CMS: n = batch id; KMV: a plain sequence).
-    * For CMS the directory NAME carries the batch id, so one atomic
-    * rename commits the counters AND the transaction record together —
-    * a separate marker file would leave a window where one is durable
-    * without the other (double-count on replay, or a truncated marker
-    * wedging every later batch). */
-  private def versionsUnder(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") &&
-        n.drop(1).forall(_.isDigit) => n.drop(1).toLong }
-  }
-
+    * standard foreachBatch TRANSACTIONAL guard — a TRANSACTIONAL
+    * [[commitVersion]]: every fold commits as the micro-batch id, and a
+    * replay of batch ≤ the stored id is a no-op. Fold cost: the stored
+    * side is depth·width rows, the batch side its map-side-combined
+    * partial counts — O(sketch) per batch, never O(events). */
   def refreshCms(batch: DataFrame, batchId: Long, keyCol: String,
       width: Int, depth: Int, path: String): Refresh = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    val part = graft.operators.Sketches
-      .cmsBuild(batch, keyCol, width, depth)
-    // re-stamp the shape the merge aggregation drops, so the persisted
-    // counters always carry it (the serve-time mismatch guard)
-    val next = graft.operators.Sketches.stampShape(
-      (if (last < 0) part
-        else part.unionByName(spark.read.parquet(s"$path/v$last"))
+    commitVersion(spark, path, "CMS", Some(batchId)) { last =>
+      val part = graft.operators.Sketches
+        .cmsBuild(batch, keyCol, width, depth)
+      // re-stamp the shape the merge aggregation drops, so the persisted
+      // counters always carry it (the serve-time mismatch guard)
+      staged(batchId, graft.operators.Sketches.stampShape(
+        last.fold(part)(v => part
+          .unionByName(spark.read.parquet(s"$path/v$v"))
           .groupBy("row", "bucket").agg(sum(col("cnt")).as("cnt"))),
-      "cnt", graft.operators.Sketches.CmsWidthKey -> width.toLong,
-      graft.operators.Sketches.CmsDepthKey -> depth.toLong)
-      .localCheckpoint(true)
-    // stage then RENAME: the rename is the commit point. A crash
-    // before it leaves an orphan _tmp the replay overwrites; a crash
-    // after it makes the replay a no-op (batchId <= last above).
-    val tmp = s"$path/_tmp_v$batchId"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw (e.g. destination
-    // left by a duplicate writer) — proceeding to the retirement below
-    // on a failed rename would delete the only committed counters
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/v$batchId")),
-      s"CMS commit rename failed: $tmp -> $path/v$batchId (old versions kept)")
-    // best-effort retirement of superseded versions (single-writer
-    // foreachBatch; gate reads happen after the stream stops)
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+        "cnt", graft.operators.Sketches.CmsWidthKey -> width.toLong,
+        graft.operators.Sketches.CmsDepthKey -> depth.toLong)
+        .localCheckpoint(true))
+    }
   }
 
   /** [[refreshCms]] driven by Structured Streaming (the batch id comes
@@ -1842,23 +1732,12 @@ object SilverIndex {
   def streamingRefreshCms(rows: DataFrame, keyCol: String, width: Int,
       depth: Int, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshCms(batch, id, keyCol, width, depth, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    onEachBatch(rows, path)(refreshCms(_, _, keyCol, width, depth, path))
 
   /** The maintained counter table: (row, bucket, cnt) — the highest
     * committed version. */
-  def cmsIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed CMS version under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
+  def cmsIndex(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"$path/v${latestVersion(spark, path, "CMS version")}")
 
   // ------------------------------------- drift ledger (s15, additive)
 
@@ -1867,10 +1746,9 @@ object SilverIndex {
     * Counts are an ADDITIVE fold over the feed, exactly the CMS
     * counters' algebra: neither merge-idempotent (a replayed batch
     * would double-count) nor id-anti-join-able (there is no row
-    * identity after aggregation), so the batch-id transactional
-    * discipline applies verbatim — version per committed batch id,
-    * stage-then-rename commit, replays of an already-committed id
-    * fold to a no-op. NULL periods/categories drop here, mirroring
+    * identity after aggregation), so the TRANSACTIONAL
+    * [[commitVersion]] applies verbatim — version per committed batch
+    * id, replays of an already-committed id fold to a no-op. NULL periods/categories drop here, mirroring
     * [[graft.operators.Drift.tvDrift]]'s filter, so ledger-served
     * reports equal scan-fed ones exactly.
     *
@@ -1881,54 +1759,29 @@ object SilverIndex {
   def refreshDriftLedger(batch: DataFrame, batchId: Long,
       periodCol: String, catCol: String, path: String): Refresh = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    val part = batch
-      .where(col(periodCol).isNotNull && col(catCol).isNotNull)
-      .select(col(periodCol).as("period"), col(catCol).as("category"))
-      .groupBy("period", "category").agg(count(lit(1)).as("cnt"))
-    val next = (if (last < 0) part
-      else part.unionByName(spark.read.parquet(s"$path/v$last"))
-        .groupBy("period", "category").agg(sum(col("cnt")).as("cnt")))
-      .localCheckpoint(true)
-    val tmp = s"$path/_tmp_v$batchId"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw — proceeding to
-    // the retirement below on a failed rename would delete the only
-    // committed ledger
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/v$batchId")),
-      s"drift-ledger commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+    commitVersion(spark, path, "drift-ledger", Some(batchId)) { last =>
+      val part = batch
+        .where(col(periodCol).isNotNull && col(catCol).isNotNull)
+        .select(col(periodCol).as("period"), col(catCol).as("category"))
+        .groupBy("period", "category").agg(count(lit(1)).as("cnt"))
+      staged(batchId, last.fold(part)(v => part
+          .unionByName(spark.read.parquet(s"$path/v$v"))
+          .groupBy("period", "category").agg(sum(col("cnt")).as("cnt")))
+        .localCheckpoint(true))
+    }
   }
 
   /** [[refreshDriftLedger]] driven by Structured Streaming. */
   def streamingRefreshDriftLedger(rows: DataFrame, periodCol: String,
       catCol: String, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshDriftLedger(batch, id, periodCol, catCol, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    onEachBatch(rows, path)(refreshDriftLedger(_, _, periodCol, catCol, path))
 
   /** The maintained ledger: (period, category, cnt) — the highest
     * committed version. */
-  def driftLedgerIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed drift ledger under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
+  def driftLedgerIndex(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(
+      s"$path/v${latestVersion(spark, path, "drift ledger")}")
 
   // -------------------------------- gold MAX rollup (g3, semilattice)
 
@@ -1945,9 +1798,9 @@ object SilverIndex {
     * (associative, commutative, idempotent), so unlike the additive
     * CMS/drift folds a REPLAYED batch cannot corrupt the rollup even
     * without the version guard — max(a, a) = a. The batch-id version
-    * is kept anyway: it makes replays free (skip instead of re-merge)
-    * and the rename the crash-safe commit point, same protocol as
-    * [[refreshCms]]. NULL keys drop (a NULL group key is SQL's one
+    * is kept anyway (a TRANSACTIONAL [[commitVersion]], as
+    * [[refreshCms]]): it makes replays free (skip instead of re-merge)
+    * and the rename the crash-safe commit point. NULL keys drop (a NULL group key is SQL's one
     * non-mergeable group; the gold CTAS's GROUP BY would keep it as
     * its own row, but bronze titles are NOT NULL by construction and
     * the gate's oracle confirms the equality).
@@ -1961,56 +1814,31 @@ object SilverIndex {
     require(keyCols.nonEmpty && maxCols.nonEmpty,
       "refreshMaxRollup needs at least one key and one max column")
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    val aggs = maxCols.map(c => max(col(c)).as(c))
-    val part = batch
-      .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
-      .groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    val next = (if (last < 0) part
-      else part.unionByName(spark.read.parquet(s"$path/v$last"))
+    commitVersion(spark, path, "gold-rollup", Some(batchId)) { last =>
+      val aggs = maxCols.map(c => max(col(c)).as(c))
+      val part = batch
+        .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
         .groupBy(keyCols.map(col): _*)
-        .agg(aggs.head, aggs.tail: _*))
-      .localCheckpoint(true)
-    val tmp = s"$path/_tmp_v$batchId"
-    next.write.mode("overwrite").parquet(tmp)
-    // rename failures REPORT false rather than throw — proceeding to
-    // the retirement below on a failed rename would delete the only
-    // committed rollup
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(s"$path/v$batchId")),
-      s"gold-rollup commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+        .agg(aggs.head, aggs.tail: _*)
+      staged(batchId, last.fold(part)(v => part
+          .unionByName(spark.read.parquet(s"$path/v$v"))
+          .groupBy(keyCols.map(col): _*)
+          .agg(aggs.head, aggs.tail: _*))
+        .localCheckpoint(true))
+    }
   }
 
   /** [[refreshMaxRollup]] driven by Structured Streaming. */
   def streamingRefreshMaxRollup(rows: DataFrame, keyCols: Seq[String],
       maxCols: Seq[String], path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshMaxRollup(batch, id, keyCols, maxCols, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    onEachBatch(rows, path)(refreshMaxRollup(_, _, keyCols, maxCols, path))
 
   /** The maintained rollup (one row per key, current MAXes) — the
     * highest committed version. */
-  def maxRollupIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed gold rollup under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
+  def maxRollupIndex(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(
+      s"$path/v${latestVersion(spark, path, "gold rollup")}")
 
   // --------------------- maintained connected components (d19, r18)
 
@@ -2038,8 +1866,8 @@ object SilverIndex {
     * EXACTLY (d8's oracle applies verbatim to d19; SilverIndexSpec
     * fuzzes edge chunkings incl. cross-batch bridge merges).
     *
-    * Commit discipline: the [[refreshMaxRollup]] family (versioned
-    * batch-id + stage-then-rename; replays of a committed id no-op) —
+    * Commit discipline: a TRANSACTIONAL [[commitVersion]], as
+    * [[refreshMaxRollup]] (replays of a committed id no-op) —
     * and like MAX, the fold is a semilattice (duplicate edges are
     * absorbed by contraction), so replays are harmless by algebra too.
     * The per-fold write is the roots table — output-sized (one row per
@@ -2055,24 +1883,19 @@ object SilverIndex {
   def refreshComponents(pairs: DataFrame, batchId: Long, aCol: String,
       bCol: String, path: String): Refresh = {
     val spark = pairs.sparkSession
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
     val e = pairs
       .select(col(aCol).as("__a"), col(bCol).as("__b"))
       .where(col("__a").isNotNull && col("__b").isNotNull &&
         col("__a") =!= col("__b"))
-    // an empty FIRST batch commits nothing (an empty roots version has
-    // no parquet schema to read back); an empty later batch folds
-    // through as identity below
-    if (last < 0 && e.isEmpty) return Refresh(0, last)
-    val next: DataFrame =
-      if (last < 0)
-        graft.operators.Components.connectedComponents(e, "__a", "__b")
-      else {
-        val stored = spark.read.parquet(s"$path/v$last")
+    commitVersion(spark, path, "components", Some(batchId)) {
+      // an empty FIRST batch commits nothing (an empty roots version has
+      // no parquet schema to read back); an empty later batch folds
+      // through as identity below
+      case None if e.isEmpty => None
+      case None => staged(batchId, graft.operators.Components
+        .connectedComponents(e, "__a", "__b").localCheckpoint(true))
+      case Some(v) =>
+        val stored = spark.read.parquet(s"$path/v$v")
         val contracted = e
           .join(stored.select(col("node").as("__a"),
             col("component").as("__ra")), Seq("__a"), "left")
@@ -2098,16 +1921,8 @@ object SilverIndex {
           .distinct()
           .join(stored.select(col("node")), Seq("node"), "left_anti")
           .join(m, Seq("node"))
-        remapped.unionByName(newRoots)
-      }
-    val out = next.localCheckpoint(true)
-    val tmp = s"$path/_tmp_v$batchId"
-    out.write.mode("overwrite").parquet(tmp)
-    require(fs.rename(new Path(tmp), new Path(s"$path/v$batchId")),
-      s"components commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v => fs.delete(new Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+        staged(batchId, remapped.unionByName(newRoots).localCheckpoint(true))
+    }
   }
 
   /** The maintained component map (node → component root = min member
@@ -2115,13 +1930,9 @@ object SilverIndex {
     * are their own components and are not stored (the
     * [[graft.operators.Components.connectedComponents]] contract —
     * left-join + coalesce on the caller's side). */
-  def componentsIndex(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed component map under $path")
-    spark.read.parquet(s"$path/v${vs.max}")
-  }
+  def componentsIndex(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(
+      s"$path/v${latestVersion(spark, path, "component map")}")
 
   /** [[refreshComponents]] driven by Structured Streaming — the
     * continuously-fed dedup-clustering face (near-dup pairs arrive
@@ -2130,13 +1941,7 @@ object SilverIndex {
   def streamingRefreshComponents(rows: DataFrame, aCol: String,
       bCol: String, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshComponents(batch.toDF(), id, aCol, bCol, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    onEachBatch(rows, path)(refreshComponents(_, _, aCol, bCol, path))
 
   // ------------------------------ maintained SCD2 history (g6, r17)
 
@@ -2151,9 +1956,9 @@ object SilverIndex {
     *
     * Discipline: SCD2 close is NOT a semilattice (closing a version is
     * neither idempotent against replays nor order-free), so BOTH s9
-    * guards are load-bearing: the batch-id version makes a replayed
-    * batch a no-op (and the stage-then-rename the crash-safe commit
-    * point), and a strictly-increasing high-water mark on the change
+    * guards are load-bearing: the batch-id version (a TRANSACTIONAL
+    * [[commitVersion]]) makes a replayed batch a no-op, and a
+    * strictly-increasing high-water mark on the change
     * timestamps makes the fold EXACT — a batch carrying a timestamp at
     * or below the stored mark raises, because an event older than an
     * already-collapsed state cannot be stitched without the full log
@@ -2178,7 +1983,7 @@ object SilverIndex {
     * OVERWRITE, so a crashed fold's replay re-emits identically (the
     * s6 pairs-partition discipline) — while the keys-sized CURRENT
     * segment (one open version per key) is the only thing the
-    * stage-then-rename version commit rewrites. Crash windows: closed
+    * [[commitVersion]] stage rewrites. Crash windows: closed
     * is written FIRST, so a crash before the current-segment rename
     * replays the whole fold against the untouched previous current
     * version and overwrites `closed/batch=N` with the identical rows;
@@ -2188,137 +1993,126 @@ object SilverIndex {
       attrCols: Seq[String], tsCol: String, path: String): Refresh = {
     require(attrCols.nonEmpty, "refreshScd2 needs at least one attribute")
     val spark = batch.sparkSession
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = versionsUnder(fs, path)
-    val last = if (committed.isEmpty) -1L else committed.max
-    if (batchId <= last) return Refresh(0, last)
-    // an orphaned closed/batch=N with last < N != batchId is a CRASHED
-    // fold whose current-segment commit never landed, arriving now
-    // under a DIFFERENT id (ADVICE r17): folding over it would close
-    // the same stored-current versions twice with conflicting
-    // effective_to values (and silently lose the crashed batch's
-    // rows once N <= the new committed version un-hides the orphan in
-    // [[scd2Index]]). Replaying the SAME id is the recovery path — the
-    // per-batch overwrite re-emits identically — so N == batchId
-    // passes; anything else raises before touching state.
-    val closedDir = new Path(s"$path/closed")
-    if (fs.exists(closedDir)) {
-      val orphans = fs.listStatus(closedDir).map(_.getPath.getName)
-        .filter(_.startsWith("batch="))
-        .map(_.stripPrefix("batch=").toLong)
-        .filter(n => n > last && n != batchId)
-      require(orphans.isEmpty,
-        s"refreshScd2: orphaned closed partition(s) batch=" +
-          s"${orphans.sorted.mkString(",")} from a crashed fold — " +
-          s"replay that batch id (the overwrite re-emits identically) " +
-          s"or remove the partition; folding batch $batchId over it " +
-          "would close the same stored versions twice")
-    }
-    val valid = batch.where(col(keyCol).isNotNull && col(tsCol).isNotNull)
-    // an empty FIRST batch commits nothing (an empty-history version
-    // would have no parquet schema to read back); an empty later batch
-    // folds through as identity below
-    if (last < 0 && valid.isEmpty) return Refresh(0, last)
-    // the batch history feeds BOTH segment writes (and, in the stitch,
-    // the close-point aggregation too) — materialize it once instead
-    // of re-running the batch window per consumer (it is
-    // batch-transitions-sized by construction)
-    val bh = graft.operators.Scd2
-      .history(valid, keyCol, attrCols, tsCol).localCheckpoint(true)
-    val attrs = struct(attrCols.map(col): _*)
-    val (closedNew: DataFrame, currentNext: DataFrame) =
-      if (last < 0)
-        (bh.where(!col("is_current")), bh.where(col("is_current")))
-      else {
-        val stored = spark.read.parquet(s"$path/v$last/history")
-        val hwm = spark.read.parquet(s"$path/v$last/hwm")
-        // the exactness guard: one broadcast-nested-loop probe of the
-        // batch against the single-row mark, first violation suffices
-        val viol = valid.join(broadcast(hwm), col(tsCol) <= col("hwm"))
-          .limit(1).count()
-        require(viol == 0L,
-          s"refreshScd2: batch $batchId carries timestamps at or below " +
-            "the stored high-water mark — the incremental fold needs " +
-            "strictly increasing batch boundaries; rebuild from the " +
-            "full log for out-of-order arrivals")
-        val firstW = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol))
-          .orderBy(col("effective_from") +: attrCols.map(col): _*)
-        // the stored CURRENT segment holds exactly the open versions
-        val cur = stored.select(col(keyCol), attrs.as("__cs"))
-        // drop a batch's FIRST version when it repeats the stored
-        // current state — Scd2.history marks every key's first batch
-        // row as a change (lag sees NULL), but across the boundary it
-        // is only a transition if the state actually moved
-        val kept = bh
-          .withColumn("__rn", row_number().over(firstW))
-          .join(cur, Seq(keyCol), "left")
-          .where(col("__rn") =!= 1 || col("__cs").isNull ||
-            !(attrs <=> col("__cs")))
-          .drop("__rn", "__cs")
-          // consumed three times (closed rows, current rows, the
-          // close-point aggregation) across two write actions
-          .localCheckpoint(true)
-        val closeAt = kept.groupBy(col(keyCol))
-          .agg(min(col("effective_from")).as("__close"))
-        // stored current rows superseded this batch → closed segment;
-        // the rest stay current untouched
-        val storedClosed = stored.join(closeAt, Seq(keyCol))
-          .withColumn("effective_to", col("__close"))
-          .drop("__close")
-          .withColumn("is_current", lit(false))
-        val storedStillCurrent =
-          stored.join(closeAt, Seq(keyCol), "left_anti")
-        (storedClosed.unionByName(kept.where(!col("is_current"))),
-          storedStillCurrent.unionByName(kept.where(col("is_current"))))
+    val fs = hadoopFs(spark, path)
+    commitVersion(spark, path, "scd2", Some(batchId)) { lastV =>
+      val last = lastV.getOrElse(-1L)
+      // an orphaned closed/batch=N with last < N != batchId is a CRASHED
+      // fold whose current-segment commit never landed, arriving now
+      // under a DIFFERENT id (ADVICE r17): folding over it would close
+      // the same stored-current versions twice with conflicting
+      // effective_to values (and silently lose the crashed batch's
+      // rows once N <= the new committed version un-hides the orphan in
+      // [[scd2Index]]). Replaying the SAME id is the recovery path — the
+      // per-batch overwrite re-emits identically — so N == batchId
+      // passes; anything else raises before touching state.
+      val closedDir = new Path(s"$path/closed")
+      if (fs.exists(closedDir)) {
+        val orphans = fs.listStatus(closedDir).map(_.getPath.getName)
+          .filter(_.startsWith("batch="))
+          .map(_.stripPrefix("batch=").toLong)
+          .filter(n => n > last && n != batchId)
+        require(orphans.isEmpty,
+          s"refreshScd2: orphaned closed partition(s) batch=" +
+            s"${orphans.sorted.mkString(",")} from a crashed fold — " +
+            s"replay that batch id (the overwrite re-emits identically) " +
+            s"or remove the partition; folding batch $batchId over it " +
+            "would close the same stored versions twice")
       }
-    val batchMax = valid.agg(max(col(tsCol)).as("hwm"))
-    val hwmNext =
-      if (last < 0) batchMax
-      else spark.read.parquet(s"$path/v$last/hwm")
-        .unionByName(batchMax).agg(max(col("hwm")).as("hwm"))
-    // The four pre-commit writes — the closed partition, its high-water
-    // manifest row (the [[scd2AsOf]] pruning sidecar: every row in
-    // closed/batch=N has effective_to <= hwm_N), and the two staged
-    // current-segment files — are mutually independent idempotent
-    // overwrites into disjoint paths, ALL invisible to readers until
-    // the rename below commits, so they run as concurrent jobs (r19
-    // optimization, guide §2.6) instead of four sequential tails. The
-    // crash window widens only symmetrically: before, a crash could
-    // land closed/batch=N without its manifest row; now any subset of
-    // the four can land — every combination is either invisible (tmp),
-    // guarded (a closed orphan under a DIFFERENT next id raises above),
-    // or benign (a manifest row whose closed partition is absent prunes
-    // nothing and reads zero rows), and replaying the SAME id rewrites
-    // all four (Scd2IncrementalSpec's crash cases).
-    val tmp = s"$path/_tmp_v$batchId"
-    graft.operators.Par.jobs(Seq(
-      () => closedNew.write.mode("overwrite")
-        .parquet(s"$path/closed/batch=$batchId"),
-      () => hwmNext.coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/closedhwm/batch=$batchId"),
-      () => currentNext.write.mode("overwrite").parquet(s"$tmp/history"),
-      () => hwmNext.coalesce(1).write.mode("overwrite")
-        .parquet(s"$tmp/hwm")))
-    require(fs.rename(new Path(tmp), new Path(s"$path/v$batchId")),
-      s"scd2 commit rename failed: $tmp -> $path/v$batchId " +
-        "(old versions kept)")
-    committed.foreach(v => fs.delete(new Path(s"$path/v$v"), true))
-    Refresh(batchId, batchId)
+      val valid = batch.where(col(keyCol).isNotNull && col(tsCol).isNotNull)
+      // an empty FIRST batch commits nothing (an empty-history version
+      // would have no parquet schema to read back); an empty later batch
+      // folds through as identity below
+      if (last < 0 && valid.isEmpty) None else {
+        // the batch history feeds BOTH segment writes (and, in the stitch,
+        // the close-point aggregation too) — materialize it once instead
+        // of re-running the batch window per consumer (it is
+        // batch-transitions-sized by construction)
+        val bh = graft.operators.Scd2
+          .history(valid, keyCol, attrCols, tsCol).localCheckpoint(true)
+        val attrs = struct(attrCols.map(col): _*)
+        val (closedNew: DataFrame, currentNext: DataFrame) =
+          if (last < 0)
+            (bh.where(!col("is_current")), bh.where(col("is_current")))
+          else {
+            val stored = spark.read.parquet(s"$path/v$last/history")
+            val hwm = spark.read.parquet(s"$path/v$last/hwm")
+            // the exactness guard: one broadcast-nested-loop probe of the
+            // batch against the single-row mark, first violation suffices
+            val viol = valid.join(broadcast(hwm), col(tsCol) <= col("hwm"))
+              .limit(1).count()
+            require(viol == 0L,
+              s"refreshScd2: batch $batchId carries timestamps at or below " +
+                "the stored high-water mark — the incremental fold needs " +
+                "strictly increasing batch boundaries; rebuild from the " +
+                "full log for out-of-order arrivals")
+            val firstW = org.apache.spark.sql.expressions.Window
+              .partitionBy(col(keyCol))
+              .orderBy(col("effective_from") +: attrCols.map(col): _*)
+            // the stored CURRENT segment holds exactly the open versions
+            val cur = stored.select(col(keyCol), attrs.as("__cs"))
+            // drop a batch's FIRST version when it repeats the stored
+            // current state — Scd2.history marks every key's first batch
+            // row as a change (lag sees NULL), but across the boundary it
+            // is only a transition if the state actually moved
+            val kept = bh
+              .withColumn("__rn", row_number().over(firstW))
+              .join(cur, Seq(keyCol), "left")
+              .where(col("__rn") =!= 1 || col("__cs").isNull ||
+                !(attrs <=> col("__cs")))
+              .drop("__rn", "__cs")
+              // consumed three times (closed rows, current rows, the
+              // close-point aggregation) across two write actions
+              .localCheckpoint(true)
+            val closeAt = kept.groupBy(col(keyCol))
+              .agg(min(col("effective_from")).as("__close"))
+            // stored current rows superseded this batch → closed segment;
+            // the rest stay current untouched
+            val storedClosed = stored.join(closeAt, Seq(keyCol))
+              .withColumn("effective_to", col("__close"))
+              .drop("__close")
+              .withColumn("is_current", lit(false))
+            val storedStillCurrent =
+              stored.join(closeAt, Seq(keyCol), "left_anti")
+            (storedClosed.unionByName(kept.where(!col("is_current"))),
+              storedStillCurrent.unionByName(kept.where(col("is_current"))))
+          }
+        val batchMax = valid.agg(max(col(tsCol)).as("hwm"))
+        val hwmNext =
+          if (last < 0) batchMax
+          else spark.read.parquet(s"$path/v$last/hwm")
+            .unionByName(batchMax).agg(max(col("hwm")).as("hwm"))
+        // The four pre-commit writes — the closed partition, its high-water
+        // manifest row (the [[scd2AsOf]] pruning sidecar: every row in
+        // closed/batch=N has effective_to <= hwm_N), and the two staged
+        // current-segment files — are mutually independent idempotent
+        // overwrites into disjoint paths, ALL invisible to readers until
+        // the rename below commits, so they run as concurrent jobs (r19
+        // optimization, guide §2.6) instead of four sequential tails. The
+        // crash window widens only symmetrically: before, a crash could
+        // land closed/batch=N without its manifest row; now any subset of
+        // the four can land — every combination is either invisible (tmp),
+        // guarded (a closed orphan under a DIFFERENT next id raises above),
+        // or benign (a manifest row whose closed partition is absent prunes
+        // nothing and reads zero rows), and replaying the SAME id rewrites
+        // all four (Scd2IncrementalSpec's crash cases).
+        val stage: String => Unit = tmp => graft.operators.Par.jobs(Seq(
+          () => closedNew.write.mode("overwrite")
+            .parquet(s"$path/closed/batch=$batchId"),
+          () => hwmNext.coalesce(1).write.mode("overwrite")
+            .parquet(s"$path/closedhwm/batch=$batchId"),
+          () => currentNext.write.mode("overwrite").parquet(s"$tmp/history"),
+          () => hwmNext.coalesce(1).write.mode("overwrite")
+            .parquet(s"$tmp/hwm")))
+        Some(batchId -> stage)
+      }
+    }
   }
 
   /** [[refreshScd2]] driven by Structured Streaming. */
   def streamingRefreshScd2(rows: DataFrame, keyCol: String,
       attrCols: Seq[String], tsCol: String, path: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) =>
-        refreshScd2(batch, id, keyCol, attrCols, tsCol, path); ()
-      }
-      .option("checkpointLocation", s"$path/_checkpoint")
-      .start()
+    onEachBatch(rows, path)(refreshScd2(_, _, keyCol, attrCols, tsCol, path))
 
   /** The maintained history (one row per attribute version): the
     * immutable closed segments unioned with the highest committed
@@ -2328,13 +2122,10 @@ object SilverIndex {
     * (N > the committed version): its rows would otherwise double with
     * the still-open versions the replay will close again. */
   def scd2Index(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed scd2 history under $path")
-    val current = spark.read.parquet(s"$path/v${vs.max}/history")
+    val v = latestVersion(spark, path, "scd2 history")
+    val current = spark.read.parquet(s"$path/v$v/history")
     readIfData(spark, s"$path/closed")
-      .map(_.where(col("batch") <= vs.max).drop("batch")
+      .map(_.where(col("batch") <= v).drop("batch")
         .unionByName(current))
       .getOrElse(current)
   }
@@ -2359,12 +2150,9 @@ object SilverIndex {
     * (g7's oracle). */
   def scd2AsOf(spark: SparkSession, path: String,
       asOf: Column): DataFrame = {
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, path)
-    require(vs.nonEmpty, s"no committed scd2 history under $path")
+    val v = latestVersion(spark, path, "scd2 history")
     val t = asOf
-    val current = spark.read.parquet(s"$path/v${vs.max}/history")
+    val current = spark.read.parquet(s"$path/v$v/history")
       .where(col("effective_from") <= t &&
         (col("effective_to").isNull || col("effective_to") > t))
     readIfData(spark, s"$path/closed").fold(current) { cl =>
@@ -2373,13 +2161,13 @@ object SilverIndex {
       // already dead at T
       val dead: Seq[Long] = readIfData(spark, s"$path/closedhwm")
         .fold(Seq.empty[Long]) { m =>
-          m.where(col("batch") <= vs.max && col("hwm") <= t)
+          m.where(col("batch") <= v && col("hwm") <= t)
             .select(col("batch").cast("long")).collect()
             .map(_.getLong(0)).toSeq
         }
       val pruned =
-        if (dead.isEmpty) cl.where(col("batch") <= vs.max)
-        else cl.where(col("batch") <= vs.max &&
+        if (dead.isEmpty) cl.where(col("batch") <= v)
+        else cl.where(col("batch") <= v &&
           !col("batch").isin(dead: _*))
       pruned.drop("batch")
         .where(col("effective_from") <= t && col("effective_to") > t)
@@ -2399,15 +2187,11 @@ object SilverIndex {
     * migration note). */
   def kmvIndex(spark: SparkSession, path: String): DataFrame = {
     val root = s"$path/sketch"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = versionsUnder(fs, root)
-    if (vs.nonEmpty) spark.read.parquet(s"$root/v${vs.max}")
-    else {
-      require(flatDataFiles(fs, root).nonEmpty,
-        s"no committed KMV sketch under $root")
+    val fs = hadoopFs(spark, root)
+    if (versionsUnder(fs, root).isEmpty && flatDataFiles(fs, root).nonEmpty)
       spark.read.parquet(root)
-    }
+    else spark.read.parquet(
+      s"$root/v${latestVersion(spark, root, "KMV sketch")}")
   }
 
   /** [[streamingRefresh]] pre-wired to [[refreshPostings]]. */
@@ -2436,104 +2220,29 @@ object SilverIndex {
     * contract), and a REPLAYED batch (foreachBatch is at-least-once)
     * finds zero new ids, appends zero signatures, and emits zero pairs
     * — the same exactly-once-by-anti-join argument as
-    * [[streamingRefresh]], extended to the derived pair stream. The
-    * new-id frame is eagerly materialized BEFORE the signature append
-    * (localCheckpoint), since the append changes what the lazy
-    * anti-join would read. */
+    * [[streamingRefresh]], extended to the derived pair stream by
+    * [[pairDeltaBatch]]. */
   def streamingNearDupPairs(docs: DataFrame, idCol: String,
       textCol: String, n: Int, numHashes: Int, rowsPerBand: Int,
       theta: Double, sigPath: String, pairsPath: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        nearDupBatch(batch.toDF(), batchId, idCol, textCol, n,
-          numHashes, rowsPerBand, theta, sigPath, pairsPath)
-      }
-      .option("checkpointLocation", s"$sigPath/_checkpoint")
-      .start()
+    onEachBatch(docs, sigPath)(nearDupBatch(_, _, idCol, textCol, n,
+      numHashes, rowsPerBand, theta, sigPath, pairsPath))
 
-  /** One micro-batch of [[streamingNearDupPairs]] — the foreachBatch
-    * body, factored out so a spec can drive the RECOVERY path directly
-    * over a hand-built half-committed directory (crash after the
-    * intent commit, crash after the signature append, partial intent
-    * write) instead of only observing the happy path end-to-end. */
+  /** One micro-batch of [[streamingNearDupPairs]] — [[pairDeltaBatch]]
+    * over MinHash signatures, factored out so a spec can drive the
+    * RECOVERY path directly over a hand-built half-committed directory
+    * (crash after the intent commit, crash after the signature append,
+    * partial intent write) instead of only observing the happy path
+    * end-to-end. */
   private[pipeline] def nearDupBatch(batch: DataFrame, batchId: Long,
       idCol: String, textCol: String, n: Int, numHashes: Int,
       rowsPerBand: Int, theta: Double, sigPath: String,
-      pairsPath: String): Unit = {
-        val spark = batch.sparkSession
-        // TRANSACTION INTENT: the batch's new-id set, persisted before
-        // any table mutates. The two mutations below (signature append,
-        // pair write) are not atomic together — a crash between them
-        // would otherwise lose the batch's pairs forever, because a
-        // replay's anti-join against the ALREADY-APPENDED signatures
-        // finds nothing new. The stored intent makes the replay reuse
-        // the original new-id set instead of re-deriving it against
-        // mutated state. One tiny file per batch, kept (deleting it
-        // would reopen the same window).
-        val intentDir = s"$sigPath/_intent/batch$batchId"
-        // guard on COMMITTED data files, not bare existence: the dir
-        // exists as soon as a write STARTS — fs.exists would send the
-        // replay down the read branch into a failing (or empty) read
-        // over leftover debris. hasDataFiles skips hidden subtrees.
-        // The intent itself commits by STAGE-THEN-RENAME (one file via
-        // coalesce(1), staged under _tmp_, one atomic dir rename): a
-        // direct multi-file write commits part files one rename at a
-        // time, so a crash MID-job-commit could leave a readable but
-        // INCOMPLETE id set — the replay would then silently drop the
-        // missing ids' signatures and pairs forever. The dir rename
-        // makes the intent all-or-nothing; any pre-rename crash leaves
-        // no committed data files and the replay re-derives (nothing
-        // has mutated before the intent commit).
-        val newIds = intentNewIds(spark, sigPath, batchId,
-          batch.select(col(idCol).as("doc")).distinct())
-        // the batch is pre-filtered to the intent so refreshMinhash's
-        // interior anti-join (kept: it is the append's own replay
-        // guard) runs on the already-new side only
-        refreshMinhash(
-          batch.join(newIds.withColumnRenamed("doc", idCol), Seq(idCol),
-            "left_semi"),
-          idCol, textCol, n, numHashes, sigPath)
-        // per-batch partition + OVERWRITE = idempotent pair emission:
-        // the replay recomputes the identical pairs (same stored
-        // intent, same post-append signature table) into the same
-        // partition — a plain append would duplicate them
-        graft.operators.Dedup
-          .minhashPairsDelta(minhashIndex(spark, sigPath), newIds,
-            rowsPerBand, theta)
-          .write.mode("overwrite").parquet(s"$pairsPath/batch=$batchId")
-        ()
-  }
-
-  /** The TRANSACTION-INTENT read-or-derive step factored out of
-    * [[nearDupBatch]] (semantics unchanged — the crash rationale lives
-    * in the comments there): return the batch's NEW id set, reading
-    * the persisted intent when one committed, deriving and committing
-    * it (stage-then-rename, single file) otherwise. Shared by the
-    * minhash (s6) and frame-fingerprint (m9) incremental pair
-    * emitters. `ids` must be the batch's distinct ids as a `doc`
-    * column. */
-  private def intentNewIds(spark: SparkSession, sigPath: String,
-      batchId: Long, ids: DataFrame): DataFrame = {
-    val intentDir = s"$sigPath/_intent/batch$batchId"
-    if (hasDataFiles(spark, intentDir)) spark.read.parquet(intentDir)
-    else {
-      val fresh = readIfData(spark, sigPath)
-        .fold(ids)(ix =>
-          ids.join(ix.select("doc"), Seq("doc"), "left_anti"))
-        .localCheckpoint(true)
-      val fs = new org.apache.hadoop.fs.Path(sigPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = s"$sigPath/_intent/_tmp_batch$batchId"
-      fresh.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val dst = new org.apache.hadoop.fs.Path(intentDir)
-      if (fs.exists(dst)) fs.delete(dst, true) // pre-fix debris
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
-        s"intent commit rename failed: $tmp -> $intentDir")
-      fresh
-    }
-  }
+      pairsPath: String): Unit =
+    pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
+      refreshMinhash(_, idCol, textCol, n, numHashes, sigPath))(
+      graft.operators.Dedup.minhashPairsDelta(
+        minhashIndex(batch.sparkSession, sigPath), _, rowsPerBand, theta))
 
   /** [[streamingRefresh]] pre-wired to [[refreshIvf]] (first batch
     * trains and freezes the quantizer, later batches assign-and-append
@@ -2560,13 +2269,13 @@ object SilverIndex {
   final case class Erased(removed: Long, remaining: Long)
 
   /** Rewrite the table at `dirStr` through `transform` (an erasure
-    * anti-join) with the [[compactListTable]] staged-swap commit: the
-    * survivors land in a staging dir, then two renames swap them live —
-    * a crash leaves either the old or the new table, never a
+    * anti-join, or the identity for compaction) with the staged-swap
+    * commit: the survivors land in a staging dir, then two renames swap
+    * them live — a crash leaves either the old or the new table, never a
     * half-deleted one, and a RERUN restores the surviving copy before
     * deleting anything. Both row counts ride Observations on the ONE
     * rewrite job (no separate count jobs); the row-count sidecar is
-    * refreshed so post-erasure refreshes stay metadata-only.
+    * refreshed so later refreshes stay metadata-only.
     *
     * Scale shape: one scan + one broadcast anti-join + one write —
     * the erasure rewrite is a compaction with a filter, so it batches
@@ -2580,20 +2289,25 @@ object SilverIndex {
       shape: DataFrame => DataFrame = identity)(
       transform: DataFrame => DataFrame): Erased = {
     val live = new Path(dirStr)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = hadoopFs(spark, dirStr)
     val staging = new Path(dirStr + "__compacting")
     val retired = new Path(dirStr + "__retired")
-    // crash recovery BEFORE any delete — the compactListTable
-    // discipline (rationale there): prefer the known-good retired
-    // copy, else a staging dir (valid only when the live table is
-    // gone, i.e. the first rename committed)
+    // crash recovery BEFORE any delete: a prior run that died between its
+    // two renames leaves the live path empty with the only surviving
+    // copies at __retired (the old table) and possibly __compacting (the
+    // completed rewrite). Deleting those while the live dir is missing
+    // would be permanent data loss; restore one of them first.
+    // Preference: __retired (the known-good old table; the rerun below
+    // rewrites it anyway), else a staging dir — which is only a valid
+    // recovery source when the live table is GONE, i.e. the first rename
+    // committed, which implies the staging write completed.
     if (!fs.exists(live)) {
       val src = if (fs.exists(retired)) retired
         else if (fs.exists(staging)) staging
         else throw new IllegalStateException(
-          s"erase: no table at $live and nothing to recover")
+          s"rewrite: no table at $live and nothing to recover")
       require(fs.rename(src, live),
-        s"erase: could not restore $src to $live")
+        s"rewrite: could not restore $src to $live")
     }
     fs.delete(staging, true); fs.delete(retired, true)
     val obsB = org.apache.spark.sql.Observation()
@@ -2604,9 +2318,9 @@ object SilverIndex {
     val w = out.write
     (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
       .parquet(staging.toString)
-    require(fs.rename(live, retired), s"erase: could not retire $live")
+    require(fs.rename(live, retired), s"rewrite: could not retire $live")
     require(fs.rename(staging, live),
-      s"erase: could not activate $staging — old table at $retired")
+      s"rewrite: could not activate $staging — old table at $retired")
     fs.delete(retired, true)
     val before = obsB.get("n").asInstanceOf[Long]
     val kept = obsK.get("n").asInstanceOf[Long]
@@ -2645,7 +2359,7 @@ object SilverIndex {
     val r = eraseKeyed(spark, path, "doc", subjects, subjectCol,
       shape = _.sortWithinPartitions(col("term")))
     eraseKeyed(spark, doclenPath(path), "doc", subjects, subjectCol)
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = hadoopFs(spark, path)
     // readIfData: a FULL-corpus erasure leaves a dir with no data files
     // (empty writes emit no part files), which schema inference rejects
     val st = readIfData(spark, doclenPath(path)).fold(Bm25Stats(0L, 0L)) {
@@ -2696,8 +2410,7 @@ object SilverIndex {
   def eraseIvf(spark: SparkSession, path: String,
       subjects: DataFrame, subjectCol: String): Erased =
     eraseKeyed(spark, asgPath(path), "neighbor_id", subjects, subjectCol,
-      partitionCols = Seq("list_id"),
-      shape = _.repartition(col("list_id")))
+      partitionCols = Seq("list_id"), shape = listColocated)
 
   /** Erasure for the IVF-PQ code table — as [[eraseIvf]] (the frozen
     * codebooks, like the centroids, hold only k-means aggregates).
@@ -2708,8 +2421,7 @@ object SilverIndex {
   def eraseIvfPq(spark: SparkSession, path: String,
       subjects: DataFrame, subjectCol: String): Erased =
     eraseKeyed(spark, codesPath(path), "neighbor_id", subjects,
-      subjectCol, partitionCols = Seq("list_id"),
-      shape = _.repartition(col("list_id")))
+      subjectCol, partitionCols = Seq("list_id"), shape = listColocated)
 
   /** REBUILD-FROM-CLEAN contract for the insert-only sketches. The
     * maintained KMV minima, Bloom positions, and HLL registers are
@@ -2728,9 +2440,7 @@ object SilverIndex {
     * could give. Cost is one corpus pass per compliance window —
     * batch the window's subjects, reset once. */
   def resetSketch(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(p, true)
+    hadoopFs(spark, path).delete(new Path(path), true)
     ()
   }
 
@@ -2779,24 +2489,6 @@ object SilverIndex {
       rebuildRecommended = imb > imbalanceThreshold)
   }
 
-  /** Rewrite the IVF assignment table into one sized file per list,
-    * undoing append fragmentation (every delta refresh adds a file per
-    * touched list — a weekly-refreshed index accumulates refreshes ×
-    * nlist objects). Same rows, same layout contract
-    * (`list_id`-partitioned), one narrow shuffle; the rewrite lands in
-    * a staging dir and swaps in with two renames so a crash leaves
-    * either the old or the new table, never a half-deleted one — and a
-    * RERUN after a crash between the renames restores the surviving
-    * copy before deleting anything (SilverIndexSpec pins the recovery).
-    *
-    * What compaction buys is the METADATA path: listing/open cost per
-    * probe and per refresh (the before/after counts and the anti-join
-    * list every file, every run — and object stores bill and throttle
-    * per request). A compute-bound probe's wall time is unchanged:
-    * tools/compaction_smoke_r7.txt measures 640 → 64 files with
-    * identical probe results and parity wall at 1M vectors, where 125M
-    * cosine evals dwarf local file opens. Compact on `filesPerList`,
-    * not on probe latency. */
   /** What a maintenance sweep decided and did. `stats` is the pre-sweep
     * measurement the decisions were made on. */
   final case class Maintenance(stats: IvfStats, compacted: Boolean,
@@ -2827,8 +2519,7 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val stats = ivfStats(spark, path, imbalanceThreshold)
     if (stats.rebuildRecommended) {
-      val fs = new Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = hadoopFs(spark, path)
       fs.delete(new Path(asgPath(path)), true)
       fs.delete(new Path(centPath(path)), true)
       refreshIvf(corpus, idCol, vecCol, nlist, path)
@@ -2839,6 +2530,24 @@ object SilverIndex {
     } else Maintenance(stats, compacted = false, rebuilt = false)
   }
 
+  /** Rewrite the IVF assignment table into one sized file per list,
+    * undoing append fragmentation (every delta refresh adds a file per
+    * touched list — a weekly-refreshed index accumulates refreshes ×
+    * nlist objects). Same rows, same layout contract
+    * (`list_id`-partitioned), one narrow shuffle; the rewrite lands in
+    * a staging dir and swaps in by [[rewriteSwap]] so a crash leaves
+    * either the old or the new table, never a half-deleted one — and a
+    * RERUN after a crash between the renames restores the surviving
+    * copy before deleting anything (SilverIndexSpec pins the recovery).
+    *
+    * What compaction buys is the METADATA path: listing/open cost per
+    * probe and per refresh (the before/after counts and the anti-join
+    * list every file, every run — and object stores bill and throttle
+    * per request). A compute-bound probe's wall time is unchanged:
+    * tools/compaction_smoke_r7.txt measures 640 → 64 files with
+    * identical probe results and parity wall at 1M vectors, where 125M
+    * cosine evals dwarf local file opens. Compact on `filesPerList`,
+    * not on probe latency. */
   def compactIvf(spark: SparkSession, path: String): Unit =
     compactListTable(spark, asgPath(path))
 
@@ -2846,42 +2555,9 @@ object SilverIndex {
   def compactIvfPq(spark: SparkSession, path: String): Unit =
     compactListTable(spark, codesPath(path))
 
-  private def compactListTable(spark: SparkSession, dirStr: String): Unit = {
-    val live = new Path(dirStr)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val staging = new Path(dirStr + "__compacting")
-    val retired = new Path(dirStr + "__retired")
-    // crash recovery BEFORE any delete: a prior run that died between its
-    // two renames leaves the live path empty with the only surviving
-    // copies at __retired (the old table) and possibly __compacting (the
-    // completed rewrite — same rows). Deleting those while the live dir
-    // is missing would be permanent data loss; restore one of them first.
-    // Preference: __retired (the known-good pre-compaction table; the
-    // rerun below re-compacts it anyway), else a staging dir — which is
-    // only a valid recovery source when the live table is GONE, i.e. the
-    // first rename committed, which implies the staging write completed.
-    if (!fs.exists(live)) {
-      val src = if (fs.exists(retired)) retired
-        else if (fs.exists(staging)) staging
-        else throw new IllegalStateException(
-          s"compact: no table at $live and nothing to recover")
-      require(fs.rename(src, live), s"compact: could not restore $src to $live")
-    }
-    fs.delete(staging, true); fs.delete(retired, true)
-    val obs = org.apache.spark.sql.Observation()
-    spark.read.parquet(dirStr)
-      .observe(obs, count(lit(1)).as("n"))
-      .withColumn("list_id", col("list_id")) // partition col back into data
-      .repartition(col("list_id"))
-      .write.partitionBy("list_id").parquet(staging.toString)
-    require(fs.rename(live, retired), s"compact: could not retire $live")
-    require(fs.rename(staging, live),
-      s"compact: could not activate $staging — old table at $retired")
-    fs.delete(retired, true)
-    // the rewrite job counted the rows for free — refresh the sidecar so
-    // post-compaction refreshes stay metadata-only
-    writeMetaRows(fs, dirStr, obs.get("n").asInstanceOf[Long])
-  }
+  private def compactListTable(spark: SparkSession, dirStr: String): Unit =
+    rewriteSwap(spark, dirStr, Seq("list_id"), listColocated)(identity)
+
 
   /** [[maintainIvf]] for the IVF-PQ index: rebuild on measured drift
     * drops BOTH frozen quantizers (coarse centroids and residual
@@ -2894,8 +2570,7 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val stats = ivfPqStats(spark, path, imbalanceThreshold)
     if (stats.rebuildRecommended) {
-      val fs = new Path(path)
-        .getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = hadoopFs(spark, path)
       fs.delete(new Path(codesPath(path)), true)
       fs.delete(new Path(bookPath(path)), true)
       fs.delete(new Path(centPath(path)), true)

@@ -232,8 +232,8 @@ object AnnQueries {
       // the query itself then runs the steady-state maintenance shape:
       // a full incremental refresh (folds in the remaining 25% on the
       // first invocation, a cheap no-delta staleness pass after) and a
-      // probe served from the persisted index. ProfA6 +
-      // tools/a6_floor_r9.txt carry the from-cold vs steady split.
+      // probe served from the persisted index. tools/a6_floor_r9.txt
+      // carries the from-cold vs steady split.
       val path = ivfIndexPath(s, dir)
       graft.pipeline.SilverIndex.refreshIvf(emb, "vec_id", "embedding",
         nlist = 16, path = path)

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -23,6 +24,9 @@ import graft.operators.{Dedup, Sketches}
   *    an orphan `_tmp_v` never corrupts the fold, and a committed
   *    version survives every window (the in-place-overwrite bug lost
   *    the sole copy on a crash mid-write).
+  *  - one table-driven case per shared commit path: every versioned
+  *    artifact through the stage/rename/retire windows, and every
+  *    streaming pair emitter through the append/emit window.
   */
 class CrashRecoverySpec extends SparkTestBase {
 
@@ -164,7 +168,7 @@ class CrashRecoverySpec extends SparkTestBase {
 
   // ------------------------------------------------------- s9 versioned
 
-  private def cmsCounters(df: org.apache.spark.sql.DataFrame) =
+  private def cmsCounters(df: DataFrame) =
     df.collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
       .toMap
 
@@ -341,6 +345,197 @@ class CrashRecoverySpec extends SparkTestBase {
         new org.apache.hadoop.fs.Path(s"$path/sketch"))
       .map(_.getPath.getName).toSet
     assert(entries == Set("v1"), s"unexpected sketch dir contents: $entries")
+  }
+
+  // ------------------------------- every versioned artifact (commitVersion)
+
+  /** One artifact on the [[SilverIndex]] versioned-fold commit: `fold`
+    * folds a frame of `j` longs into the artifact at a path under a
+    * batch id, `read` serves it, and `root` maps the path to the
+    * directory holding its `v<n>` versions. */
+  private case class Versioned(name: String, root: String => String,
+      fold: (DataFrame, Long, String) => Unit,
+      read: String => DataFrame)
+
+  private def versionedArtifacts: Seq[Versioned] = Seq(
+    Versioned("kmv", p => s"$p/sketch", (df, _, p) => SilverIndex.refreshKmv(
+        df.select(concat(lit("g"), (col("j") % 3).cast("string")).as("grp"),
+          col("j").as("key")), "grp", "key", k = 8, path = p),
+      SilverIndex.kmvIndex(spark, _)),
+    Versioned("bloom", p => s"$p/bloom", (df, _, p) =>
+        SilverIndex.refreshBloom(df.select(col("j").as("key")), "key",
+          numHashes = 3, mBits = 256, path = p),
+      SilverIndex.bloomIndex(spark, _)),
+    Versioned("hll", p => s"$p/hll", (df, _, p) => SilverIndex.refreshHll(
+        df.select((col("j") % 2).as("g"), col("j").as("k")), Seq("g"), "k",
+        p),
+      SilverIndex.hllIndex(spark, _)),
+    Versioned("cms", identity, (df, id, p) => SilverIndex.refreshCms(
+        df.select((col("j") % 37).as("k")), id, "k", width = 16, depth = 3,
+        p),
+      SilverIndex.cmsIndex(spark, _)),
+    Versioned("drift", identity, (df, id, p) =>
+        SilverIndex.refreshDriftLedger(df.select((col("j") % 4).as("period"),
+          concat(lit("c"), (col("j") % 3).cast("string")).as("category")),
+          id, "period", "category", p),
+      SilverIndex.driftLedgerIndex(spark, _)),
+    Versioned("rollup", identity, (df, id, p) =>
+        SilverIndex.refreshMaxRollup(df.select((col("j") % 5).as("key"),
+          col("j").as("v")), id, Seq("key"), Seq("v"), p),
+      SilverIndex.maxRollupIndex(spark, _)),
+    // chains j — j+1 except at j % 3 == 2, so edges bridge chunks
+    Versioned("components", identity, (df, id, p) =>
+        SilverIndex.refreshComponents(df.where(col("j") % 3 =!= 2)
+          .select(col("j").as("a"), (col("j") + 1).as("b")), id, "a", "b",
+          p),
+      SilverIndex.componentsIndex(spark, _)),
+    // timestamps increase strictly across chunks (the fold's contract)
+    Versioned("scd2", identity, (df, id, p) =>
+        SilverIndex.refreshScd2(df.select((col("j") % 3).as("key"),
+          ((col("j") / 4).cast("int") % 2).cast("string").as("attr"),
+          col("j").as("ts")), id, "key", Seq("attr"), "ts", p),
+      SilverIndex.scd2Index(spark, _).select("key", "attr",
+        "effective_from", "effective_to", "is_current")))
+
+  private def chunk(i: Int): DataFrame =
+    spark.range(i * 10L, i * 10L + 10L).toDF("j")
+
+  private def servedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("commitVersion, all 8 versioned artifacts: an orphan _tmp_v<n> " +
+      "and an unretired superseded version never change what is " +
+      "served, the next fold equals the scratch build, and exactly one " +
+      "version survives") {
+    val conf = spark.sessionState.newHadoopConf()
+    versionedArtifacts.foreach { a =>
+      val path = tmp(s"crash-ver-${a.name}") + "/art"
+      val root = a.root(path)
+      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+      def at(p: String) = new org.apache.hadoop.fs.Path(p)
+      a.fold(chunk(0), 0L, path)
+      val v0 = tmp(s"crash-ver-${a.name}-v0") + "/v0"
+      org.apache.hadoop.fs.FileUtil.copy(fs, at(s"$root/v0"), fs, at(v0),
+        false, conf)
+      a.fold(chunk(1), 1L, path)
+      val served = servedRows(a.read(path))
+      // hand-built crash state: v0 survived its retirement, and the next
+      // fold staged its version but died before the rename — both dirs
+      // hold the stale chunk-0 state, so a wrong read is visible
+      Seq("v0", "_tmp_v2").foreach(d => org.apache.hadoop.fs.FileUtil
+        .copy(fs, at(v0), fs, at(s"$root/$d"), false, conf))
+      assert(servedRows(a.read(path)) == served,
+        s"${a.name}: a stale version shadowed the committed one")
+      a.fold(chunk(2), 2L, path)
+      val scratch = tmp(s"crash-ver-${a.name}-scratch") + "/art"
+      a.fold(spark.range(0L, 30L).toDF("j"), 0L, scratch)
+      assert(servedRows(a.read(path)) == servedRows(a.read(scratch)),
+        s"${a.name}: the fold after the crash diverged from scratch")
+      val left = fs.listStatus(at(root)).map(_.getPath.getName)
+        .filter(n => n.startsWith("v") || n.startsWith("_tmp_v")).toSet
+      assert(left == Set("v2"), s"${a.name}: versions left: $left")
+    }
+  }
+
+  // ------------------------------------ every pair emitter (pairDeltaBatch)
+
+  /** One streaming pair emitter: `batch` runs one micro-batch under
+    * `root` (artifact at `root`/sig, pairs at `root`/pairs), `refresh`
+    * appends rows to the artifact alone, and `first` is the filter of
+    * the batch-0 rows (the rest are batch 1 and pair with them). */
+  private case class Emitter(name: String, rows: DataFrame,
+      idCol: String, first: org.apache.spark.sql.Column,
+      batch: (DataFrame, Long, String) => Unit,
+      refresh: (DataFrame, String) => Unit)
+
+  private def emitters: Seq[Emitter] = {
+    val textDocs = docs.toDF("doc_id", "text")
+    val shingleDocs = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta"),
+      (3L, "one two three four five six"),
+      (2L, "alpha beta gamma delta epsilon"),
+      (4L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val base = "the quick brown fox jumps over the lazy dog and then " +
+      "naps soundly"
+    val frames = Seq((1L, 0, base), (2L, 0, "X" + base.drop(1)),
+        (3L, 0, (0 until 64).map(i => (48 + i).toChar).mkString),
+        (4L, 0, base))
+      .toDF("doc_id", "frame_idx", "txt")
+      .select(col("doc_id"), col("frame_idx"),
+        encode(col("txt"), "UTF-8").as("frame"))
+    val names = Seq((1L, "analyst"), (2L, "analist"), (3L, "manager"),
+      (4L, "analyst")).toDF("id", "name")
+    val triples = Seq((1L, 0L, 0.6), (1L, 1L, 0.8), (2L, 2L, 1.0),
+      (3L, 0L, 0.8), (3L, 1L, 0.6), (4L, 5L, 1.0))
+      .toDF("doc", "bucket", "weight")
+    val evalTriples = Seq((11L, 0L, 0.6), (11L, 1L, 0.8), (12L, 2L, 1.0))
+      .toDF("doc", "bucket", "weight")
+    def sig(root: String) = s"$root/sig"
+    def pairs(root: String) = s"$root/pairs"
+    Seq(
+      Emitter("minhash", textDocs, "doc_id", col("doc_id") <= 3L,
+        (b, id, r) => SilverIndex.nearDupBatch(b, id, "doc_id", "text",
+          n = 2, numHashes = 64, rowsPerBand = 4, theta = 0.5, sig(r),
+          pairs(r)),
+        (b, p) => SilverIndex.refreshMinhash(b, "doc_id", "text", 2, 64, p)),
+      Emitter("frames", frames, "doc_id", col("doc_id").isin(1L, 3L),
+        (b, id, r) => SilverIndex.frameNearDupBatch(b, id, "doc_id",
+          "frame_idx", "frame", 100000L, 2, sig(r), pairs(r)),
+        (b, p) => SilverIndex.refreshFingerprints(b, "doc_id", "frame_idx",
+          "frame", p)),
+      Emitter("edit", names, "id", col("id") <= 2L,
+        (b, id, r) => SilverIndex.editPairsBatch(b, id, "id", "name", 1,
+          Long.MaxValue, sig(r), pairs(r)),
+        (b, p) => SilverIndex.refreshEditIndex(b, "id", "name", 1, p)),
+      Emitter("containment", shingleDocs, "doc_id",
+        col("doc_id").isin(1L, 3L),
+        (b, id, r) => SilverIndex.containmentPairsBatch(b, id, "doc_id",
+          "text", 3, 0.5, sig(r), pairs(r)),
+        (b, p) => SilverIndex.refreshContainmentIndex(b, "doc_id", "text",
+          3, p)),
+      Emitter("jaccard", shingleDocs, "doc_id", col("doc_id").isin(1L, 3L),
+        (b, id, r) => SilverIndex.jaccardPairsBatch(b, id, "doc_id",
+          "text", 3, 0.5, sig(r), pairs(r)),
+        (b, p) => SilverIndex.refreshContainmentIndex(b, "doc_id", "text",
+          3, p)),
+      Emitter("simhash", shingleDocs, "doc_id", col("doc_id").isin(1L, 3L),
+        (b, id, r) => SilverIndex.simhashPairsBatch(b, id, "doc_id",
+          "text", 2, 7, sig(r), pairs(r)),
+        (b, p) => SilverIndex.refreshSimhashIndex(b, "doc_id", "text", 2,
+          p)),
+      Emitter("semantic", triples, "doc", col("doc") === 4L,
+        (b, id, r) => SilverIndex.semanticPairsBatch(b, id, evalTriples,
+          theta = 0.9, dim = 8, bits = 6, tables = 4, sig(r), pairs(r)),
+        (b, p) => SilverIndex.refreshSemanticLsh(b, dim = 8, bits = 6,
+          tables = 4, path = p)))
+  }
+
+  test("pairDeltaBatch, all 7 emitters: a crash after the index append, " +
+      "before the pair write, replays to the scratch pairs with no " +
+      "duplicate index rows") {
+    def pairRows(root: String) = servedRows(
+      spark.read.parquet(s"$root/pairs").drop("batch"))
+    emitters.foreach { e =>
+      val (b0, b1) = (e.rows.where(e.first), e.rows.where(!e.first))
+      val root = tmp(s"crash-pairs-${e.name}")
+      e.batch(b0, 0L, root)
+      // hand-built crash state: batch 1's intent durable AND its index
+      // rows appended, pairs never written
+      b1.select(col(e.idCol).as("doc")).distinct()
+        .join(spark.read.parquet(s"$root/sig").select("doc"), Seq("doc"),
+          "left_anti")
+        .write.parquet(s"$root/sig/_intent/batch1")
+      e.refresh(b1, s"$root/sig")
+      e.batch(b1, 1L, root) // the replay
+      val scratch = tmp(s"crash-pairs-${e.name}-scratch")
+      e.batch(e.rows, 0L, scratch)
+      assert(pairRows(scratch).nonEmpty, s"${e.name}: fixture has no pairs")
+      assert(pairRows(root) == pairRows(scratch),
+        s"${e.name}: batch 1's pairs were lost across the append/emit window")
+      assert(spark.read.parquet(s"$root/sig").count() ==
+        spark.read.parquet(s"$scratch/sig").count(),
+        s"${e.name}: the replay duplicated index rows")
+    }
   }
 
   test("erasePostings crash between the postings and doclen rewrites: " +

@@ -283,6 +283,10 @@ class StreamingIndexSpec extends SparkTestBase {
       rows.take(1200).toDF("id", "grp", "v"), "id", "v", Seq("grp"),
       "sq-stream-spec", rate = 0.3, path = path)
     assert(r.appended == 0, s"replay appended ${r.appended} rows")
+    // the running total is the stored sample size, as for every other
+    // appended artifact
+    assert(r.total == spark.read.parquet(s"$path/sample").count(),
+      s"refresh reported total ${r.total}, not the stored sample size")
   }
 
   test("streamed CMS == batch build; batch-id guard makes replays no-ops") {
