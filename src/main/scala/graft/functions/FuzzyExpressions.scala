@@ -94,10 +94,10 @@ case class WRatio(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `normalize_title` as a Catalyst expression (reference utils.py:22-29).
-  * Functionally identical to the built-in composition in
-  * [[graft.functions.package.normalizeTitleCol]]; exists so SQL text can
-  * call `normalize_title(c)` too.
+/** `normalize_title` as a Catalyst expression (reference utils.py:22-29):
+  * the one title normaliser — [[FuzzyKernel.normalizeTitle]] behind the
+  * Column API, the SQL function and [[graft.operators.SimilarityJoin]]'s
+  * key normalisation alike.
   */
 case class NormalizeTitle(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType

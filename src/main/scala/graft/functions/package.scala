@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.{functions => F}
 
 /** Column-level API for the graft function surface.
   *
@@ -65,15 +64,4 @@ package object functions {
 
   /** 64-bit SimHash of a shingle array, single pass. */
   def simhash64(sh: Column): Column = col(SimHash64(expr(sh)))
-
-  /** `normalize_title` as a composition of built-ins — identical result,
-    * pure Catalyst (fully foldable/pushdown-friendly). Removes exactly
-    * Python's `string.punctuation` (reference utils.py:20-29).
-    */
-  def normalizeTitleCol(c: Column): Column = {
-    val punctClass = "[!\"#$%&'()*+,\\-./:;<=>?@\\[\\\\\\]^_`{|}~]"
-    F.trim(F.regexp_replace(
-      F.regexp_replace(F.lower(F.coalesce(c, F.lit(""))), punctClass, ""),
-      "\\s+", " "))
-  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
-import graft.functions.{normalizeTitleCol, token_set_ratio, wratio}
+import graft.functions.{normalize_title, token_set_ratio, wratio}
 
 /** Blocked fuzzy similarity join — the Spark-native re-expression of the
   * reference's two-tier rapidfuzz matching
@@ -158,7 +158,7 @@ object SimilarityJoin {
   def scoredKeyPairs(left: DataFrame, right: DataFrame,
       cfg: SimilarityJoinConfig): DataFrame = {
     val norm: Column => Column =
-      if (cfg.normalize) normalizeTitleCol else identity
+      if (cfg.normalize) normalize_title else identity
 
     val distinctL = left.select(col(cfg.leftKey).as(KEY_L)).where(col(KEY_L).isNotNull)
       .distinct().withColumn(NORM_L, norm(col(KEY_L)))

@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Privacy}
+import graft.sources.LakeIO
 
 /** The ERASURE CERTIFICATE protocol (p8) — the one run a compliance
   * officer actually executes, composed from the already-proven pieces:
@@ -62,11 +64,6 @@ object ErasureProtocol {
     try f finally spark.sparkContext.setJobDescription(null)
   }
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** Run (or resume) the protocol under `root`; the certificate lands
     * at `root/certificate`. `docs` needs (doc_id, text, lang); `emb`
     * needs (vec_id, embedding); `subjects` one id column shared by the
@@ -105,7 +102,7 @@ object ErasureProtocol {
         .join(subj, pairsFull("doc_a") === col("__s"), "left_anti")
         .join(subj, pairsFull("doc_b") === col("__s"), "left_anti")
       // ---- 1. artifacts from the FULL base, guarded (see scaladoc)
-      if (!exists(spark, pre)) {
+      if (!LakeIO.fsFor(spark, pre).exists(new Path(pre))) {
         buildArtifacts(spark, root, docs, emb, Some(pairsFull))
         // ---- 2. pre-audit, persisted BEFORE any mutation
         lbl(spark, "erasure: pre-audit") {

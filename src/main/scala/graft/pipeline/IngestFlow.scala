@@ -1,9 +1,10 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{Bronze, HttpJsonPageFetcher}
+import graft.sources.{Bronze, HttpJsonPageFetcher, LakeIO}
 
 /** The reference's three scheduled flows chained as one entry point:
   *
@@ -90,44 +91,6 @@ object IngestFlow {
       threshold: Double,
       name: String = "volume_level_shift")
 
-  /** Restore a DANGLING retired copy (live missing, `__retired`
-    * present — a crash between retiring live and renaming staged).
-    * Runs at the START of every ingestion pass for every table, not
-    * only on the promote path (ADVICE r17): if the next run's
-    * expectation suite FAILS, the quarantine branch returns without
-    * promoting, and without this restore the table would end with no
-    * live artifact despite a retired copy existing — breaking the
-    * "previous live copy retained" guarantee the gate promises. */
-  private def restoreRetired(spark: SparkSession, live: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(live)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val liveP = new org.apache.hadoop.fs.Path(live)
-    val retired = new org.apache.hadoop.fs.Path(live + "__retired")
-    if (!fs.exists(liveP) && fs.exists(retired))
-      require(fs.rename(retired, liveP), s"could not restore $retired")
-  }
-
-  /** Commit a staged lake artifact: retire any previous live copy, then
-    * one rename activates the staged batch — a crash leaves either the
-    * old artifact, the retired copy (restored on the next run), or the
-    * new one, never a half-written table (the rewriteSwap discipline,
-    * sized down to a rename decision). */
-  private def promoteStaged(spark: SparkSession, staging: String,
-      live: String): Unit = {
-    restoreRetired(spark, live)
-    val fs = new org.apache.hadoop.fs.Path(live)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val (liveP, stagP) = (new org.apache.hadoop.fs.Path(live),
-      new org.apache.hadoop.fs.Path(staging))
-    val retired = new org.apache.hadoop.fs.Path(live + "__retired")
-    fs.delete(retired, true)
-    if (fs.exists(liveP))
-      require(fs.rename(liveP, retired), s"could not retire $live")
-    require(fs.rename(stagP, liveP),
-      s"promote rename failed: $staging -> $live")
-    fs.delete(retired, true)
-  }
-
   /** Flow 1: fetch every source, STAGE it, gate it on its declared
     * expectation suite (if any), and promote into the lake on pass —
     * on fail the staged batch moves WHOLE to `_quarantine/` next to
@@ -141,10 +104,14 @@ object IngestFlow {
       : Seq[String] =
     sources.flatMap { src =>
       val live = s"$lakeDir/${src.table}.parquet"
-      // a crashed previous run may have left this table retired-only;
-      // restore BEFORE any gate decision so a quarantining run still
-      // leaves the previous live copy in place (ADVICE r17)
-      restoreRetired(spark, live)
+      val liveP = new Path(live)
+      val fs = LakeIO.fsFor(spark, live)
+      // a crash between the two renames of a previous promotion leaves
+      // this table retired-only: restore the retired copy BEFORE any gate
+      // decision, so a quarantining run still leaves the previous live
+      // copy in place (ADVICE r17). Only that copy: the staged batch of
+      // the crashed run never passed the gate.
+      LakeIO.restore(fs, liveP, Seq(LakeIO.retired(liveP)))
       val df = spark.read.format("graft-rest")
         .option("url", src.url)
         .option("fields", src.fields.mkString(","))
@@ -156,7 +123,7 @@ object IngestFlow {
       df.write.mode("overwrite").parquet(staging)
       expectations.get(src.table) match {
         case None =>
-          promoteStaged(spark, staging, live)
+          LakeIO.swap(fs, new Path(staging), liveP, "promote")
           Some(live)
         case Some(suite) =>
           // ONE map-combined scan of the staged batch (the q20 shape);
@@ -186,17 +153,12 @@ object IngestFlow {
           }.getOrElse(static)
           val rows = rep.collect()
           if (rows.forall(_.getAs[Boolean]("pass"))) {
-            promoteStaged(spark, staging, live)
+            LakeIO.swap(fs, new Path(staging), liveP, "promote")
             Some(live)
           } else {
-            val fs = new org.apache.hadoop.fs.Path(staging)
-              .getFileSystem(spark.sessionState.newHadoopConf())
-            val qdir = s"$lakeDir/_quarantine/${src.table}.parquet"
-            val qP = new org.apache.hadoop.fs.Path(qdir)
-            fs.mkdirs(qP.getParent)
-            fs.delete(qP, true)
-            require(fs.rename(new org.apache.hadoop.fs.Path(staging), qP),
-              s"quarantine rename failed: $staging -> $qdir")
+            LakeIO.moveAside(fs, new Path(staging),
+              new Path(s"$lakeDir/_quarantine/${src.table}.parquet"),
+              "quarantine")
             import scala.jdk.CollectionConverters._
             spark.createDataFrame(rows.toSeq.asJava, rep.schema)
               .coalesce(1).write.mode("overwrite")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 
 import graft.operators.{AnnSearch, Dedup, TextSearch}
+import graft.sources.LakeIO
 
 /** Append-maintained silver tables for the expensive per-document index
   * artifacts — MinHash signatures and IVF list assignments.
@@ -50,7 +51,7 @@ object SilverIndex {
     * must mean "no index yet", not an error. */
   private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = LakeIO.fsFor(spark, path)
     // manual recursion so HIDDEN SUBTREES are skipped whole — a flat
     // recursive listing would see e.g. _checkpoint/offsets/0 (the
     // streaming checkpoint under the index path) as a data file, because
@@ -150,7 +151,7 @@ object SilverIndex {
     * count otherwise. */
   private def existingRows(spark: SparkSession, dir: String,
       existing: Option[DataFrame]): Long = existing.fold(0L) { df =>
-    val fs = hadoopFs(spark, dir)
+    val fs = LakeIO.fsFor(spark, dir)
     readMetaRows(fs, dir).getOrElse(df.count())
   }
 
@@ -170,7 +171,7 @@ object SilverIndex {
       .parquet(dir)
     val appended = obs.get("n").asInstanceOf[Long]
     val total = before + appended
-    val fs = hadoopFs(spark, dir)
+    val fs = LakeIO.fsFor(spark, dir)
     writeMetaRows(fs, dir, total)
     Refresh(appended, total)
   }
@@ -183,9 +184,6 @@ object SilverIndex {
   // intent, then a per-batch overwrite partition) and VERSIONED FOLD
   // ([[commitVersion]]/[[latestVersion]] — stage, one rename, retire).
   // [[onEachBatch]] drives any of them from Structured Streaming.
-
-  private def hadoopFs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** The ONE-ROW config probe: an append-only table keeps its config
     * columns uniform (every append writes the build's values), so one
@@ -283,13 +281,10 @@ object SilverIndex {
         .fold(ids)(ix =>
           ids.join(ix.select("doc"), Seq("doc"), "left_anti"))
         .localCheckpoint(true)
-      val fs = hadoopFs(spark, sigPath)
       val tmp = s"$sigPath/_intent/_tmp_batch$batchId"
       fresh.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val dst = new Path(intentDir)
-      if (fs.exists(dst)) fs.delete(dst, true) // pre-fix debris
-      require(fs.rename(new Path(tmp), dst),
-        s"intent commit rename failed: $tmp -> $intentDir")
+      LakeIO.commit(LakeIO.fsFor(spark, sigPath), new Path(tmp),
+        new Path(intentDir), "intent")
       fresh
     }
   }
@@ -321,9 +316,9 @@ object SilverIndex {
     * after it leaves an unretired old version that readers skip and the
     * next fold retires. An in-place overwrite would instead
     * delete the only copy before its job commits, silently losing the
-    * accumulated state (raw keys are never stored). Rename failures
-    * REPORT false rather than throw, hence the require: retiring after a
-    * failed rename would delete the only committed copy.
+    * accumulated state (raw keys are never stored). The rename is
+    * [[LakeIO.commit]], which throws on failure: retiring after a failed
+    * rename would delete the only committed copy.
     *
     * `batchId` picks the numbering:
     *  - Some(id), TRANSACTIONAL (the additive or non-idempotent folds):
@@ -340,7 +335,7 @@ object SilverIndex {
   private def commitVersion(spark: SparkSession, root: String,
       what: String, batchId: Option[Long] = None)(
       fold: Option[Long] => Option[(Long, String => Unit)]): Refresh = {
-    val fs = hadoopFs(spark, root)
+    val fs = LakeIO.fsFor(spark, root)
     val committed = versionsUnder(fs, root)
     val last = if (committed.isEmpty) -1L else committed.max
     if (batchId.exists(_ <= last)) return Refresh(0, last)
@@ -351,9 +346,7 @@ object SilverIndex {
         val tmp = s"$root/_tmp_v$nv"
         fs.delete(new Path(tmp), true)
         stage(tmp)
-        require(fs.rename(new Path(tmp), new Path(s"$root/v$nv")),
-          s"$what commit rename failed: $tmp -> $root/v$nv " +
-            "(old versions kept)")
+        LakeIO.commit(fs, new Path(tmp), new Path(s"$root/v$nv"), what)
         committed.foreach(v => fs.delete(new Path(s"$root/v$v"), true))
         Refresh(n, n)
     }
@@ -377,7 +370,7 @@ object SilverIndex {
     * orphan `_tmp_v<n>` is invisible. */
   private def latestVersion(spark: SparkSession, root: String,
       what: String): Long = {
-    val vs = versionsUnder(hadoopFs(spark, root), root)
+    val vs = versionsUnder(LakeIO.fsFor(spark, root), root)
     require(vs.nonEmpty, s"no committed $what under $root")
     vs.max
   }
@@ -800,7 +793,7 @@ object SilverIndex {
     * [[eraseSemanticLsh]]. */
   def refreshSemanticLsh(train: DataFrame, dim: Int, bits: Int,
       tables: Int, path: String): Refresh = {
-    val fs = hadoopFs(train.sparkSession, path)
+    val fs = LakeIO.fsFor(train.sparkSession, path)
     val r = appendNew(train, "doc", path, probe = probeConfig(_, path,
         "refresh requested", ("bits", col("bits"), bits),
         ("tables", col("tables"), tables), ("dim", col("dim"), dim))) {
@@ -837,7 +830,7 @@ object SilverIndex {
     * rather than infer it from row-count forensics. */
   def semanticLshRefreshPending(spark: SparkSession,
       path: String): Boolean =
-    hadoopFs(spark, path).exists(semIntentPath(path))
+    LakeIO.fsFor(spark, path).exists(semIntentPath(path))
 
   /** The signature table as stored: (doc, tbl, sig, bits, tables, dim). */
   def semanticLshIndex(spark: SparkSession, path: String): DataFrame =
@@ -980,7 +973,7 @@ object SilverIndex {
   def refreshPostings(docs: DataFrame, idCol: String, textCol: String,
       path: String): Refresh = {
     val spark = docs.sparkSession
-    val fs = hadoopFs(spark, path)
+    val fs = LakeIO.fsFor(spark, path)
     // was the doclen companion in sync BEFORE this append? (valid meta =
     // fast incremental path; anything else → one idempotent rebuild)
     val auxBefore = readBm25Meta(fs, path)
@@ -1065,7 +1058,7 @@ object SilverIndex {
     * recovery path covers legacy indexes, crashes between the two
     * appends, and out-of-band writes. */
   private def ensureBm25Aux(spark: SparkSession, path: String): Bm25Stats = {
-    val fs = hadoopFs(spark, path)
+    val fs = LakeIO.fsFor(spark, path)
     readBm25Meta(fs, path).getOrElse {
       spark.read.parquet(path)
         .groupBy("doc").agg(sum(col("tf")).as("len"))
@@ -1178,7 +1171,7 @@ object SilverIndex {
 
   private def loadCents(spark: SparkSession, path: String): DataFrame = {
     val dir = centPath(path)
-    val fp = fingerprint(hadoopFs(spark, dir), dir)
+    val fp = fingerprint(LakeIO.fsFor(spark, dir), dir)
     val hit = centCache.get(dir)
     val (rows, schema) = hit match {
       case Some((hfp, r, sch)) if hfp == fp => (r, sch)
@@ -1197,7 +1190,7 @@ object SilverIndex {
       built: DataFrame): Unit = {
     val dir = centPath(path)
     centCache.put(dir,
-      (fingerprint(hadoopFs(spark, dir), dir), built.collect(), built.schema))
+      (fingerprint(LakeIO.fsFor(spark, dir), dir), built.collect(), built.schema))
   }
 
   /** The frozen coarse quantizer at `path`: loaded (cached) once built,
@@ -1372,7 +1365,7 @@ object SilverIndex {
       : (Array[org.apache.spark.sql.Row],
          org.apache.spark.sql.types.DataType) = {
     val dir = bookPath(path)
-    val fp = fingerprint(hadoopFs(spark, dir), dir)
+    val fp = fingerprint(LakeIO.fsFor(spark, dir), dir)
     bookCache.get(dir) match {
       case Some((hfp, r, t)) if hfp == fp => (r, t)
       case _ =>
@@ -1543,7 +1536,7 @@ object SilverIndex {
       k: Int, path: String): Refresh = {
     val spark = batch.sparkSession
     val root = s"$path/sketch"
-    val fs = hadoopFs(spark, root)
+    val fs = LakeIO.fsFor(spark, root)
     // one-time migration from the pre-versioned layout (parquet files
     // directly under root): fold it in as the stored side WHEN no
     // version exists yet — silently ignoring it would restart the
@@ -1993,7 +1986,7 @@ object SilverIndex {
       attrCols: Seq[String], tsCol: String, path: String): Refresh = {
     require(attrCols.nonEmpty, "refreshScd2 needs at least one attribute")
     val spark = batch.sparkSession
-    val fs = hadoopFs(spark, path)
+    val fs = LakeIO.fsFor(spark, path)
     commitVersion(spark, path, "scd2", Some(batchId)) { lastV =>
       val last = lastV.getOrElse(-1L)
       // an orphaned closed/batch=N with last < N != batchId is a CRASHED
@@ -2187,7 +2180,7 @@ object SilverIndex {
     * migration note). */
   def kmvIndex(spark: SparkSession, path: String): DataFrame = {
     val root = s"$path/sketch"
-    val fs = hadoopFs(spark, root)
+    val fs = LakeIO.fsFor(spark, root)
     if (versionsUnder(fs, root).isEmpty && flatDataFiles(fs, root).nonEmpty)
       spark.read.parquet(root)
     else spark.read.parquet(
@@ -2270,8 +2263,8 @@ object SilverIndex {
 
   /** Rewrite the table at `dirStr` through `transform` (an erasure
     * anti-join, or the identity for compaction) with the staged-swap
-    * commit: the survivors land in a staging dir, then two renames swap
-    * them live — a crash leaves either the old or the new table, never a
+    * commit: the survivors land in a staging dir, then [[LakeIO.swap]]'s
+    * two renames swap them live — a crash leaves either the old or the new table, never a
     * half-deleted one, and a RERUN restores the surviving copy before
     * deleting anything. Both row counts ride Observations on the ONE
     * rewrite job (no separate count jobs); the row-count sidecar is
@@ -2289,27 +2282,20 @@ object SilverIndex {
       shape: DataFrame => DataFrame = identity)(
       transform: DataFrame => DataFrame): Erased = {
     val live = new Path(dirStr)
-    val fs = hadoopFs(spark, dirStr)
-    val staging = new Path(dirStr + "__compacting")
-    val retired = new Path(dirStr + "__retired")
-    // crash recovery BEFORE any delete: a prior run that died between its
-    // two renames leaves the live path empty with the only surviving
-    // copies at __retired (the old table) and possibly __compacting (the
-    // completed rewrite). Deleting those while the live dir is missing
-    // would be permanent data loss; restore one of them first.
-    // Preference: __retired (the known-good old table; the rerun below
-    // rewrites it anyway), else a staging dir — which is only a valid
-    // recovery source when the live table is GONE, i.e. the first rename
-    // committed, which implies the staging write completed.
-    if (!fs.exists(live)) {
-      val src = if (fs.exists(retired)) retired
-        else if (fs.exists(staging)) staging
-        else throw new IllegalStateException(
-          s"rewrite: no table at $live and nothing to recover")
-      require(fs.rename(src, live),
-        s"rewrite: could not restore $src to $live")
-    }
-    fs.delete(staging, true); fs.delete(retired, true)
+    val fs = LakeIO.fsFor(spark, dirStr)
+    val staging = LakeIO.compacting(live)
+    // crash recovery BEFORE any delete: a prior run that died between the
+    // swap's two renames leaves the live path empty with the only
+    // surviving copies retired (the old table) and possibly staged (the
+    // completed rewrite). Preference: the retired copy (the known-good
+    // old table; the rerun below rewrites it anyway), else the staged
+    // one — which is only a valid recovery source when the live table is
+    // GONE, i.e. the first rename committed, which implies the staging
+    // write completed.
+    if (!LakeIO.restore(fs, live, Seq(LakeIO.retired(live), staging)))
+      throw new IllegalStateException(
+        s"rewrite: no table at $live and nothing to recover")
+    fs.delete(staging, true)
     val obsB = org.apache.spark.sql.Observation()
     val obsK = org.apache.spark.sql.Observation()
     val src = spark.read.parquet(dirStr)
@@ -2318,10 +2304,7 @@ object SilverIndex {
     val w = out.write
     (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
       .parquet(staging.toString)
-    require(fs.rename(live, retired), s"rewrite: could not retire $live")
-    require(fs.rename(staging, live),
-      s"rewrite: could not activate $staging — old table at $retired")
-    fs.delete(retired, true)
+    LakeIO.swap(fs, staging, live, "rewrite")
     val before = obsB.get("n").asInstanceOf[Long]
     val kept = obsK.get("n").asInstanceOf[Long]
     writeMetaRows(fs, dirStr, kept)
@@ -2359,7 +2342,7 @@ object SilverIndex {
     val r = eraseKeyed(spark, path, "doc", subjects, subjectCol,
       shape = _.sortWithinPartitions(col("term")))
     eraseKeyed(spark, doclenPath(path), "doc", subjects, subjectCol)
-    val fs = hadoopFs(spark, path)
+    val fs = LakeIO.fsFor(spark, path)
     // readIfData: a FULL-corpus erasure leaves a dir with no data files
     // (empty writes emit no part files), which schema inference rejects
     val st = readIfData(spark, doclenPath(path)).fold(Bm25Stats(0L, 0L)) {
@@ -2440,7 +2423,7 @@ object SilverIndex {
     * could give. Cost is one corpus pass per compliance window —
     * batch the window's subjects, reset once. */
   def resetSketch(spark: SparkSession, path: String): Unit = {
-    hadoopFs(spark, path).delete(new Path(path), true)
+    LakeIO.fsFor(spark, path).delete(new Path(path), true)
     ()
   }
 
@@ -2479,9 +2462,7 @@ object SilverIndex {
     val (lists, rows, maxN) =
       (byList.getLong(0), Option(byList.get(1)).fold(0L)(_ => byList.getLong(1)),
         Option(byList.get(2)).fold(0L)(_ => byList.getLong(2)))
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = dataStats(fs, p)._1
+    val files = dataStats(LakeIO.fsFor(spark, dir), new Path(dir))._1
     val mean = if (lists == 0) 0.0 else rows.toDouble / lists
     val imb = if (mean == 0.0) 0.0 else maxN / mean
     IvfStats(lists, rows, files, maxN, mean, imb,
@@ -2519,7 +2500,7 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val stats = ivfStats(spark, path, imbalanceThreshold)
     if (stats.rebuildRecommended) {
-      val fs = hadoopFs(spark, path)
+      val fs = LakeIO.fsFor(spark, path)
       fs.delete(new Path(asgPath(path)), true)
       fs.delete(new Path(centPath(path)), true)
       refreshIvf(corpus, idCol, vecCol, nlist, path)
@@ -2570,7 +2551,7 @@ object SilverIndex {
     val spark = corpus.sparkSession
     val stats = ivfPqStats(spark, path, imbalanceThreshold)
     if (stats.rebuildRecommended) {
-      val fs = hadoopFs(spark, path)
+      val fs = LakeIO.fsFor(spark, path)
       fs.delete(new Path(codesPath(path)), true)
       fs.delete(new Path(bookPath(path)), true)
       fs.delete(new Path(centPath(path)), true)

@@ -19,8 +19,9 @@ import graft.queries.Tables.t
 object FuzzyQueries {
 
   /** 100·(1 − levenshtein/maxlen) as a double (matches DuckDB arithmetic
-    * bit-for-bit: integer distance and length, one divide, one multiply). */
-  private def levSim(a: Column, b: Column): Column =
+    * bit-for-bit: integer distance and length, one divide, one multiply).
+    * Shared with [[GoldQueries]]. */
+  private[queries] def levSim(a: Column, b: Column): Column =
     lit(100.0) * (lit(1.0) -
       levenshtein(a, b).cast("double") /
         greatest(length(a), length(b)).cast("double"))

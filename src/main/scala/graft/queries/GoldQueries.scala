@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Blocking, SimilarityJoin, SimilarityJoinConfig}
 import graft.queries.Tables.t
@@ -14,11 +14,6 @@ import graft.queries.Tables.t
   * can replay it bit-for-bit — the WRatio flavor of the same machinery is
   * covered by j2 + ScalaTest golden pairs. */
 object GoldQueries {
-
-  private def levSim(a: Column, b: Column): Column =
-    lit(100.0) * (lit(1.0) -
-      levenshtein(a, b).cast("double") /
-        greatest(length(a), length(b)).cast("double"))
 
   /** Fuzzy match `part` against itself as postings↔payroll (the testdata
     * has no payroll table; part carries a name + a money column, which is
@@ -39,8 +34,8 @@ object GoldQueries {
       col("p_retailprice").as("base_salary"))
     val cfg = SimilarityJoinConfig(
       leftKey = "business_title", rightKey = "title_description",
-      preScorer = levSim, preThreshold = 60.0,
-      scorer = levSim, scoreThreshold = 60.0,
+      preScorer = FuzzyQueries.levSim, preThreshold = 60.0,
+      scorer = FuzzyQueries.levSim, scoreThreshold = 60.0,
       blocking = Blocking.Exact, normalize = false,
       // P6 salary band (±10%) + no self-matches
       extraPredicate = Some(

@@ -82,15 +82,6 @@ object Bronze {
       .drop("__graft_mid", "__graft_pid", "__graft_rn", "__graft_off")
   }
 
-  /** Register one parquet file/dir as `bronze.<table>`.
-    *
-    * Default `refresh = false` is the reference's exact semantics —
-    * `CREATE TABLE IF NOT EXISTS` (utils.py:178-184), meaning a weekly
-    * re-ingestion that lands NEW data in the lake still serves LAST
-    * week's bronze (the reference's "refreshes on new data" log line
-    * notwithstanding, db_sync.py:55). `refresh = true` is the fix a real
-    * deployment wants: overwrite the table from the current lake
-    * artifact so re-ingestion propagates. */
   /** Move a managed table's default location ASIDE when it exists WITHOUT
     * a catalog entry. A run that died between writing files and committing
     * the catalog entry leaves this orphan behind, and `saveAsTable` /
@@ -111,7 +102,7 @@ object Bronze {
     if (!spark.catalog.tableExists(s"$db.$table")) {
       val dbLoc = spark.catalog.getDatabase(db).locationUri.stripSuffix("/")
       val loc = new org.apache.hadoop.fs.Path(s"$dbLoc/$table")
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = LakeIO.fsFor(spark, loc.toString)
       if (fs.exists(loc)) {
         val quarantine = new org.apache.hadoop.fs.Path(
           s"$dbLoc/$table.orphan-${System.currentTimeMillis()}")
@@ -119,12 +110,20 @@ object Bronze {
           s"$db.$table has no catalog entry but its location $loc exists " +
             s"(crashed earlier run, or a foreign catalog's table?) — " +
             s"quarantining to $quarantine before recreate")
-        if (!fs.rename(loc, quarantine))
-          throw new java.io.IOException(
-            s"failed to quarantine orphan table location $loc → $quarantine")
+        LakeIO.moveAside(fs, loc, quarantine,
+          "quarantine orphan table location")
       }
     }
 
+  /** Register one parquet file/dir as `bronze.<table>`.
+    *
+    * Default `refresh = false` is the reference's exact semantics —
+    * `CREATE TABLE IF NOT EXISTS` (utils.py:178-184), meaning a weekly
+    * re-ingestion that lands NEW data in the lake still serves LAST
+    * week's bronze (the reference's "refreshes on new data" log line
+    * notwithstanding, db_sync.py:55). `refresh = true` is the fix a real
+    * deployment wants: overwrite the table from the current lake
+    * artifact so re-ingestion propagates. */
   def register(spark: SparkSession, path: String, table: String,
       denseIdOrder: Option[Seq[String]] = None,
       refresh: Boolean = false): Unit = {

@@ -93,17 +93,30 @@ class FuzzyExpressionsSpec extends SparkTestBase {
     assert(rows.map(_.getString(1)).toSeq == Seq("abc", ""))
   }
 
+  // The case keeps the name it had when SimilarityJoin keyed on
+  // normalizeTitleCol, a composition of Spark built-ins; the join now calls
+  // normalize_title, so the composition checked here is that expression,
+  // through codegen and interpreted eval.
   test("normalizeTitleCol built-in composition agrees with kernel") {
     val s = spark
     import s.implicits._
+    // U+001F and U+2003 are Character.isWhitespace but not regex \s: the
+    // regexp_replace composition kept them as letters
     val inputs = Seq("  Senior,  Software-Engineer!! ", "POLICE OFFICER",
-      "a\tb   c", "!!!", "Dr. O'Neil-Smith (Acting)", "plain title")
-    val df = inputs.toDF("t")
-      .select(col("t"), normalizeTitleCol(col("t")).as("builtins"),
-        normTitle(col("t")).as("kernel"))
-    df.collect().foreach { case Row(t: String, bi: String, k: String) =>
-      assert(bi == k, s"mismatch for [$t]")
-      assert(k == FuzzyKernel.normalizeTitle(t))
+      "a\tb   c", "!!!", "Dr. O'Neil-Smith (Acting)", "plain title",
+      "a\u001Fb", "Data\u2003Analyst\u2003")
+    // the repartition keeps the projection out of the local-relation
+    // folding, so it runs in a generated stage
+    val df = inputs.toDF("t").repartition(2)
+      .select(col("t"), normTitle(col("t")).as("codegen"))
+    df.collect().foreach { case Row(t: String, cg: String) =>
+      val k = FuzzyKernel.normalizeTitle(t)
+      assert(cg == k, s"codegen mismatch for [$t]")
+      assert(NormalizeTitle(org.apache.spark.sql.catalyst.expressions
+        .Literal(t)).eval().toString == k, s"eval mismatch for [$t]")
     }
+    assert(FuzzyKernel.normalizeTitle("a\u001Fb") == "a b")
+    assert(FuzzyKernel.normalizeTitle("Data\u2003Analyst\u2003") ==
+      "data analyst")
   }
 }

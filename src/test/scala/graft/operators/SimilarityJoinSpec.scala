@@ -75,6 +75,18 @@ class SimilarityJoinSpec extends SparkTestBase {
     assert(run(Blocking.Exact) == expected)
   }
 
+  test("keys normalise with the kernel: a U+001F separator is whitespace") {
+    val s = spark
+    import s.implicits._
+    val l = Seq("a\u001Fb").toDF("business_title")
+    val r = Seq("a b").toDF("title_description")
+    val got = SimilarityJoin(l, r, SimilarityJoinConfig(
+      leftKey = "business_title", rightKey = "title_description",
+      blocking = Blocking.Exact))
+      .select("score").collect().map(_.getDouble(0)).toSeq
+    assert(got == Seq(100.0), s"scores: $got")
+  }
+
   test("token and ngram blocking match exact on this fixture") {
     val exact = run(Blocking.Exact)
     assert(run(Blocking.Token) == exact)
@@ -119,10 +131,10 @@ class SimilarityJoinSpec extends SparkTestBase {
       "auto salt engaged on a corpus under the pair budget")
     // and the derived factor is clamped to the cap
     import org.apache.spark.sql.functions._
-    val lt0 = jobs.select(graft.functions.normalizeTitleCol(
+    val lt0 = jobs.select(graft.functions.normalize_title(
         col("business_title")).as("__n"))
       .withColumn("__tok", explode(split(col("__n"), " ")))
-    val rt0 = payroll.select(graft.functions.normalizeTitleCol(
+    val rt0 = payroll.select(graft.functions.normalize_title(
         col("title_description")).as("__n"))
       .withColumn("__tok", explode(split(col("__n"), " ")))
     // hottest shared token here is "officer": 1 left key × 3 right keys

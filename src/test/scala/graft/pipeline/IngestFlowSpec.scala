@@ -353,4 +353,33 @@ class IngestFlowSpec extends SparkTestBase {
         "quarantines")
     assert(spark.read.parquet(live).count() == 6)
   }
+
+  test("ingest recovery restores only the retired copy: a completed " +
+      "staged batch with no live table is never promoted past a " +
+      "failing suite") {
+    import graft.operators.Expectations.Check
+    val s = spark
+    import s.implicits._
+    val lake = java.nio.file.Files.createTempDirectory("graft-stg").toString
+    val payrollSrc = IngestFlow.RestDataset(
+      "nyc_payroll_data", "synthetic://payroll",
+      Seq("title_description", "base_salary", "pay_basis",
+        "regular_gross_paid", "total_ot_paid", "total_other_pay",
+        "fiscal_year"),
+      pageSize = 2, maxPages = 8,
+      fetcherClass = classOf[PayrollPageFetcher].getName)
+    // the crash state: a finished staged batch of violating rows, no
+    // live table and no retired copy
+    Seq(("SOFTWARE ENGINEER", "-1")).toDF("title_description", "base_salary")
+      .write.parquet(s"$lake/_staging/nyc_payroll_data.parquet")
+    val fail = IngestFlow.runDataIngestion(spark, Seq(payrollSrc), lake,
+      Map("nyc_payroll_data" -> IngestFlow.TableExpectations(Seq(
+        Check("base_salary_nonneg",
+          col("base_salary").cast("double") >= 0),
+        Check("impossible", lit(false))))))
+    assert(fail.isEmpty)
+    val live = new org.apache.hadoop.fs.Path(s"$lake/nyc_payroll_data.parquet")
+    assert(!live.getFileSystem(spark.sessionState.newHadoopConf())
+      .exists(live), "an unaudited staged batch must never become live")
+  }
 }

@@ -19,6 +19,53 @@ class LakeIOSpec extends SparkTestBase {
     assert(spark.read.parquet(newest).head.getInt(0) == 2)
   }
 
+  test("stage-and-rename primitives: commit, swap, restore, moveAside") {
+    import org.apache.hadoop.fs.Path
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_commit").toString
+    val fs = LakeIO.fsFor(spark, dir)
+    def put(p: Path, v: Int): Unit =
+      Seq(v).toDF("v").write.mode("overwrite").parquet(p.toString)
+    def read(p: Path): Seq[Int] =
+      spark.read.parquet(p.toString).as[Int].collect().toSeq
+    // commit: debris at the destination is replaced, never nested into
+    val (tmp, dst) = (new Path(s"$dir/_tmp_v1"), new Path(s"$dir/v1"))
+    put(dst, 0); put(tmp, 1)
+    LakeIO.commit(fs, tmp, dst, "spec")
+    assert(read(dst) == Seq(1) && !fs.exists(tmp))
+    assert(fs.listStatus(dst).forall(_.isFile), "staged dir nested in debris")
+    // swap: onto a missing live, then over an existing one
+    val live = new Path(s"$dir/t.parquet")
+    val staged = new Path(s"$dir/_staging/t.parquet")
+    put(staged, 2)
+    LakeIO.swap(fs, staged, live, "spec")
+    put(staged, 3)
+    LakeIO.swap(fs, staged, live, "spec")
+    assert(read(live) == Seq(3))
+    assert(!fs.exists(staged) && !fs.exists(LakeIO.retired(live)))
+    // restore: live present is a no-op; with live gone the FIRST
+    // existing candidate wins; no candidate reports false
+    put(LakeIO.compacting(live), 4)
+    assert(LakeIO.restore(fs, live, Seq(LakeIO.compacting(live))))
+    assert(read(live) == Seq(3))
+    require(fs.rename(live, LakeIO.retired(live)))
+    assert(LakeIO.restore(fs, live,
+      Seq(LakeIO.retired(live), LakeIO.compacting(live))))
+    assert(read(live) == Seq(3) && fs.exists(LakeIO.compacting(live)))
+    fs.delete(live, true)
+    assert(!LakeIO.restore(fs, live, Seq(LakeIO.retired(live))))
+    // moveAside: into a fresh parent, replacing an older copy there
+    val aside = new Path(s"$dir/_quarantine/t.parquet")
+    LakeIO.moveAside(fs, LakeIO.compacting(live), aside, "spec")
+    put(staged, 5)
+    LakeIO.moveAside(fs, staged, aside, "spec")
+    assert(read(aside) == Seq(5) && !fs.exists(staged))
+    // a failed rename throws instead of reporting false
+    intercept[java.io.IOException](LakeIO.moveAside(fs,
+      new Path(s"$dir/missing"), new Path(s"$dir/elsewhere"), "spec"))
+  }
+
   test("lightcast csv loader types the analytics columns") {
     val dir = Files.createTempDirectory("graft_lc").toFile
     val csv = new java.io.File(dir, "lightcast.csv")

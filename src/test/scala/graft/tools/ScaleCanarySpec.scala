@@ -80,7 +80,7 @@ class ScaleCanarySpec extends SparkTestBase {
     import s.implicits._
     val toks: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       c => array_remove(array_distinct(
-        split(graft.functions.normalizeTitleCol(c), " ")), "")
+        split(graft.functions.normalize_title(c), " ")), "")
     val sharing = missed.toSeq.map(p => (p._1, p._2)).toDF("key_l", "key_r")
       .where(size(array_intersect(toks(col("key_l")), toks(col("key_r")))) > 0)
       .collect()
