@@ -11,10 +11,18 @@ import org.apache.spark.sql.SparkSession
   * /root/reference/logs/application.log.1).
   */
 object Sessions {
+
+  /** Local cores: `SPARK_GRAFT_CPUS` from `env` when set (a malformed
+    * value throws NumberFormatException), else the machine's core
+    * count. */
+  def defaultCores(env: collection.Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(
+      Runtime.getRuntime.availableProcessors())(_.toInt)
+
   def builder(
       appName: String = "graft",
       master: Option[String] = None,
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      shufflePartitions: Int = defaultCores())
       : SparkSession.Builder = {
     val b = SparkSession.builder()
       .appName(appName)
@@ -47,7 +55,7 @@ object Sessions {
 
   /** Local session for tests and benches. */
   def local(appName: String = "graft",
-            cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt): SparkSession = {
+            cores: Int = defaultCores()): SparkSession = {
     val spark = builder(appName, Some(s"local[$cores]"), math.max(cores, 4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftFunctions.register(spark)

@@ -1,18 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the correctness gate's DuckDB compare.
+  *
+  *   Verify <sfDir> <outDir> [name,…]
+  *
+  * Given names (comma-separated), only those queries and their oracles
+  * are written — a fast slice for `tools/oracle_check.py --no-verify`. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val spark = graft.Sessions.local("graft-verify",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val (sfDir, outDir, names) = args match {
+      case Array(sf, out) => (sf, out, SparkEntry.queries.keys.toSeq)
+      case Array(sf, out, only) => (sf, out, only.split(',').toSeq)
+    }
+    val spark = graft.Sessions.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // hashedQuery: the no-oracle queries' dump carries the content_hash
     // drift column (GOLDENS.json) — the gate's rows-only check is
     // unaffected, and the written parquet is diffable round over round
-    SparkEntry.queries.keys.foreach { name =>
+    names.foreach { name =>
       try SparkEntry.hashedQuery(name)(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -31,7 +37,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -375,7 +375,7 @@ object DedupQueries {
     // only — zero neighborhood recompute. The gate builds the index by
     // two incremental refreshes (even keys, then all) so maintained ≡
     // scratch runs every battery; d17's brute-force oracle applies
-    // VERBATIM. Streaming face: SilverIndex.streamingEditPairs (the s6
+    // VERBATIM. Streaming face: SilverIndex.editPairsBatch (the s6
     // exactly-once pair contract); erase face: eraseEditIndex (p6).
     "d18_edit_index" -> ((s, dir) =>
       graft.pipeline.SilverIndex.editPairsFromIndex(
@@ -406,7 +406,7 @@ object DedupQueries {
     // artifact THETA-FREE. The gate builds the index by two
     // incremental refreshes (even doc ids, then all) so maintained ≡
     // scratch runs every battery; d14's brute-force oracle applies
-    // VERBATIM. Streaming face: SilverIndex.streamingContainmentPairs
+    // VERBATIM. Streaming face: SilverIndex.containmentPairsBatch
     // (the s6 exactly-once pair contract); erase face:
     // eraseContainmentIndex (p6).
     "d20_containment_index" -> ((s, dir) =>
@@ -449,7 +449,7 @@ object DedupQueries {
     // index answers any audit radius. Serve ≡ scratch row-for-row —
     // the gate pins d4's golden content hash VERBATIM (the a14 ≡ a12
     // intentionally-equal precedent). Streaming face:
-    // SilverIndex.streamingSimhashPairs; erase: eraseSimhashIndex.
+    // SilverIndex.simhashPairsBatch; erase: eraseSimhashIndex.
     "d25_simhash_index" -> ((s, dir) =>
       graft.pipeline.SilverIndex.simhashPairsFromIndex(
         s, d25Path(s, dir), shingleN = 2, maxDist = 7)),
@@ -476,7 +476,7 @@ object DedupQueries {
     // (this entry's index is a second build at n = 2, d2's width).
     // Serve ≡ scratch row-for-row, so d2's brute-force string oracle
     // applies VERBATIM. Streaming face:
-    // SilverIndex.streamingJaccardPairs; erase face:
+    // SilverIndex.jaccardPairsBatch; erase face:
     // eraseContainmentIndex (p6, shared artifact).
     "d22_jaccard_index" -> ((s, dir) =>
       graft.pipeline.SilverIndex.jaccardPairsFromIndex(

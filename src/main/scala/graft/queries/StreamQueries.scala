@@ -1,7 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SQLContext,
+  SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.pipeline.SilverIndex
 import graft.streaming.EventsStream
 import graft.queries.Tables.t
 
@@ -10,368 +14,258 @@ import graft.queries.Tables.t
   * mode with MemoryStream). */
 object StreamQueries {
 
+  /** The s-family's replay scaffold: `batches` arrive on a MemoryStream of
+    * `A`, exposed with the columns `cols` to the query `start` begins,
+    * one micro-batch each (processAllAvailable after every add); the
+    * query stops when the replay ends or fails. The collected rows are
+    * the stream SOURCE only — the folds see ordinary executor-side
+    * batches, each costing ∝ its own rows. */
+  private def replay[A](s: SparkSession, batches: Seq[Seq[A]],
+      cols: String*)(start: DataFrame => StreamingQuery)(
+      implicit enc: Encoder[A]): Unit = {
+    implicit val sqlCtx: SQLContext = s.sqlContext
+    val source = MemoryStream[A]
+    val q = start(source.toDF().toDF(cols: _*))
+    try batches.foreach { b =>
+      source.addData(b)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** The replay's chunking: `rows` in order, as three micro-batches. */
+  private def thirds[A](rows: Array[A]): Seq[Seq[A]] =
+    rows.grouped(math.max(1, rows.length / 3 + 1))
+      .map(_.toIndexedSeq).toSeq
+
   /** A BM25 index maintained by REAL Structured Streaming (once per
     * JVM + sf dir — [[IndexMemo]]): the corpus arrives as three
-    * MemoryStream micro-batches folded into the persisted index by
-    * `SilverIndex.streamingRefreshPostings` (foreachBatch → the same
-    * incremental refresh the batch path uses; replay idempotence is
-    * StreamingIndexSpec's contract). The driver-side collect here is
-    * the stream SOURCE scaffold only — the index build itself sees
-    * ordinary executor-side batches, each costing ∝ its own docs. */
+    * micro-batches folded into the persisted index by
+    * [[SilverIndex.refreshPostings]] through [[SilverIndex.onEachBatch]]
+    * (the same incremental refresh the batch path uses; replay
+    * idempotence is StreamingIndexSpec's contract). */
   private[graft] def streamIndexPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streambm25:$dir") { p =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = t(s, dir, "documents")
         .select("doc_id", "text").as[(Long, String)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshPostings(
-        source.toDF().toDF("doc_id", "text"), "doc_id", "text", p)
-      try {
-        docs.grouped(math.max(1, docs.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(docs), "doc_id", "text")(rows =>
+        SilverIndex.onEachBatch(rows, p)((b, _) =>
+          SilverIndex.refreshPostings(b, "doc_id", "text", p)))
     }
 
   /** Near-dup pairs accumulated by REAL Structured Streaming (once per
-    * JVM + sf dir): the corpus arrives as three MemoryStream
-    * micro-batches through [[graft.pipeline.SilverIndex
-    * .streamingNearDupPairs]] — each batch appends its new signatures
-    * and emits only the pairs involving its new docs, so the
+    * JVM + sf dir): the corpus arrives as three micro-batches through
+    * [[SilverIndex.nearDupBatch]] — each batch appends its new
+    * signatures and emits only the pairs involving its new docs, so the
     * accumulated pairs table equals the from-scratch d3 batch run. */
   private[graft] def streamNearDupPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamneardup:$dir") { p =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = t(s, dir, "documents")
         .select("doc_id", "text").as[(Long, String)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.pipeline.SilverIndex.streamingNearDupPairs(
-        source.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        n = 2, numHashes = 64, rowsPerBand = 4, theta = 0.5,
-        s"$p/sig", s"$p/pairs")
-      try {
-        docs.grouped(math.max(1, docs.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(docs), "doc_id", "text")(rows =>
+        SilverIndex.onEachBatch(rows, s"$p/sig")(SilverIndex.nearDupBatch(
+          _, _, "doc_id", "text", n = 2, numHashes = 64, rowsPerBand = 4,
+          theta = 0.5, sigPath = s"$p/sig", pairsPath = s"$p/pairs")))
     }
 
   /** The Bloom bit set maintained by REAL Structured Streaming (once
     * per JVM + sf dir): the ordering customers' keys arrive as three
-    * MemoryStream micro-batches folded by [[graft.pipeline.SilverIndex
-    * .streamingRefreshBloom]]'s duplicate-insensitive UNION+DISTINCT
-    * merge. */
+    * micro-batches folded by [[SilverIndex.refreshBloom]]'s
+    * duplicate-insensitive UNION+DISTINCT merge. */
   private[graft] def streamBloomPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streambloom:$dir") { p =>
       import org.apache.spark.sql.functions.col
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = t(s, dir, "orders")
         .where(col("o_custkey").isNotNull)
         .select("o_custkey").as[Long].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Long]
-      val q = graft.pipeline.SilverIndex.streamingRefreshBloom(
-        source.toDF().toDF("o_custkey"), "o_custkey",
-        numHashes = 5, mBits = 8192, path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(rows), "o_custkey")(keys =>
+        SilverIndex.onEachBatch(keys, p)((b, _) => SilverIndex.refreshBloom(
+          b, "o_custkey", numHashes = 5, mBits = 8192, path = p)))
     }
 
   /** KMV sketches maintained by REAL Structured Streaming (once per
     * JVM + sf dir): (event_type, user_id) pairs arrive as three
-    * MemoryStream micro-batches folded into the sketch table by
-    * [[graft.pipeline.SilverIndex.streamingRefreshKmv]]'s
-    * union-truncate merge. */
+    * micro-batches folded into the sketch table by
+    * [[SilverIndex.refreshKmv]]'s union-truncate merge. */
   private[graft] def streamKmvPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamkmv:$dir") { p =>
       import org.apache.spark.sql.functions.col
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = t(s, dir, "events")
         .where(col("event_type").isNotNull && col("user_id").isNotNull)
         .select("event_type", "user_id").as[(String, Long)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Long)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshKmv(
-        source.toDF().toDF("event_type", "user_id"),
-        "event_type", "user_id", k = 128, path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(rows), "event_type", "user_id")(pairs =>
+        SilverIndex.onEachBatch(pairs, p)((b, _) => SilverIndex.refreshKmv(
+          b, "event_type", "user_id", k = 128, path = p)))
     }
 
   /** The k3 quantile sample maintained by REAL Structured Streaming
-    * (once per JVM + sf dir): events arrive as three MemoryStream
-    * micro-batches; each fold appends its hash-qualifying rows behind
-    * the id anti-join ([[graft.pipeline.SilverIndex
-    * .refreshQuantileSample]]). */
+    * (once per JVM + sf dir): events arrive as three micro-batches; each
+    * fold appends its hash-qualifying rows behind the id anti-join
+    * ([[SilverIndex.refreshQuantileSample]]). */
   private[graft] def streamQuantPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamquant:$dir") { p =>
       import org.apache.spark.sql.functions.col
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = t(s, dir, "events")
         .where(col("event_id").isNotNull && col("event_type").isNotNull &&
           col("value").isNotNull)
         .select("event_id", "event_type", "value")
         .as[(Long, String, Double)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String, Double)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshQuantileSample(
-        source.toDF().toDF("event_id", "event_type", "value"),
-        "event_id", "value", Seq("event_type"), "squant-r13",
-        rate = 0.25, path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(rows), "event_id", "event_type", "value")(events =>
+        SilverIndex.onEachBatch(events, p)((b, _) =>
+          SilverIndex.refreshQuantileSample(b, "event_id", "value",
+            Seq("event_type"), "squant-r13", rate = 0.25, path = p)))
     }
 
+  /** The k2 item stream (the first run of digits in `props`) replayed
+    * as three micro-batches into a Count-Min sketch of `width` × 4 at
+    * `p`, folded by [[SilverIndex.refreshCms]] under the batch-id
+    * exactly-once guard. */
+  private def replayCms(s: SparkSession, dir: String, p: String,
+      width: Int): Unit = {
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    import s.implicits._
+    val rows = t(s, dir, "events")
+      .select(regexp_extract(col("props"), "(\\d+)", 1).cast("int")
+        .as("item"))
+      .where(col("item").isNotNull)
+      .as[Int].collect()
+    replay(s, thirds(rows), "item")(items =>
+      SilverIndex.onEachBatch(items, p)(SilverIndex.refreshCms(
+        _, _, "item", width = width, depth = 4, path = p)))
+  }
+
   /** A Count-Min sketch maintained by REAL Structured Streaming (once
-    * per JVM + sf dir): the k2 item stream arrives as three
-    * MemoryStream micro-batches folded by [[graft.pipeline.SilverIndex
-    * .refreshCms]] under the batch-id exactly-once guard. */
+    * per JVM + sf dir): k2's width-32 sketch ([[replayCms]]). */
   private[graft] def streamCmsPath(s: SparkSession, dir: String): String =
-    IndexMemo.path(s"streamcms:$dir") { p =>
-      import org.apache.spark.sql.functions.{col, regexp_extract}
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .select(regexp_extract(col("props"), "(\\d+)", 1).cast("int")
-          .as("item"))
-        .where(col("item").isNotNull)
-        .as[Int].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Int]
-      val q = graft.pipeline.SilverIndex.streamingRefreshCms(
-        source.toDF().toDF("item"), "item", width = 32, depth = 4,
-        path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
-    }
+    IndexMemo.path(s"streamcms:$dir")(replayCms(s, dir, _, width = 32))
 
   /** The k7-shaped CMS (width 64) maintained by REAL Structured
     * Streaming (once per JVM + sf dir): the same item stream as
-    * [[streamCmsPath]] folded through [[graft.pipeline.SilverIndex
-    * .refreshCms]]'s batch-id transactional guard — the counters are
+    * [[streamCmsPath]] through [[replayCms]] — the counters are
     * additive, so the maintained table equals the batch
     * [[graft.operators.Sketches.cmsBuild]] exactly (the s9 contract at
     * k7's width). */
   private[graft] def streamHeavyPath(s: SparkSession, dir: String): String =
-    IndexMemo.path(s"streamheavy:$dir") { p =>
-      import org.apache.spark.sql.functions.{col, regexp_extract}
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .select(regexp_extract(col("props"), "(\\d+)", 1).cast("int")
-          .as("item"))
-        .where(col("item").isNotNull)
-        .as[Int].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Int]
-      val q = graft.pipeline.SilverIndex.streamingRefreshCms(
-        source.toDF().toDF("item"), "item", width = 64, depth = 4,
-        path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
-    }
+    IndexMemo.path(s"streamheavy:$dir")(replayCms(s, dir, _, width = 64))
+
+  /** The event log's (period, event_type) rows — `period` derived from
+    * `ts`, named `periodCol` — replayed as three micro-batches into the
+    * ledger at `p` by [[SilverIndex.refreshDriftLedger]]'s additive
+    * batch-id fold (the s9 discipline; counts can be neither
+    * merge-idempotent nor id-anti-joined). */
+  private def replayLedger[A](s: SparkSession, dir: String, p: String,
+      periodCol: String, period: Column)(
+      implicit enc: Encoder[(A, String)]): Unit = {
+    import org.apache.spark.sql.functions.col
+    val rows = t(s, dir, "events")
+      .where(col("ts").isNotNull && col("event_type").isNotNull)
+      .select(period.as(periodCol), col("event_type"))
+      .as[(A, String)].collect()
+    replay(s, thirds(rows), periodCol, "event_type")(events =>
+      SilverIndex.onEachBatch(events, p)(SilverIndex.refreshDriftLedger(
+        _, _, periodCol, "event_type", path = p)))
+  }
 
   /** The week-over-week (period, category) drift LEDGER maintained by
-    * real Structured Streaming (once per JVM + sf dir): the event feed
-    * arrives as three micro-batches through the additive batch-id
-    * transactional fold ([[graft.pipeline.SilverIndex
-    * .refreshDriftLedger]] — the s9 discipline; counts can be neither
-    * merge-idempotent nor id-anti-joined). The maintained ledger
-    * equals the batch build, so x13's oracle applies verbatim to the
-    * served report. */
+    * real Structured Streaming (once per JVM + sf dir,
+    * [[replayLedger]]). The maintained ledger equals the batch build, so
+    * x13's oracle applies verbatim to the served report. */
   private[graft] def streamDriftPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamdrift:$dir") { p =>
       import org.apache.spark.sql.functions.{col, date_trunc}
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .where(col("ts").isNotNull && col("event_type").isNotNull)
-        .select(date_trunc("week", col("ts")).cast("date").as("wk"),
-          col("event_type"))
-        .as[(java.sql.Date, String)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Date, String)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshDriftLedger(
-        source.toDF().toDF("wk", "event_type"), "wk", "event_type",
-        path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replayLedger[java.sql.Date](s, dir, p, "wk",
+        date_trunc("week", col("ts")).cast("date"))
     }
 
   /** The DAILY (day, event_type) volume ledger maintained by real
     * Structured Streaming (once per JVM + sf dir) — the s15 weekly
-    * machinery at day granularity, via the SAME
-    * `refreshDriftLedger` additive batch-id fold. One stored artifact
-    * answers the volume question ([[graft.operators.Drift
-    * .levelShiftFromLedger]] sums it over categories) and could serve
-    * a daily TV mix report from the same rows — maintain once, monitor
-    * twice. */
+    * machinery at day granularity, via the SAME [[replayLedger]] fold.
+    * One stored artifact answers the volume question
+    * ([[graft.operators.Drift.levelShiftFromLedger]] sums it over
+    * categories) and could serve a daily TV mix report from the same
+    * rows — maintain once, monitor twice. */
   private[graft] def streamVolumePath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamvolume:$dir") { p =>
       import org.apache.spark.sql.functions.{col, date_trunc}
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .where(col("ts").isNotNull && col("event_type").isNotNull)
-        .select(date_trunc("day", col("ts")).cast("date").as("day"),
-          col("event_type"))
-        .as[(java.sql.Date, String)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Date, String)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshDriftLedger(
-        source.toDF().toDF("day", "event_type"), "day", "event_type",
-        path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replayLedger[java.sql.Date](s, dir, p, "day",
+        date_trunc("day", col("ts")).cast("date"))
     }
 
   /** The HOURLY (hour, event_type) volume ledger maintained by real
     * Structured Streaming (once per JVM + sf dir) — the s15/s17 daily
-    * machinery at hour granularity, via the SAME `refreshDriftLedger`
-    * additive batch-id fold; x9's burst monitor serves from it
+    * machinery at hour granularity, via the SAME [[replayLedger]] fold;
+    * x9's burst monitor serves from it
     * ([[graft.operators.Burst.hourlyBurstsFromLedger]]) instead of
     * rescanning raw events per run (VERDICT r18 task 5). */
   private[graft] def streamHourlyPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamhourly:$dir") { p =>
       import org.apache.spark.sql.functions.{col, date_trunc}
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val rows = t(s, dir, "events")
-        .where(col("ts").isNotNull && col("event_type").isNotNull)
-        .select(date_trunc("hour", col("ts")).as("hour"),
-          col("event_type"))
-        .as[(java.sql.Timestamp, String)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshDriftLedger(
-        source.toDF().toDF("hour", "event_type"), "hour", "event_type",
-        path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replayLedger[java.sql.Timestamp](s, dir, p, "hour",
+        date_trunc("hour", col("ts")))
     }
 
   /** The c28 semantic-decontamination POSTINGS maintained by real
     * Structured Streaming (once per JVM + sf dir): the union corpus
     * (train docs + planted-paraphrase eval items — CurationQueries
-    * .semanticUnion, shared with c28) arrives as three MemoryStream
-    * micro-batches through `streamingRefreshPostings` (the s5 id-anti-
-    * join discipline — postings are per-doc deterministic, so delta ≡
+    * .semanticUnion, shared with c28) arrives as three micro-batches
+    * through [[SilverIndex.refreshPostings]] (the s5 id-anti-join
+    * discipline — postings are per-doc deterministic, so delta ≡
     * scratch exactly). The IDF weighting recomputes from the postings
     * at SERVE time, so no frozen-vectorizer approximation is needed:
     * the served manifest equals c28's scratch build row-for-row. */
   private[graft] def streamSemanticPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamsemantic:$dir") { p =>
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val docs = CurationQueries.semanticUnion(s, dir)
         .as[(Long, String)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, String)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshPostings(
-        source.toDF().toDF("id", "text"), "id", "text", p)
-      try {
-        docs.grouped(math.max(1, docs.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(docs), "id", "text")(rows =>
+        SilverIndex.onEachBatch(rows, p)((b, _) =>
+          SilverIndex.refreshPostings(b, "id", "text", p)))
     }
 
   /** The banded semantic-decontam index + flagged-pair log maintained
     * by REAL Structured Streaming (once per JVM + sf dir): the TRAIN
     * side of the shared-fit TF-IDF triples (CurationQueries.semanticW,
-    * the frozen fit c28/c30/c31 all read) arrives as three MemoryStream
+    * the frozen fit c28/c30/c31 all read) arrives as three
     * micro-batches — chunked on DOC boundaries (doc % 3), because a
     * doc's triples split across batches would band a partial vector —
-    * through `streamingSemanticPairs` (the s6 transaction-intent
-    * protocol over hyperplane signatures: intent, signature+vector
-    * append for new docs only, exactly the pairs naming them into a
-    * per-batch overwrite partition). The eval side is the frozen
-    * benchmark frame, so the accumulated pairs equal the index serve
-    * (and the scratch banded operator) EXACTLY — SilverIndexSpec pins
-    * all three faces pairwise. Returns (sigPath, pairsPath). */
+    * through [[SilverIndex.semanticPairsBatch]] (the s6
+    * transaction-intent protocol over hyperplane signatures: intent,
+    * signature+vector append for new docs only, exactly the pairs
+    * naming them into a per-batch overwrite partition). The eval side
+    * is the frozen benchmark frame, so the accumulated pairs equal the
+    * index serve (and the scratch banded operator) EXACTLY —
+    * SilverIndexSpec pins all three faces pairwise. The index lives
+    * under `sigs`, the pairs under `pairs`. */
   private[graft] def streamSemanticLshPath(s: SparkSession,
       dir: String): String =
     IndexMemo.path(s"streamsemanticlsh:$dir") { p =>
       import org.apache.spark.sql.functions.col
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val w = CurationQueries.semanticW(s, dir)
       val isEval = CurationQueries.semanticIsEval
       val evalTriples = w.where(isEval)
       val train = w.where(!isEval)
         .select(col("doc"), col("bucket"), col("weight"))
         .as[(Long, Long, Double)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, Long, Double)]
-      val q = graft.pipeline.SilverIndex.streamingSemanticPairs(
-        source.toDF().toDF("doc", "bucket", "weight"), evalTriples,
-        theta = 0.9, dim = 256, bits = 10, tables = 12,
-        sigPath = s"$p/sigs", pairsPath = s"$p/pairs")
-      try {
-        (0 until 3).foreach { i =>
-          source.addData(train.filter(_._1 % 3 == i).toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, (0 until 3).map(i => train.filter(_._1 % 3 == i).toSeq),
+          "doc", "bucket", "weight")(triples =>
+        SilverIndex.onEachBatch(triples, s"$p/sigs")(
+          SilverIndex.semanticPairsBatch(_, _, evalTriples,
+            theta = 0.9, dim = 256, bits = 10, tables = 12,
+            sigPath = s"$p/sigs", pairsPath = s"$p/pairs")))
     }
 
   /** Closed visits accumulated by REAL Structured Streaming (once per
     * JVM + sf dir): the event log arrives as three TIME-ORDERED
-    * MemoryStream micro-batches through [[graft.streaming.EventsStream
+    * micro-batches through [[graft.streaming.EventsStream
     * .sessionizeStatefulStream]] — `flatMapGroupsWithState` keyed by
     * user, one OpenVisit row of state each, visits emitted on gap
     * break and flushed by EVENT-TIME TIMEOUT. Two sentinel ticks end
@@ -385,51 +279,29 @@ object StreamQueries {
     IndexMemo.path(s"streamsessions:$dir") { p =>
       import org.apache.spark.sql.functions.col
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = t(s, dir, "events")
         .where(col("user_id").isNotNull && col("ts").isNotNull &&
           col("event_id").isNotNull)
         .select("user_id", "ts", "event_id")
         .orderBy(col("ts"), col("event_id"))
         .as[(Long, java.sql.Timestamp, Long)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long)]
       val gapUs = 30L * 60 * 1000000
-      val q = graft.streaming.EventsStream.sessionizeStatefulStream(
-          s, source.toDF().toDF("user_id", "ts", "event_id"),
-          gapMicros = gapUs, flushUser = Some(-1L))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            graft.streaming.EventsStream.Visit], id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$p/sessions/batch=$id")
-          ()
-        }
-        .option("checkpointLocation", s"$p/_checkpoint")
-        .start()
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-        // flush ticks anchor past the LAST event (rows arrive sorted);
-        // an empty corpus has nothing to flush — and rows.last would
-        // throw before the reader could return its empty result
-        if (rows.nonEmpty) {
-          val lastMs = rows.last._2.getTime
-          Seq(1L, 2L).foreach { k =>
-            source.addData(Seq((-1L,
-              new java.sql.Timestamp(lastMs + gapUs / 1000 + k * 3600000L),
-              -1L)))
-            q.processAllAvailable()
-          }
-        }
-      } finally q.stop()
-      ()
+      // flush ticks anchor past the LAST event (rows arrive sorted); an
+      // empty corpus has nothing to flush
+      val ticks = rows.lastOption.toSeq.flatMap { last =>
+        Seq(1L, 2L).map(k => Seq((-1L, new java.sql.Timestamp(
+          last._2.getTime + gapUs / 1000 + k * 3600000L), -1L)))
+      }
+      replay(s, thirds(rows) ++ ticks, "user_id", "ts", "event_id")(events =>
+        SilverIndex.onEachBatch(EventsStream.sessionizeStatefulStream(
+            s, events, gapMicros = gapUs, flushUser = Some(-1L)).toDF(), p)(
+          (b, id) => b.write.mode("overwrite")
+            .parquet(s"$p/sessions/batch=$id")))
     }
 
   /** Funnel completions accumulated by REAL Structured Streaming (once
     * per JVM + sf dir): the event log arrives as three TIME-ORDERED
-    * MemoryStream micro-batches through [[graft.streaming.EventsStream
+    * micro-batches through [[graft.streaming.EventsStream
     * .funnelStatefulStream]] — one 2k-long state row per participating
     * user, a Completion emitted exactly once when the final step's
     * EVENT arrives. No timeouts and therefore NO flush ticks: an
@@ -441,61 +313,35 @@ object StreamQueries {
     IndexMemo.path(s"streamfunnel:$dir") { p =>
       import org.apache.spark.sql.functions.col
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = t(s, dir, "events")
         .where(col("user_id").isNotNull && col("ts").isNotNull &&
           col("event_type").isNotNull)
         .select("user_id", "ts", "event_type")
         .orderBy(col("ts"), col("user_id"), col("event_type"))
         .as[(Long, java.sql.Timestamp, String)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, String)]
-      val q = graft.streaming.EventsStream.funnelStatefulStream(
-          s, source.toDF().toDF("user_id", "ts", "event_type"),
-          steps = Seq("view", "click", "purchase"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            graft.streaming.EventsStream.Completion], id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$p/completions/batch=$id")
-          ()
-        }
-        .option("checkpointLocation", s"$p/_checkpoint")
-        .start()
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(rows), "user_id", "ts", "event_type")(events =>
+        SilverIndex.onEachBatch(EventsStream.funnelStatefulStream(
+            s, events, steps = Seq("view", "click", "purchase")).toDF(), p)(
+          (b, id) => b.write.mode("overwrite")
+            .parquet(s"$p/completions/batch=$id")))
     }
 
   /** HLL registers maintained by REAL Structured Streaming (once per
     * JVM + sf dir): k5's (event_type, user_id) rows arrive as three
-    * MemoryStream micro-batches folded by [[graft.pipeline.SilverIndex
-    * .refreshHll]]'s per-bucket-max merge — order- and
-    * duplicate-insensitive (the s7 family), so the maintained register
-    * table equals the from-scratch batch build. */
+    * micro-batches folded by [[SilverIndex.refreshHll]]'s
+    * per-bucket-max merge — order- and duplicate-insensitive (the s7
+    * family), so the maintained register table equals the
+    * from-scratch batch build. */
   private[graft] def streamHllPath(s: SparkSession, dir: String): String =
     IndexMemo.path(s"streamhll:$dir") { p =>
       import org.apache.spark.sql.functions.col
       import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val rows = t(s, dir, "events")
         .where(col("event_type").isNotNull && col("user_id").isNotNull)
         .select("event_type", "user_id").as[(String, Long)].collect()
-      val source = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(String, Long)]
-      val q = graft.pipeline.SilverIndex.streamingRefreshHll(
-        source.toDF().toDF("event_type", "user_id"),
-        Seq("event_type"), "user_id", path = p)
-      try {
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          source.addData(chunk.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      ()
+      replay(s, thirds(rows), "event_type", "user_id")(pairs =>
+        SilverIndex.onEachBatch(pairs, p)((b, _) => SilverIndex.refreshHll(
+          b, Seq("event_type"), "user_id", path = p)))
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

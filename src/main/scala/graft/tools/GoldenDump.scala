@@ -16,8 +16,7 @@ object GoldenDump {
     val out = args.headOption.getOrElse("GOLDENS.json")
     val dirs = if (args.length > 1) args.drop(1).toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-    val spark = graft.Sessions.local("golden-dump",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = graft.Sessions.local("golden-dump")
     val entries = for {
       dir <- dirs
       name <- graft.SparkEntry.noOracleHashed.toSeq.sorted

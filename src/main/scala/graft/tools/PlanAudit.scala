@@ -3,11 +3,43 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Writes formatted physical plans for headline queries to PLANS.md —
-  * the pushdown/pruning/broadcast audit
-  * (run: `sbt "runMain graft.tools.PlanAudit"`). Writing the file
-  * directly (instead of redirecting sbt stdout) keeps log/stderr noise
-  * out of the committed doc. */
+  * the pushdown/pruning/broadcast audit. Writing the file directly
+  * (instead of redirecting sbt stdout) keeps log/stderr noise out of the
+  * committed doc.
+  *
+  *   sbt "runMain graft.tools.PlanAudit [out] [name,…]"
+  *
+  * Given names, only those sections are re-rendered and spliced into
+  * the existing `out` ([[splice]]); every other byte stays. Per-run
+  * tokens are masked ([[mask]]), so a rerun over unchanged code churns
+  * only the plan and expression ids Spark numbers per session. */
 object PlanAudit {
+
+  private def header(name: String) = s"================ $name ================\n"
+
+  /** `doc` with each named section's body — the text after its header
+    * line up to the next header, or the end — replaced by
+    * `bodies(name)`; every other byte unchanged. A name with no section
+    * in `doc` throws. */
+  private[graft] def splice(doc: String, bodies: Seq[(String, String)])
+      : String =
+    bodies.foldLeft(doc) { case (d, (name, body)) =>
+      val h = "\n" + header(name)
+      val at = d.indexOf(h)
+      require(at >= 0, s"no section $name to splice")
+      val from = at + h.length
+      val next = d.indexOf("\n================ ", from)
+      val to = if (next < 0) d.length else next
+      d.substring(0, from) + body + d.substring(to)
+    }
+
+  /** Plan text with its per-run tokens replaced by stable placeholders:
+    * JVM identity hashes of array literals (`[D@2eb6e166` → `[D@<hash>`)
+    * and the IndexMemo temp root (`graft-ix<digits>` → `graft-ix<root>`). */
+  private[graft] def mask(plan: String): String =
+    plan.replaceAll("""(\[+(?:[ZBCSIJFD]|L[\w.$]+;))@[0-9a-f]+""", "$1@<hash>")
+      .replaceAll("""graft-ix\d+""", "graft-ix<root>")
+
   def main(args: Array[String]): Unit = {
     val spark = graft.Sessions.local("plan-audit", 8)
     spark.sparkContext.setLogLevel("ERROR")
@@ -60,17 +92,19 @@ object PlanAudit {
       "d20_containment_index", "s20_stream_bursts", "d21_containment_served",
       "d22_jaccard_index", "d23_quality_served", "d24_char_jaccard_index",
       "d25_simhash_index")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans for headline queries\n")
-    sb.append(s"\nGenerated by `sbt \"runMain graft.tools.PlanAudit\"` at $dir.\n")
-    interesting.foreach { name =>
-      sb.append(s"\n================ $name ================\n")
-      sb.append(graft.SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-      sb.append("\n")
+    def body(name: String): String =
+      mask(graft.SparkEntry.queries(name)(spark, dir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)) + "\n"
+    val path = java.nio.file.Paths.get(out)
+    val text = args.lift(1).map(_.split(',').toSeq) match {
+      case Some(names) => splice(java.nio.file.Files.readString(path),
+        names.map(n => n -> body(n)))
+      case None =>
+        "# PLANS — formatted physical plans for headline queries\n" +
+          s"\nGenerated by `sbt \"runMain graft.tools.PlanAudit\"` at $dir.\n" +
+          interesting.map(n => "\n" + header(n) + body(n)).mkString
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      sb.toString.getBytes("UTF-8"))
+    java.nio.file.Files.writeString(path, text)
     println(s"wrote $out")
     spark.stop()
   }

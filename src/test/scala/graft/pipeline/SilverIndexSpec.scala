@@ -661,12 +661,13 @@ class SilverIndexSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getInt(1),
         new String(r.getAs[Array[Byte]](2), "UTF-8")))
     val input = MemoryStream[(Long, Int, String)]
-    val q = SilverIndex.streamingFramePairs(
+    val q = SilverIndex.onEachBatch(
       input.toDF().toDF("doc_id", "frame_idx", "txt")
         .select(col("doc_id"), col("frame_idx"),
-          encode(col("txt"), "UTF-8").as("frame")),
-      "doc_id", "frame_idx", "frame", frameStride = 100000L,
-      maxDist = 2, sigPath, pairsPath)
+          encode(col("txt"), "UTF-8").as("frame")), sigPath)(
+      SilverIndex.frameNearDupBatch(_, _, "doc_id", "frame_idx", "frame",
+        frameStride = 100000L, maxDist = 2, sigPath = sigPath,
+        pairsPath = pairsPath))
     try {
       // docs 1 and 3 first (no pair), then the twins 2 and 4: all
       // three pairs surface in batch 2 — each exactly once
@@ -767,9 +768,10 @@ class SilverIndexSpec extends SparkTestBase {
     val sigPath = tmp("silver-edit-sig")
     val pairsPath = tmp("silver-edit-pairs")
     val input = MemoryStream[(Long, String)]
-    val q = SilverIndex.streamingEditPairs(
-      input.toDF().toDF("id", "name"), "id", "name", maxDist = 1,
-      sigPath = sigPath, pairsPath = pairsPath)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("id", "name"),
+      sigPath)(SilverIndex.editPairsBatch(_, _, "id", "name", maxDist = 1,
+        maxVariantOcc = Long.MaxValue, sigPath = sigPath,
+        pairsPath = pairsPath))
     try {
       // 1 and 3 first (no pair), then 2 and 4: all three pairs surface
       // in batch 1 — each exactly once
@@ -896,9 +898,9 @@ class SilverIndexSpec extends SparkTestBase {
     val sigPath = tmp("silver-containment-sig")
     val pairsPath = tmp("silver-containment-pairs")
     val input = MemoryStream[(Long, String)]
-    val q = SilverIndex.streamingContainmentPairs(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", n = 3,
-      theta = 0.5, sigPath = sigPath, pairsPath = pairsPath)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("doc_id", "text"),
+      sigPath)(SilverIndex.containmentPairsBatch(_, _, "doc_id", "text",
+        n = 3, theta = 0.5, sigPath = sigPath, pairsPath = pairsPath))
     try {
       // 1 and 3 first (no pair), then 2 and 4: all three pairs surface
       // in batch 1 — each exactly once
@@ -1039,10 +1041,10 @@ class SilverIndexSpec extends SparkTestBase {
     val sigPath = tmp("silver-simhash-sig")
     val pairsPath = tmp("silver-simhash-pairs")
     val input = MemoryStream[(Long, String)]
-    val q = SilverIndex.streamingSimhashPairs(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      shingleN = 2, maxDist = 7, sigPath = sigPath,
-      pairsPath = pairsPath)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("doc_id", "text"),
+      sigPath)(SilverIndex.simhashPairsBatch(_, _, "doc_id", "text",
+        shingleN = 2, maxDist = 7, sigPath = sigPath,
+        pairsPath = pairsPath))
     try {
       input.addData((1L, "alpha beta gamma delta epsilon zeta eta"),
         (3L, "one two three four five six"))
@@ -1129,9 +1131,9 @@ class SilverIndexSpec extends SparkTestBase {
     val sigPath = tmp("silver-jaccard-sig")
     val pairsPath = tmp("silver-jaccard-pairs")
     val input = MemoryStream[(Long, String)]
-    val q = SilverIndex.streamingJaccardPairs(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", n = 2,
-      theta = 0.5, sigPath = sigPath, pairsPath = pairsPath)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("doc_id", "text"),
+      sigPath)(SilverIndex.jaccardPairsBatch(_, _, "doc_id", "text",
+        n = 2, theta = 0.5, sigPath = sigPath, pairsPath = pairsPath))
     try {
       // batch 0: 1 and 3 — no pair yet; batch 1: 2 and 4 — the
       // cross-batch pairs (1,2), (1,4) and the in-batch pair (2,4)
@@ -1270,8 +1272,8 @@ class SilverIndexSpec extends SparkTestBase {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val path = tmp("silver-cc-stream")
     val input = MemoryStream[(Long, Long)]
-    val q = SilverIndex.streamingRefreshComponents(
-      input.toDF().toDF("doc_a", "doc_b"), "doc_a", "doc_b", path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("doc_a", "doc_b"),
+      path)(SilverIndex.refreshComponents(_, _, "doc_a", "doc_b", path))
     try {
       input.addData((1L, 2L), (4L, 5L))
       q.processAllAvailable()
@@ -1426,10 +1428,11 @@ class SilverIndexSpec extends SparkTestBase {
     val sigPath = tmp("silver-semantic-sig")
     val pairsPath = tmp("silver-semantic-pairs")
     val input = MemoryStream[(Long, Long, Double)]
-    val q = SilverIndex.streamingSemanticPairs(
-      input.toDF().toDF("doc", "bucket", "weight"), synEvalTriples,
-      theta = 0.9, dim = 8, bits = 6, tables = 4,
-      sigPath = sigPath, pairsPath = pairsPath)
+    val q = SilverIndex.onEachBatch(
+      input.toDF().toDF("doc", "bucket", "weight"), sigPath)(
+      SilverIndex.semanticPairsBatch(_, _, synEvalTriples,
+        theta = 0.9, dim = 8, bits = 6, tables = 4,
+        sigPath = sigPath, pairsPath = pairsPath))
     try {
       // doc 4 first (no pair), then 1–3: their pairs surface in batch
       // 1 — each exactly once (doc triples arrive whole, the s19

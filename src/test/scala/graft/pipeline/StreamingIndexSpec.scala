@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.operators.TextSearch
 
-/** Continuous index maintenance ([[SilverIndex.streamingRefresh]]):
+/** Continuous index maintenance ([[SilverIndex.onEachBatch]]):
   * micro-batches fold into the index through the same exact batch
   * refreshes, so (1) the streamed index equals the from-scratch build
   * over everything that arrived, and (2) a REPLAYED batch (foreachBatch
@@ -30,8 +30,9 @@ class StreamingIndexSpec extends SparkTestBase {
   test("streamed postings == from-scratch; replayed batch appends zero") {
     val path = tmp("stream-postings")
     val input = MemoryStream[(Long, String)]
-    val q = SilverIndex.streamingRefreshPostings(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", path)
+    val q = SilverIndex.onEachBatch(
+      input.toDF().toDF("doc_id", "text"), path)(
+      (b, _) => SilverIndex.refreshPostings(b, "doc_id", "text", path))
     try {
       input.addData(docs.take(3): _*)
       q.processAllAvailable()
@@ -50,10 +51,10 @@ class StreamingIndexSpec extends SparkTestBase {
     // the worst-case at-least-once failure mode. The index must not grow.
     val before = SilverIndex.postingsIndex(spark, path).count()
     val replay = MemoryStream[(Long, String)]
-    val q2 = SilverIndex.streamingRefresh(
+    val q2 = SilverIndex.onEachBatch(
       replay.toDF().toDF("doc_id", "text"),
       tmp("stream-postings-replay-ckpt"))( // checkpoint elsewhere, same index
-      b => SilverIndex.refreshPostings(b, "doc_id", "text", path))
+      (b, _) => SilverIndex.refreshPostings(b, "doc_id", "text", path))
     try {
       replay.addData(docs: _*)
       q2.processAllAvailable()
@@ -87,9 +88,10 @@ class StreamingIndexSpec extends SparkTestBase {
 
     val streamPath = tmp("stream-ivf")
     val input = MemoryStream[(Long, Array[Float])]
-    val q = SilverIndex.streamingRefreshIvf(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      nlist = 8, path = streamPath)
+    val q = SilverIndex.onEachBatch(
+      input.toDF().toDF("vec_id", "embedding"), streamPath)(
+      (b, _) => SilverIndex.refreshIvf(b, "vec_id", "embedding",
+        nlist = 8, path = streamPath))
     try {
       input.addData(batch1: _*)
       q.processAllAvailable() // trains + freezes the quantizer
@@ -139,9 +141,10 @@ class StreamingIndexSpec extends SparkTestBase {
 
     val streamPath = tmp("stream-ivfpq")
     val input = MemoryStream[(Long, Array[Float])]
-    val q = SilverIndex.streamingRefreshIvfPq(
-      input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-      nlist = 8, m = 8, ksub = 16, path = streamPath)
+    val q = SilverIndex.onEachBatch(
+      input.toDF().toDF("vec_id", "embedding"), streamPath)(
+      (b, _) => SilverIndex.refreshIvfPq(b, "vec_id", "embedding",
+        nlist = 8, m = 8, ksub = 16, path = streamPath))
     try {
       input.addData(batch1: _*)
       q.processAllAvailable() // trains + freezes BOTH quantizers
@@ -165,8 +168,8 @@ class StreamingIndexSpec extends SparkTestBase {
     val path = tmp("stream-kmv")
     val rows = (0L until 300L).map(i => (s"g${i % 3}", i % 97))
     val input = MemoryStream[(String, Long)]
-    val q = SilverIndex.streamingRefreshKmv(
-      input.toDF().toDF("grp", "key"), "grp", "key", k = 16, path = path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("grp", "key"), path)(
+      (b, _) => SilverIndex.refreshKmv(b, "grp", "key", k = 16, path = path))
     try {
       // adversarial chunking: overlapping duplicates across batches
       input.addData(rows.take(200): _*)
@@ -197,9 +200,9 @@ class StreamingIndexSpec extends SparkTestBase {
     val path = tmp("stream-bloom")
     val keys = (0L until 500L).map(i => i * 3L)
     val input = MemoryStream[Long]
-    val q = SilverIndex.streamingRefreshBloom(
-      input.toDF().toDF("k"), "k", numHashes = 5, mBits = 4096,
-      path = path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("k"), path)(
+      (b, _) => SilverIndex.refreshBloom(b, "k", numHashes = 5,
+        mBits = 4096, path = path))
     try {
       // adversarial chunking: overlapping duplicates across batches
       input.addData(keys.take(300): _*)
@@ -226,8 +229,8 @@ class StreamingIndexSpec extends SparkTestBase {
     val path = tmp("stream-hll")
     val rows = (0L until 900L).map(i => (s"g${i % 3}", i % 211))
     val input = MemoryStream[(String, Long)]
-    val q = SilverIndex.streamingRefreshHll(
-      input.toDF().toDF("g", "k"), Seq("g"), "k", path = path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("g", "k"), path)(
+      (b, _) => SilverIndex.refreshHll(b, Seq("g"), "k", path = path))
     try {
       // adversarial chunking: overlapping duplicates across batches
       input.addData(rows.take(600): _*)
@@ -257,9 +260,9 @@ class StreamingIndexSpec extends SparkTestBase {
     val rows = (0L until 2000L).map(i =>
       (i, s"g${i % 2}", (i * 13 % 997).toDouble))
     val input = MemoryStream[(Long, String, Double)]
-    val q = SilverIndex.streamingRefreshQuantileSample(
-      input.toDF().toDF("id", "grp", "v"), "id", "v", Seq("grp"),
-      "sq-stream-spec", rate = 0.3, path = path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("id", "grp", "v"),
+      path)((b, _) => SilverIndex.refreshQuantileSample(b, "id", "v",
+        Seq("grp"), "sq-stream-spec", rate = 0.3, path = path))
     try {
       input.addData(rows.take(1200): _*)
       q.processAllAvailable()
@@ -293,8 +296,8 @@ class StreamingIndexSpec extends SparkTestBase {
     val path = tmp("stream-cms")
     val rows = (0L until 1000L).map(i => (i % 37).toInt)
     val input = MemoryStream[Int]
-    val q = SilverIndex.streamingRefreshCms(
-      input.toDF().toDF("k"), "k", width = 16, depth = 3, path = path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("k"), path)(
+      SilverIndex.refreshCms(_, _, "k", width = 16, depth = 3, path = path))
     try {
       input.addData(rows.take(600): _*)
       q.processAllAvailable()
@@ -340,8 +343,8 @@ class StreamingIndexSpec extends SparkTestBase {
     val clean = rows.filter(r => r._1 != null && r._2 != null)
 
     val input = MemoryStream[(java.sql.Date, String)]
-    val q = SilverIndex.streamingRefreshDriftLedger(
-      input.toDF().toDF("wk", "cat"), "wk", "cat", path = path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("wk", "cat"), path)(
+      SilverIndex.refreshDriftLedger(_, _, "wk", "cat", path = path))
     try {
       // adversarial chunking: a 1-row batch, a big one, the remainder
       Seq(rows.take(1), rows.slice(1, 401), rows.drop(401)).foreach { b =>
@@ -386,8 +389,8 @@ class StreamingIndexSpec extends SparkTestBase {
     val union = graft.queries.CurationQueries.semanticUnion(spark, dir)
     val rows = union.as[(Long, String)].collect()
     val input = MemoryStream[(Long, String)]
-    val q = SilverIndex.streamingRefreshPostings(
-      input.toDF().toDF("id", "text"), "id", "text", path)
+    val q = SilverIndex.onEachBatch(input.toDF().toDF("id", "text"), path)(
+      (b, _) => SilverIndex.refreshPostings(b, "id", "text", path))
     try {
       rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
         input.addData(chunk.toIndexedSeq); q.processAllAvailable()

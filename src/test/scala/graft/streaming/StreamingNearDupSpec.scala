@@ -6,7 +6,7 @@ import graft.SparkTestBase
 import graft.operators.Dedup
 import graft.pipeline.SilverIndex
 
-/** Streaming near-dup maintenance ([[SilverIndex.streamingNearDupPairs]]):
+/** Streaming near-dup maintenance ([[SilverIndex.nearDupBatch]]):
   * each micro-batch emits only the pairs involving its genuinely-new
   * docs, so (1) the accumulated pairs table equals the from-scratch
   * batch [[Dedup.minhashLshPairs]], (2) the result is arrival-order
@@ -33,10 +33,11 @@ class StreamingNearDupSpec extends SparkTestBase {
   private def streamInto(root: String, batches: Seq[Seq[(Long, String)]])
       : Unit = {
     val input = MemoryStream[(Long, String)]
-    val q = SilverIndex.streamingNearDupPairs(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      n = 2, numHashes = 64, rowsPerBand = 4, theta = 0.5,
-      s"$root/sig", s"$root/pairs")
+    val q = SilverIndex.onEachBatch(
+      input.toDF().toDF("doc_id", "text"), s"$root/sig")(
+      SilverIndex.nearDupBatch(_, _, "doc_id", "text",
+        n = 2, numHashes = 64, rowsPerBand = 4, theta = 0.5,
+        sigPath = s"$root/sig", pairsPath = s"$root/pairs"))
     try {
       batches.foreach { b =>
         input.addData(b: _*)
