@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
+import graft.queries.{AnnQueries, CurationQueries, DedupQueries, StreamQueries, TextQueries}
+
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line
   * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
@@ -18,13 +22,34 @@ package graft
   * profiled-tier JIT recompiles ~10 s of methods per pass, and Spark's
   * bounded-but-lazy thread pools (block-manager, broadcast-exchange)
   * climb toward their caps: CPU-dense queries ran 2–2.5× slower by pass
-  * 3, so medians measured JVM aging, not the queries. A fresh JVM per
-  * pass makes passes independent and identically distributed; the median
-  * then damps machine noise the way it was meant to. If forking fails
-  * (unusual runner without a resolvable java/classpath), falls back to
-  * the in-process loop and says so on stderr.
+  * 3, so medians measured JVM aging, not the queries (read from an A/B
+  * harness's per-pass JIT-total, code-heap and thread-census probes; the
+  * harness's timing shape lives on as `--isolated`). A fresh JVM per pass
+  * makes passes i.i.d.; the median then damps machine noise. If forking
+  * fails (no resolvable java/classpath), falls back to the in-process
+  * loop and says so on stderr.
+  *
+  * Splitting a pass into family-partitioned fresh-JVM slices was
+  * measured and rejected: a 3-slice pass summed 101.3 s vs 87.9 s for
+  * the whole-suite JVM at sf0.1 (tools/bench_slices_r12.txt), slower on
+  * 84/93 queries and nearly uniformly (+0.1–0.9 s each) — a fresh JVM
+  * per slice re-pays profiled-tier JIT and codegen warmup for the shared
+  * machinery (parquet reader, join/window codegen, kernel statics) that
+  * a full-suite pass amortizes across the battery.
+  *
+  * A/B two builds of a few queries with the isolated child directly:
+  * `sbt "runMain graft.Bench --isolated=<q1,q2> --iso-runs=<N>"` prints
+  * `BENCH_ISO` medians and `BENCH_ISO_SPREAD` per-pass spreads.
   */
 object Bench {
+
+  /** Width of the isolated child's session: the warm `local[32]` the
+    * committed old-jar A/Bs (tools/m8_ab_r17.txt format) read. */
+  private val IsoCpus = 32
+
+  /** Suite seconds above which a query's isolated median gets its own
+    * fresh child JVM (see [[forkIsolatedPlan]]). */
+  private val IsoForkSec = 5.0
 
   /** Locale-proof fixed-precision rendering for the final bench line:
     * `%.<decimals>f` with trailing zeros stripped ("1.330"→"1.33",
@@ -47,7 +72,18 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  // locale-proof decimal rendering (the f-interpolator follows the
+  // default locale, and a comma decimal would corrupt the JSON line)
+  private def r4(x: Double): Double = math.rint(x * 10000) / 10000
+
   private val pairRx = """"([^"]+)":(-?[0-9.]+(?:E-?[0-9]+)?)""".r
+
+  /** `"name":number` pairs in `s`; a pseudo-number (1.2.3) is skipped,
+    * never fatal. Later duplicates win. */
+  private def numPairs(s: String): Map[String, Double] =
+    pairRx.findAllMatchIn(s)
+      .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
+      .toMap
 
   /** Latest committed per-round bench (`BENCH_r{N}.json` in cwd, written
     * by the driver each round): (file name, query → median sec). The
@@ -72,34 +108,20 @@ object Bench {
           val body = if (raw.contains("\"queries\":{")) raw
             else raw.replace("\\\"", "\"")
           val at = body.indexOf("\"queries\":{")
-          val inline = if (at < 0) Map.empty[String, Double] else {
-            val end = body.indexOf('}', at)
-            pairRx.findAllMatchIn(body.substring(at + 11, end))
-              .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
-              .toMap
-          }
+          val inline = if (at < 0) Map.empty[String, Double]
+            else numPairs(body.substring(at + 11, body.indexOf('}', at)))
           if (inline.nonEmpty) Some(f.getName -> inline)
           else {
-            // SALVAGE: either the tail cut mid-object (r7's starts
-            // inside "queries"), or — since the battery outgrew the
-            // final line's window at 93 queries (r12) — the final
-            // line's inline map is LEGITIMATELY `{}` and the per-query
-            // values live on the 1dp-reversed line and/or the
-            // bench_detail queries_full object in the same tail (the
-            // bug this branch fixes: matching the empty inline map used
-            // to return None WITHOUT salvaging, silently sliding the
-            // baseline back to r10, the last round with a small enough
-            // battery). Per-query keys are unmistakable — a letter
-            // prefix, a DIGIT, then `_name` (q1_agg, t11_bm25_index) —
-            // while wrapper scalars (n/rc/value/cpus) and the bench's
-            // own delta_* fields have no digit before the first
-            // underscore. Demand a real population so garbage never
-            // becomes a baseline.
-            val qs = pairRx.findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2))
+            // SALVAGE: the tail cut mid-object (r7), or the final
+            // line's inline map is legitimately `{}` (93+ queries, r12)
+            // and the values live on the 1dp-reversed line / the
+            // queries_full object — stopping here slid the baseline back
+            // to r10 until r16. Per-query keys are a letter prefix, a
+            // DIGIT, then `_name` (q1_agg); wrapper scalars and delta_*
+            // fields have no digit before the first underscore. Demand a
+            // real population so garbage never becomes a baseline.
+            val qs = numPairs(body)
               .filter { case (k, _) => k.matches("[a-z]+\\d+_[a-z0-9_]+") }
-              .flatMap { case (k, v) =>
-                scala.util.Try(k -> v.toDouble).toOption }.toMap
             if (qs.size >= 10) Some(f.getName -> qs) else None
           }
         } catch { case scala.util.control.NonFatal(_) => None }
@@ -110,46 +132,43 @@ object Bench {
     * co-tenancy shows up as a UNIFORM per-query offset vs the previous
     * round (measured: two r5 runs 30 min apart, +0.21 s median delta
     * across all 57 queries under load-average-7 vs idle), while a real
-    * regression is CONCENTRATED in the queries whose plan changed. So:
-    * delta_median estimates the uniform machine offset; each query's
-    * EXCESS over that offset is its individually attributable shift; the
-    * verdict is "concentrated" when one query's excess is both material
-    * in absolute terms (> 0.5 s, past fork-to-fork swing) and a dominant
-    * share (> 0.5) of all positive excess. Emitted into the bench JSON so
-    * the round-over-round reading is a recorded computation, not a manual
-    * rule. Fields: delta_prev, delta_median, delta_max, delta_max_query,
-    * delta_concentration, delta_verdict. */
+    * regression is CONCENTRATED in the queries whose plan changed. The
+    * rule itself is [[excessVerdict]]; this adds delta_median (the
+    * uniform machine offset) and delta_max (the largest raw per-query
+    * shift). Emitted into the bench JSON so the round-over-round reading
+    * is a recorded computation, not a manual rule. Fields: delta_prev,
+    * delta_median, delta_max, delta_max_query, delta_concentration,
+    * delta_verdict. */
   private[graft] def deltaJson(results: Seq[(String, Double)],
       prev: Option[(String, Map[String, Double])]): String = prev match {
     case None => """"delta_prev":null,"delta_verdict":"no-previous-bench""""
     case Some((fname, prevQ)) =>
-      val deltas = results.collect {
-        case (n, v) if v >= 0 && prevQ.get(n).exists(_ >= 0) => n -> (v - prevQ(n))
-      }
+      val deltas = deltasVs(results, prevQ)
       if (deltas.isEmpty)
         s""""delta_prev":"$fname","delta_verdict":"no-common-queries""""
       else {
-        val dm = median(deltas.map(_._2))
-        val (maxName, maxD) = deltas.maxBy(_._2)
-        val excess = deltas.map { case (n, d) => n -> (d - dm) }
-        val exMax = excess.map(_._2).max
-        val posSum = excess.map(_._2).filter(_ > 0).sum
-        val conc = if (posSum <= 0) 0.0 else exMax / posSum
-        val verdict =
-          if (exMax > 0.5 && conc > 0.5) "concentrated" else "flat"
-        // locale-proof decimal rendering (the f-interpolator follows the
-        // default locale, and a comma decimal would corrupt the JSON line)
-        def r4(x: Double): Double = math.rint(x * 10000) / 10000
-        s""""delta_prev":"$fname","delta_median":${r4(dm)},""" +
-          s""""delta_max":${r4(maxD)},"delta_max_query":"$maxName",""" +
+        val (verdict, maxName, _, conc) = excessVerdict(deltas)
+        s""""delta_prev":"$fname","delta_median":${r4(median(deltas.map(_._2)))},""" +
+          s""""delta_max":${r4(deltas.map(_._2).max)},"delta_max_query":"$maxName",""" +
           s""""delta_concentration":${r4(conc)},"delta_verdict":"$verdict""""
       }
   }
 
+  /** Per-query `now - prev` over the queries that succeeded in both. */
+  private def deltasVs(now: Seq[(String, Double)],
+      prev: Map[String, Double]): Seq[(String, Double)] =
+    now.collect {
+      case (n, v) if v >= 0 && prev.get(n).exists(_ >= 0) => n -> (v - prev(n))
+    }
+
   /** The uniform-offset/concentration reading over a set of per-query
-    * deltas (the deltaJson rule, factored so the suite and ISOLATED
-    * channels share it): (verdict, max-excess query, max excess,
-    * concentration). */
+    * deltas, shared by the suite and ISOLATED channels: delta_median
+    * estimates the uniform machine offset; each query's EXCESS over that
+    * offset is its individually attributable shift; the verdict is
+    * "concentrated" when one query's excess is both material in absolute
+    * terms (> 0.5 s, past fork-to-fork swing) and a dominant share
+    * (> 0.5) of all positive excess. Returns (verdict, max-excess query,
+    * max excess, concentration). */
   private[graft] def excessVerdict(deltas: Seq[(String, Double)])
       : (String, String, Double, Double) = {
     val dm = median(deltas.map(_._2))
@@ -173,73 +192,52 @@ object Bench {
       val raw = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
       val at = raw.indexOf("\"isolated_medians\":{")
       if (at < 0) Map.empty
-      else {
-        val end = raw.indexOf('}', at)
-        pairRx.findAllMatchIn(raw.substring(at + 20, end))
-          .flatMap(m =>
-            scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
-          .toMap
-      }
+      else numPairs(raw.substring(at + 20, raw.indexOf('}', at)))
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-  /** Family-partitioned fresh-JVM slices (r12, VERDICT r11 task 5's
-    * experiment) — NOT the default, because the measurement came back
-    * the other way: a 3-slice pass summed 101.3 s vs 87.9 s for the
-    * whole-suite JVM at sf0.1 (tools/bench_slices_r12.txt), slower on
-    * 84/93 queries and nearly uniformly (+0.1–0.9 s each). The co-
-    * tenancy tax the isolated MiniBench A/Bs keep quantifying is
-    * smaller than what slicing forfeits: a fresh JVM per slice re-pays
-    * profiled-tier JIT and codegen warmup for the shared machinery
-    * (parquet reader, join/window codegen, kernel statics) that a
-    * full-suite pass amortizes across 93 queries — MiniBench medians
-    * look faster because they re-run the SAME query in one JVM, which
-    * no per-query-once bench shape can reproduce. Kept as an opt-in
-    * (SPARK_GRAFT_BENCH_SLICED=1) for re-measurement; slices keep
-    * families whole so persisted-index provisioning stays per-family,
-    * and a query whose family appears in no slice lands in the last
-    * one (future prefixes must never silently drop out). */
-  private[graft] val familySlices: Seq[String] = Seq("agh", "cdm", "jqstx")
+  /** The persisted indexes every pass builds BEFORE its timed loop, in
+    * build order: an index pre-exists any query in a real deployment, and
+    * pricing its one-time build inside whichever consumer runs first
+    * misattributes seconds to that query (s11 read 8.8 s suite vs 0.29 s
+    * iso, d18 5.4 vs 1.8 s — OPTIMIZATION_r19.md). Build costs still print
+    * on stderr, and the build/refresh machinery stays correctness-gated
+    * through Verify, SilverIndexSpec and StreamQueriesSpec. A tag dropped
+    * here silently moves its build into a timed query (BenchDeltaSpec
+    * pins the table). */
+  private[graft] val provisions: Seq[(String, (SparkSession, String) => String)] = Seq(
+    "bm25" -> TextQueries.bm25IndexPath _,
+    "ivf" -> AnnQueries.ivfIndexPath _,
+    "minhash" -> DedupQueries.minhashIndexPath _,
+    "components" -> DedupQueries.componentsIndexPath _,
+    "containment" -> DedupQueries.d20Path _,
+    "jaccard-index" -> DedupQueries.d22Path _,
+    "char-jaccard-index" -> DedupQueries.d24Path _,
+    "simhash-index" -> DedupQueries.d25Path _,
+    "edit-index" -> DedupQueries.d18Path _,
+    "stream-bm25" -> StreamQueries.streamIndexPath _,
+    "stream-semantic" -> StreamQueries.streamSemanticPath _,
+    "stream-volume" -> StreamQueries.streamVolumePath _,
+    "tfidf" -> TextQueries.tfidfVectorsPath _,
+    // the c31 persisted banded-semantic index and s19's streaming face
+    "semantic-lsh" -> CurationQueries.semanticIndexPath _,
+    "stream-semantic-lsh" -> StreamQueries.streamSemanticLshPath _,
+    "stream-hourly" -> StreamQueries.streamHourlyPath _,
+    "stream-neardup" -> StreamQueries.streamNearDupPath _,
+    "stream-kmv" -> StreamQueries.streamKmvPath _,
+    "stream-quant" -> StreamQueries.streamQuantPath _,
+    "stream-cms" -> StreamQueries.streamCmsPath _,
+    "stream-bloom" -> StreamQueries.streamBloomPath _,
+    "stream-sessions" -> StreamQueries.streamSessionsPath _,
+    "stream-hll" -> StreamQueries.streamHllPath _,
+    "stream-funnel" -> StreamQueries.streamFunnelPath _,
+    "stream-heavy" -> StreamQueries.streamHeavyPath _,
+    "stream-drift" -> StreamQueries.streamDriftPath _)
 
-  /** Which persisted-index provisions a family's queries consume —
-    * sliced children provision only what their slice reads (the builds
-    * are excluded from per-query numbers either way; this just keeps
-    * slice wall-clock flat). */
-  private def provisionsFor(families: String): Seq[String] =
-    families.flatMap {
-      case 'a' => Seq("ivf")
-      case 'c' => Seq("bm25", "semantic-lsh")
-      case 'd' => Seq("minhash", "components", "containment",
-        "jaccard-index", "char-jaccard-index", "simhash-index",
-        // r19 OPTIMIZATION-round measurement fix (disclosed in
-        // OPTIMIZATION_r19.md): d18's variant-key table was the one
-        // persisted index still built INSIDE its consumer's timed
-        // number (it predates the provisioning convention's r19
-        // expansion to d20/d22/d24/d25) — suite read 5.4 s vs 1.8 s
-        // steady-state iso. Same discipline, same disclosure: the
-        // build cost still prints on stderr and the build/refresh
-        // machinery stays correctness-gated through Verify + specs.
-        "edit-index")
-      case 'h' | 't' => Seq("bm25", "tfidf")
-      case 's' => Seq("stream-bm25", "stream-semantic",
-        "stream-volume", "stream-semantic-lsh", "stream-hourly",
-        // r19 OPTIMIZATION-round measurement fix #2 (disclosed in
-        // OPTIMIZATION_r19.md, old numbers kept there): the REMAINING
-        // stream-maintained artifacts were still built inside their
-        // consumer's timed number — s6/s7/s8/s9/s10/s11/s12/s13/s14/s15
-        // each read a table a continuously-running stream maintains, so
-        // the serve is the steady-state cost (their warm iso medians:
-        // 0.1–0.9 s) while the suite channel charged the whole
-        // MemoryStream fold to the first read (s11: 8.8 s suite vs
-        // 0.29 s iso). Same discipline as stream-bm25/semantic/volume/
-        // hourly (r16–r19 build rounds): the build cost still prints on
-        // stderr per provision and the fold machinery stays
-        // correctness-gated through StreamingSpec/SilverIndexSpec and
-        // the oracle gate (maintained ≡ batch row-identical).
-        "stream-neardup", "stream-kmv", "stream-quant", "stream-cms",
-        "stream-bloom", "stream-sessions", "stream-hll", "stream-funnel",
-        "stream-heavy", "stream-drift")
-      case _ => Seq.empty
-    }.distinct
+  /** Run battery query `name` to completion through the `noop` sink. */
+  private[graft] def runToNoop(spark: SparkSession, sfDir: String,
+      name: String): Unit =
+    SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
 
   /** Per-query measurements of one pass: wall seconds (-1 failed),
     * GC seconds inside the query, heap-used delta in MB across it.
@@ -270,15 +268,15 @@ object Bench {
     }
   }
 
-  /** Drain the async listener bus before reading/resetting the peak —
-    * a fixed sleep let straggler task-end events from the previous
-    * query land after `peak.set(0L)` and inflate the NEXT query's
-    * peak_exec_mb under load (ADVICE r18). `LiveListenerBus
+  /** Drain the async listener bus before reading/resetting listener
+    * state — a fixed sleep let straggler task-end events from the
+    * previous query land after `peak.set(0L)` and inflate the NEXT
+    * query's peak_exec_mb under load (ADVICE r18). `LiveListenerBus
     * .waitUntilEmpty` is `private[spark]`, which compiles to a public
     * method in bytecode, so reflection reaches it from here; any
     * reflective surprise degrades to the old fixed sleep rather than
     * failing the bench. */
-  private def drainListenerBus(
+  private[graft] def drainListenerBus(
       sc: org.apache.spark.SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
@@ -297,8 +295,8 @@ object Bench {
     java.lang.management.ManagementFactory.getMemoryMXBean
       .getHeapMemoryUsage.getUsed / (1024.0 * 1024.0)
 
-  /** One pass over `families` (all queries when None) in THIS JVM. */
-  private def runPass(families: Option[String]): PassStats = {
+  /** One pass over every query in THIS JVM. */
+  private def runPass(): PassStats = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.Sessions.local("graft-bench",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
@@ -309,8 +307,7 @@ object Bench {
       peaks.peak.set(0L)
       val (gc0, h0) = (gcMillisNow, heapUsedMb)
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      try runToNoop(spark, sfDir, name)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return (-1.0, 0.0, 0.0, 0.0)
@@ -323,20 +320,10 @@ object Bench {
         peaks.peak.get() / (1024.0 * 1024.0))
     }
     runOnce("q1_agg") // warmup: parquet reader + codegen + shuffle machinery
-    // Provision the per-JVM persisted indexes (the BM25 postings shared
-    // by t11 + h1's lexical leg; the a6 IVF base) BEFORE the timed
-    // loop: a persisted index pre-exists any query in a real
-    // deployment, and pricing its one-time build inside whichever
-    // consumer happens to run first would misattribute seconds to that
-    // query's steady-state number. The build cost is still measured and
-    // reported — on stderr here and in tools/bm25ix_build_r9.txt /
-    // tools/a6_floor_r9.txt — and the build/refresh MACHINERY stays
-    // correctness-gated through the consumers' closures (the first
-    // Verify invocation builds) and SilverIndexSpec.
-    def provision(tag: String)(f: => Unit): Unit = {
+    provisions.foreach { case (tag, build) =>
       val t0 = System.nanoTime()
       try {
-        f
+        build(spark, sfDir)
         System.err.println(f"[bench] $tag index provisioned in " +
           f"${(System.nanoTime() - t0) / 1e9}%.2f s (one-time build, " +
           "excluded from per-query steady-state numbers)")
@@ -345,92 +332,7 @@ object Bench {
           "— consumers will build it inline")
       }
     }
-    val wanted = provisionsFor(families.getOrElse("abcdefghijklmnopqrstuvwxyz"))
-    if (wanted.contains("bm25"))
-      provision("bm25")(graft.queries.TextQueries.bm25IndexPath(spark, sfDir))
-    if (wanted.contains("ivf"))
-      provision("ivf")(graft.queries.AnnQueries.ivfIndexPath(spark, sfDir))
-    if (wanted.contains("minhash"))
-      provision("minhash")(graft.queries.DedupQueries.minhashIndexPath(spark, sfDir))
-    if (wanted.contains("components"))
-      provision("components")(
-        graft.queries.DedupQueries.componentsIndexPath(spark, sfDir))
-    if (wanted.contains("containment"))
-      provision("containment")(
-        graft.queries.DedupQueries.d20Path(spark, sfDir))
-    if (wanted.contains("jaccard-index"))
-      provision("jaccard-index")(
-        graft.queries.DedupQueries.d22Path(spark, sfDir))
-    if (wanted.contains("char-jaccard-index"))
-      provision("char-jaccard-index")(
-        graft.queries.DedupQueries.d24Path(spark, sfDir))
-    if (wanted.contains("simhash-index"))
-      provision("simhash-index")(
-        graft.queries.DedupQueries.d25Path(spark, sfDir))
-    if (wanted.contains("edit-index"))
-      provision("edit-index")(
-        graft.queries.DedupQueries.d18Path(spark, sfDir))
-    if (wanted.contains("stream-bm25"))
-      provision("stream-bm25")(graft.queries.StreamQueries.streamIndexPath(spark, sfDir))
-    if (wanted.contains("stream-semantic"))
-      provision("stream-semantic")(
-        graft.queries.StreamQueries.streamSemanticPath(spark, sfDir))
-    if (wanted.contains("stream-volume"))
-      provision("stream-volume")(
-        graft.queries.StreamQueries.streamVolumePath(spark, sfDir))
-    if (wanted.contains("tfidf"))
-      provision("tfidf")(graft.queries.TextQueries.tfidfVectorsPath(spark, sfDir))
-    // the c31 persisted banded-semantic index and s19's streaming face:
-    // one-time builds a deployment pays at arrival, not per audit
-    if (wanted.contains("semantic-lsh"))
-      provision("semantic-lsh")(
-        graft.queries.CurationQueries.semanticIndexPath(spark, sfDir))
-    if (wanted.contains("stream-semantic-lsh"))
-      provision("stream-semantic-lsh")(
-        graft.queries.StreamQueries.streamSemanticLshPath(spark, sfDir))
-    if (wanted.contains("stream-hourly"))
-      provision("stream-hourly")(
-        graft.queries.StreamQueries.streamHourlyPath(spark, sfDir))
-    if (wanted.contains("stream-neardup"))
-      provision("stream-neardup")(
-        graft.queries.StreamQueries.streamNearDupPath(spark, sfDir))
-    if (wanted.contains("stream-kmv"))
-      provision("stream-kmv")(
-        graft.queries.StreamQueries.streamKmvPath(spark, sfDir))
-    if (wanted.contains("stream-quant"))
-      provision("stream-quant")(
-        graft.queries.StreamQueries.streamQuantPath(spark, sfDir))
-    if (wanted.contains("stream-cms"))
-      provision("stream-cms")(
-        graft.queries.StreamQueries.streamCmsPath(spark, sfDir))
-    if (wanted.contains("stream-bloom"))
-      provision("stream-bloom")(
-        graft.queries.StreamQueries.streamBloomPath(spark, sfDir))
-    if (wanted.contains("stream-sessions"))
-      provision("stream-sessions")(
-        graft.queries.StreamQueries.streamSessionsPath(spark, sfDir))
-    if (wanted.contains("stream-hll"))
-      provision("stream-hll")(
-        graft.queries.StreamQueries.streamHllPath(spark, sfDir))
-    if (wanted.contains("stream-funnel"))
-      provision("stream-funnel")(
-        graft.queries.StreamQueries.streamFunnelPath(spark, sfDir))
-    if (wanted.contains("stream-heavy"))
-      provision("stream-heavy")(
-        graft.queries.StreamQueries.streamHeavyPath(spark, sfDir))
-    if (wanted.contains("stream-drift"))
-      provision("stream-drift")(
-        graft.queries.StreamQueries.streamDriftPath(spark, sfDir))
-    val all = SparkEntry.queries.keys.toSeq.sorted
-    val mine = families match {
-      case None => all
-      case Some(fs) =>
-        // a family in no slice lands in the LAST slice, never drops out
-        val covered = familySlices.mkString
-        all.filter(n => fs.contains(n.head) ||
-          (fs == familySlices.last && !covered.contains(n.head)))
-    }
-    val out = mine.map(n => n -> runOnce(n))
+    val out = SparkEntry.queries.keys.toSeq.sorted.map(n => n -> runOnce(n))
     spark.stop()
     PassStats(out.map { case (n, (s, _, _, _)) => n -> s }.toMap,
       out.map { case (n, (_, g, _, _)) => n -> g }.toMap,
@@ -444,46 +346,32 @@ object Bench {
       .mkString("{", ",", "}")
 
   /** Child mode: one pass, machine-readable lines (wall + gc + heap). */
-  private def childMain(families: Option[String]): Unit = {
-    val p = runPass(families)
+  private def childMain(): Unit = {
+    val p = runPass()
     println(s"""BENCH_PASS:${jsonNumMap(p.sec)}""")
     println(s"""BENCH_GC:${jsonNumMap(p.gcSec)}""")
     println(s"""BENCH_HEAP:${jsonNumMap(p.heapMb)}""")
     println(s"""BENCH_PEAK:${jsonNumMap(p.peakMb)}""")
   }
 
-  /** Isolated-median child (the MiniBench shape, automated): the named
+  /** Isolated-median child, also the manual A/B harness: the named
     * queries re-run `runs` times in ONE warm JVM, reporting per-query
-    * medians and per-pass spreads. The PARENT decides how many queries
-    * share a child: since r19 every query above the fork threshold
-    * rides its own fresh JVM ([[forkIsolatedPlan]] — the r18 d15
-    * finding: a heavy query in a shared child inherits the other
-    * queries' heap/GC state, which is the exact contamination this
-    * channel exists to remove). A suite number that inflated while its isolated median
-    * stayed at the historical value is box noise; one that inflated in
-    * BOTH is a real regression — r13–r15 established this reading
-    * manually from committed MiniBench logs, this bakes it into the
-    * round artifact.
-    *
-    * COMMENSURABLE with the manual A/B harness since r18 (VERDICT r17
-    * task 1: the three channels read the same query 20.9/17.3/1.55 s
-    * on one box because this child ran 4-cpu and cold): the session
-    * runs at the MiniBench cpu count (SPARK_GRAFT_ISO_CPUS, default
-    * 32) and every named query gets one UNTIMED warmup execution
-    * before the timed passes, so the reported medians are warm-JVM
-    * local[32] numbers — the same instrument the committed old-jar
-    * A/Bs (tools/m8_ab_r17.txt format) read, and round-over-round
-    * iso-vs-iso deltas adjudicate code-level movement directly (the
-    * iso_delta fields in bench_detail). */
+    * medians and per-pass spreads ([[forkIsolatedPlan]] decides which
+    * queries share a child). A suite number that inflated while its
+    * isolated median stayed flat is box noise; one that inflated in BOTH
+    * is a real regression. The session runs at [[IsoCpus]] and every
+    * named query gets one UNTIMED warmup execution first (since r18: the
+    * channels read one query 20.9/17.3/1.55 s while this child ran 4-cpu
+    * cold), so the medians are warm local[32] numbers — the instrument
+    * the committed old-jar A/Bs read — and round-over-round iso deltas
+    * adjudicate code-level movement (bench_detail's iso_delta fields). */
   private def isolatedMain(names: Seq[String], runs: Int): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.Sessions.local("graft-bench-iso",
-      sys.env.getOrElse("SPARK_GRAFT_ISO_CPUS", "32").toInt)
+    val spark = graft.Sessions.local("graft-bench-iso", IsoCpus)
     def time(name: String): Double = {
       System.gc()
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      try runToNoop(spark, sfDir, name)
       catch { case e: Throwable =>
         System.err.println(s"[bench] isolated $name failed: ${e.getMessage}")
         return -1.0
@@ -493,20 +381,16 @@ object Bench {
     time("q1_agg") // warm the session
     names.foreach(time) // one untimed warmup pass per measured query
     val passes = (1 to runs).map(_ => names.map(n => n -> time(n)).toMap)
-    val med = names.map { n =>
-      val ok = passes.map(_(n)).filter(_ >= 0)
-      n -> (if (ok.isEmpty) -1.0 else median(ok))
-    }.toMap
+    val ok = names.map(n => n -> passes.map(_(n)).filter(_ >= 0)).toMap
+    val med = ok.view.mapValues(xs =>
+      if (xs.isEmpty) -1.0 else median(xs)).toMap
     // per-pass SPREAD (max/min over the timed passes): a
     // pass-disagreement > 2× on one query means the medians cannot be
     // trusted for it (VERDICT r18 task 1 — the d15 capture
     // disagreement), so the number rides the artifact and the parent
     // flags it instead of a reader reconstructing it from raw logs
-    val spread = names.map { n =>
-      val ok = passes.map(_(n)).filter(_ >= 0)
-      n -> (if (ok.isEmpty) -1.0
-        else ok.max / math.max(ok.min, 0.001))
-    }.toMap
+    val spread = ok.view.mapValues(xs =>
+      if (xs.isEmpty) -1.0 else xs.max / math.max(xs.min, 0.001)).toMap
     spark.stop()
     println(s"""BENCH_ISO:${jsonNumMap(med)}""")
     println(s"""BENCH_ISO_SPREAD:${jsonNumMap(spread)}""")
@@ -518,12 +402,9 @@ object Bench {
     * across forks collides or aborts the child, which would silently fall
     * back to the in-process mode the fork exists to avoid. */
   private def childSafe(arg: String): Boolean =
-    !(arg.startsWith("-agentlib:") || arg.startsWith("-agentpath:") ||
-      arg.startsWith("-javaagent:") || arg.startsWith("-Xrunjdwp") ||
-      arg.startsWith("-Xdebug") ||
-      arg.startsWith("-Dcom.sun.management.jmxremote") ||
-      arg.startsWith("-XX:StartFlightRecording") ||
-      arg.startsWith("-XX:FlightRecorderOptions"))
+    !Seq("-agentlib:", "-agentpath:", "-javaagent:", "-Xrunjdwp", "-Xdebug",
+      "-Dcom.sun.management.jmxremote", "-XX:StartFlightRecording",
+      "-XX:FlightRecorderOptions").exists(arg.startsWith)
 
   /** Run a child JVM with the given trailing args, returning its
     * stdout (None on nonzero exit). */
@@ -554,28 +435,23 @@ object Bench {
     } else Some(out)
   }
 
-  private val pairParse = """"([^"]+)":(-?[0-9.]+(?:E-?[0-9]+)?)""".r
   private def parseLine(out: String, prefix: String): Option[Map[String, Double]] =
-    out.linesIterator.find(_.startsWith(prefix)).map { line =>
-      pairParse.findAllMatchIn(line.stripPrefix(prefix))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
+    out.linesIterator.find(_.startsWith(prefix))
+      .map(line => numPairs(line.stripPrefix(prefix)))
 
-  /** Fork one pass (optionally one family slice) as a fresh JVM; None
-    * if the fork machinery fails. */
-  private def forkPass(families: Option[String] = None): Option[PassStats] =
-    forkChild(Seq("--child") ++ families.map(f => s"--families=$f"))
-      .flatMap { out =>
-        parseLine(out, "BENCH_PASS:").map { sec =>
-          PassStats(sec,
-            parseLine(out, "BENCH_GC:").getOrElse(Map.empty),
-            parseLine(out, "BENCH_HEAP:").getOrElse(Map.empty),
-            parseLine(out, "BENCH_PEAK:").getOrElse(Map.empty))
-        }.orElse {
-          System.err.println("[bench] forked pass emitted no BENCH_PASS line")
-          None
-        }
+  /** Fork one pass as a fresh JVM; None if the fork machinery fails. */
+  private def forkPass(): Option[PassStats] =
+    forkChild(Seq("--child")).flatMap { out =>
+      parseLine(out, "BENCH_PASS:").map { sec =>
+        PassStats(sec,
+          parseLine(out, "BENCH_GC:").getOrElse(Map.empty),
+          parseLine(out, "BENCH_HEAP:").getOrElse(Map.empty),
+          parseLine(out, "BENCH_PEAK:").getOrElse(Map.empty))
+      }.orElse {
+        System.err.println("[bench] forked pass emitted no BENCH_PASS line")
+        None
       }
+    }
 
   /** Fork the isolated-median child over the given queries, returning
     * (medians, per-pass spreads); None (with a stderr note) if the
@@ -597,16 +473,15 @@ object Bench {
     * exists to remove — the driver's r18 capture read d15 at 22.4 s in
     * the shared child while the committed same-code capture read
     * 5.5 s, a 4× disagreement concentrated on the heaviest query. So
-    * every query above `forkSec` SUITE seconds now gets its OWN fresh
-    * child JVM (warm-session + per-query warmup inside, so the
-    * MiniBench commensurability holds), and only the light tail
-    * shares one child. Failed forks drop their queries with a stderr
-    * note; survivors still ship. */
+    * every query above [[IsoForkSec]] SUITE seconds now gets its OWN
+    * fresh child JVM (warm-session + per-query warmup inside, so the
+    * A/B commensurability holds), and only the light tail shares one
+    * child. Failed forks drop their queries with a stderr note;
+    * survivors still ship. */
   private def forkIsolatedPlan(names: Seq[String], suiteSec: Map[String, Double],
-      runs: Int, forkSec: Double)
-      : (Map[String, Double], Map[String, Double]) = {
+      runs: Int): (Map[String, Double], Map[String, Double]) = {
     val (heavy, light) = names.partition(n =>
-      suiteSec.getOrElse(n, 0.0) > forkSec)
+      suiteSec.getOrElse(n, 0.0) > IsoForkSec)
     val parts = heavy.map(n => n -> forkIsolated(Seq(n), runs)) :+
       ("<light batch>" -> forkIsolated(light, runs))
     parts.foreach { case (tag, r) =>
@@ -615,15 +490,12 @@ object Bench {
           "without isolated medians")
     }
     val ok = parts.flatMap(_._2)
-    (ok.map(_._1).foldLeft(Map.empty[String, Double])(_ ++ _),
-      ok.map(_._2).foldLeft(Map.empty[String, Double])(_ ++ _))
+    (ok.flatMap(_._1).toMap, ok.flatMap(_._2).toMap)
   }
 
   def main(args: Array[String]): Unit = {
     if (args.contains("--child")) {
-      childMain(args.collectFirst {
-        case a if a.startsWith("--families=") => a.stripPrefix("--families=")
-      })
+      childMain()
       return
     }
     args.collectFirst {
@@ -639,30 +511,12 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
-    val sliced = sys.env.getOrElse("SPARK_GRAFT_BENCH_SLICED", "0") == "1"
 
     // a flaky fork is retried once; surviving forked passes are kept
     // (they are the i.i.d. samples) — only a total fork failure falls
     // back to the in-process mode, which is documented as inflating
-    // CPU-dense queries with JVM aging. In the (opt-in) sliced shape a
-    // pass is the UNION of its slice forks; a slice that fails twice
-    // drops its queries from that pass, and the missing-in-a-pass rule
-    // below then marks them failed rather than quietly reporting a
-    // median over fewer samples.
-    def mergeStats(parts: Seq[PassStats]): PassStats =
-      PassStats(parts.map(_.sec).reduce(_ ++ _),
-        parts.map(_.gcSec).reduce(_ ++ _),
-        parts.map(_.heapMb).reduce(_ ++ _),
-        parts.map(_.peakMb).reduce(_ ++ _))
-    val forked: Seq[PassStats] =
-      if (sliced)
-        (1 to runs).flatMap { _ =>
-          val parts = familySlices.flatMap(s =>
-            forkPass(Some(s)).orElse(forkPass(Some(s))))
-          if (parts.isEmpty) None
-          else Some(mergeStats(parts))
-        }
-      else (1 to runs).flatMap(_ => forkPass().orElse(forkPass()))
+    // CPU-dense queries with JVM aging.
+    val forked = (1 to runs).flatMap(_ => forkPass().orElse(forkPass()))
     val samples: Seq[PassStats] =
       if (forked.nonEmpty) {
         if (forked.size < runs) System.err.println(
@@ -673,7 +527,7 @@ object Bench {
         System.err.println(
           "[bench] fork unavailable — falling back to in-process passes " +
             "(expect JVM-aging inflation on CPU-dense queries)")
-        (1 to runs).map(_ => runPass(None))
+        (1 to runs).map(_ => runPass())
       }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -693,23 +547,14 @@ object Bench {
     val gcMed = r3map(medianOver(_.gcSec))
     val heapMed = r3map(medianOver(_.heapMb))
     val peakMed = r3map(medianOver(_.peakMb))
-    // self-adjudication fork: isolated warm-JVM medians for EVERY
-    // query over 2 s suite time, floor of the 10 heaviest (the manual
-    // r13–r15 MiniBench reading, automated into the committed
-    // artifact — flat isolated median + inflated suite number = box
-    // noise; both inflated = regression. r17 widened top-10 → all
-    // > 2 s: the r16 capture left h5's +1.9 s without an isolated
-    // number because it fell outside the top 10 by suite time)
+    // self-adjudication fork: isolated warm-JVM medians for EVERY query
+    // over 2 s suite time, floor of the 10 heaviest (r17 widened top-10:
+    // the r16 capture left h5's +1.9 s without an isolated number)
     val ranked = results.filter(_._2 >= 0).sortBy(-_._2)
     val top10 = (ranked.take(10) ++ ranked.drop(10).takeWhile(_._2 > 2.0))
       .map(_._1)
-    // queries above SPARK_GRAFT_ISO_FORK_SEC suite seconds (default 5)
-    // each get a FRESH child JVM; the light tail shares one child
-    // (VERDICT r18 task 1 — see forkIsolatedPlan)
-    val isoForkSec = sys.env.getOrElse("SPARK_GRAFT_ISO_FORK_SEC", "5")
-      .toDouble
     val (isoMedRaw, isoSpreadRaw) =
-      forkIsolatedPlan(top10, results.toMap, runs = 3, isoForkSec)
+      forkIsolatedPlan(top10, results.toMap, runs = 3)
     val isoMed = r3map(isoMedRaw)
     val isoSpread = r3map(isoSpreadRaw)
     if (isoMed.isEmpty && top10.nonEmpty)
@@ -721,38 +566,26 @@ object Bench {
     val isoFlagged = isoSpread.collect {
       case (n, s) if s > 2.0 => n
     }.toSeq.sorted
-    // The driver captures only a fixed-size TAIL (2000 chars) of this
-    // process's output. Since r10 the build passes forked-run stdout
-    // through VERBATIM (run/outputStrategy = StdoutOutput) and
-    // suppresses sbt's "[success] Total time" epilogue (showSuccess :=
-    // false), so the raw JSON below is the absolute last stdout line —
-    // the two sbt behaviors that made r1–r9 record `parsed: null`
-    // (an "[info] " prefix on every line, an epilogue after ours) are
-    // both gone. Full-precision values and the delta diagnostics go to
-    // tools/bench_detail_last.json (a committed round artifact — the
-    // tail window never sees them) and on their own earlier stdout
-    // line; the final line still renders at the highest precision that
-    // fits the window, belt-and-braces.
+    // The round's recorder keeps only a 2000-char TAIL of this
+    // process's output; build.sbt passes forked stdout through verbatim and drops
+    // sbt's epilogue, so the raw JSON below is the last stdout line.
+    // Full-precision values and the delta diagnostics go to
+    // tools/bench_detail_last.json (a committed round artifact) and an
+    // earlier stdout line; the final line renders at the highest
+    // precision that fits the window.
     val failed = results.count(_._2 < 0)
     // a failed query must not read as a speedup: surface the count
     // explicitly next to the successful-query total
     val total = results.map(_._2).filter(_ >= 0).sum
     val prev = previousBench()
     val delta = deltaJson(results, prev)
-    // THE COMMENSURABLE CHANNEL (VERDICT r17 task 1): round-over-round
-    // deltas on the isolated warm-local[32] medians — the same
-    // instrument as the committed old-jar A/Bs — adjudicate the final
-    // verdict. The suite channel still reports (it covers every
-    // query), but a suite spike whose query reads flat on the iso
-    // channel is box noise by the same rule the manual A/Bs applied
-    // (r13–r17); only a spike the iso channel CONFIRMS (or one on a
-    // query the iso set doesn't cover) survives as "concentrated".
+    // THE COMMENSURABLE CHANNEL: round-over-round deltas on the
+    // isolated warm-local[32] medians adjudicate the final verdict. A
+    // suite spike whose query reads flat on the iso channel is box
+    // noise; only a spike the iso channel CONFIRMS (or one on a query
+    // the iso set doesn't cover) survives as "concentrated".
     val prevIsoMap = previousIso()
-    def r4(x: Double): Double = math.rint(x * 10000) / 10000
-    val isoDeltas = isoMed.toSeq.collect {
-      case (n, v) if v >= 0 && prevIsoMap.get(n).exists(_ >= 0) =>
-        n -> (v - prevIsoMap(n))
-    }
+    val isoDeltas = deltasVs(isoMed.toSeq, prevIsoMap)
     val isoJson =
       if (prevIsoMap.isEmpty) """"iso_delta_verdict":"no-previous-iso""""
       else if (isoDeltas.isEmpty)
@@ -765,11 +598,8 @@ object Bench {
           s""""iso_delta_concentration":${r4(conc)},"iso_delta_verdict":"$v""""
       }
     val finalVerdict: String = {
-      val suiteDeltas = prev.map(_._2).fold(Seq.empty[(String, Double)]) {
-        pq => results.collect {
-          case (n, v) if v >= 0 && pq.get(n).exists(_ >= 0) => n -> (v - pq(n))
-        }
-      }
+      val suiteDeltas = prev.fold(Seq.empty[(String, Double)])(p =>
+        deltasVs(results, p._2))
       val isoV = if (isoDeltas.isEmpty) None
         else Some(excessVerdict(isoDeltas))
       val suiteV = if (suiteDeltas.isEmpty) None
@@ -806,7 +636,7 @@ object Bench {
       s""""isolated_spread":${jsonNumMap(isoSpread)},""" +
       s""""iso_spread_flagged":${
         isoFlagged.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-      s""""iso_fork_sec":$isoForkSec,""" +
+      s""""iso_fork_sec":$IsoForkSec,""" +
       s""""sf":"$sfDir","runs":$runs}}"""
     println(detail)
     try java.nio.file.Files.writeString(
@@ -814,25 +644,16 @@ object Bench {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write bench_detail file: $e") }
     // ms precision, DEGRADING to 2 then 1 decimals if the line would
-    // crowd the window (sbt's epilogue + the [info] prefix eat ~90 of
-    // the 2000): a 10 ms-precision line that parses beats a
-    // 1 ms-precision line that truncates. The battery crossed the
-    // 3-decimal guard at 79 queries, so the shipped line is typically
-    // the 2-decimal (10 ms) render — full-precision values are always
-    // on the bench_detail line above.
+    // crowd the window: a 10 ms-precision line that parses beats a
+    // 1 ms-precision line that truncates.
     def render(decimals: Int): String = {
       val qs = results.map { case (k, v) => "\"" + k + "\":" + ms(v, decimals) }
         .mkString("{", ",", "}")
       s"""{"metric":"total","value":${ms(total, decimals)},"unit":"sec","failed":$failed,"runs":$runs,"queries":$qs,"sf":"$sfDir"}"""
     }
-    // Budget: since the r10 output rework the final line is the LAST
-    // verbatim stdout (no sbt prefix, no epilogue), so the 2000-char
-    // tail keeps it complete as long as the line itself is under the
-    // window — 1990 leaves slack for the newline. If even 1-decimal
-    // precision can't fit (the battery would need ~95+ queries), a
-    // PARSEABLE line without the per-query map beats an unparseable
-    // one: totals stay in the final line, per-query values live on the
-    // bench_detail stdout line and in tools/bench_detail_last.json.
+    // Budget: 1990 chars leaves slack for the newline. If even
+    // 1-decimal precision can't fit, a PARSEABLE line without the
+    // per-query map beats an unparseable one.
     val line = Iterator(3, 2, 1).map(render)
       .find(_.length <= 1990).getOrElse {
         System.err.println(

@@ -41,11 +41,10 @@ object JobProfile {
     def runOnce(name: String, tag: String): Unit = {
       jobs.clear()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      graft.Bench.runToNoop(spark, sfDir, name)
       val wall = (System.nanoTime() - t0) / 1e9
       // drain the listener bus so late job-end events land
-      Thread.sleep(300)
+      graft.Bench.drainListenerBus(spark.sparkContext)
       import scala.jdk.CollectionConverters._
       val js = jobs.values.asScala.toSeq.sortBy(_.t0)
       val jsum = js.filter(_.t1 > 0).map(j => (j.t1 - j.t0) / 1e9).sum
@@ -59,8 +58,7 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
     // session warmup (parquet reader, codegen, shuffle machinery)
-    graft.SparkEntry.queries("q1_agg")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
+    graft.Bench.runToNoop(spark, sfDir, "q1_agg")
     names.foreach { n =>
       runOnce(n, "cold")
       runOnce(n, "warm")

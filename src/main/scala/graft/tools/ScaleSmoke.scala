@@ -20,11 +20,7 @@ import graft.operators.{AnnSearch, Blocking, Dedup, SimilarityJoin, SimilarityJo
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.builder("scale-smoke", Some("local[32]"), 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (mode.contains("simjoin1m")) {

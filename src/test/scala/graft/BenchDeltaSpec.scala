@@ -191,6 +191,40 @@ class BenchDeltaSpec extends AnyFunSuite {
     assert(two == "flat")
   }
 
+  test("deltaJson's verdict, concentration and max query are excessVerdict's") {
+    def field(json: String, k: String): String =
+      (s""""$k":"?([^",]+)"?""").r.findFirstMatchIn(json).get.group(1)
+    val prevQ = Map("a" -> 1.0, "b" -> 2.0, "c" -> 3.0, "d" -> 4.0)
+    Seq(
+      Seq("a" -> 0.21, "b" -> 0.21, "c" -> 0.21, "d" -> 0.21), // uniform
+      Seq("a" -> 0.0, "b" -> 0.1, "c" -> 3.0, "d" -> -0.1), // one spike
+      Seq("a" -> 0.0, "b" -> 2.0, "c" -> 2.0, "d" -> 0.0), // two spikes
+      Seq("a" -> 0.3, "b" -> 1.9, "c" -> -0.4, "d" -> 0.9) // mixed
+    ).foreach { deltas =>
+      val results = deltas.map { case (n, d) => n -> (prevQ(n) + d) }
+      val json = Bench.deltaJson(results, Some("BENCH_r05.json" -> prevQ))
+      // the deltas as deltaJson sees them (now - prev), float for float
+      val (v, mq, _, conc) = Bench.excessVerdict(
+        results.map { case (n, x) => n -> (x - prevQ(n)) })
+      assert(field(json, "delta_verdict") == v, json)
+      assert(field(json, "delta_max_query") == mq, json)
+      assert(field(json, "delta_concentration").toDouble ==
+        math.rint(conc * 10000) / 10000, json)
+    }
+  }
+
+  test("provisions: the 26 persisted-index builds, unique, in build order") {
+    assert(Bench.provisions.map(_._1) == Seq(
+      "bm25", "ivf", "minhash", "components", "containment",
+      "jaccard-index", "char-jaccard-index", "simhash-index", "edit-index",
+      "stream-bm25", "stream-semantic", "stream-volume", "tfidf",
+      "semantic-lsh", "stream-semantic-lsh", "stream-hourly",
+      "stream-neardup", "stream-kmv", "stream-quant", "stream-cms",
+      "stream-bloom", "stream-sessions", "stream-hll", "stream-funnel",
+      "stream-heavy", "stream-drift"))
+    assert(Bench.provisions.map(_._1).distinct.size == 26)
+  }
+
   test("previousIso reads the committed isolated medians; missing or " +
       "corrupt files degrade to empty") {
     val dir = java.nio.file.Files.createTempDirectory("graft-iso")

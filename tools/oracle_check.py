@@ -25,6 +25,9 @@ args = [a for a in sys.argv[1:] if a != "--no-verify"]
 SF = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
 OUT = Path(args[1] if len(args) > 1 else "/tmp/graft_verify")
 RUN_VERIFY = "--no-verify" not in sys.argv
+# the checkout this script lives in: Verify is built and run from here,
+# whichever clone the script is invoked from
+REPO = Path(__file__).resolve().parent.parent
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -33,7 +36,7 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def run_verify():
     r = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Verify {SF} {OUT}"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=1800)
+        capture_output=True, text=True, cwd=REPO, timeout=1800)
     if r.returncode != 0:
         print(r.stdout[-4000:])
         print(r.stderr[-4000:])
