@@ -203,13 +203,13 @@ object VectorKernelNearest {
     * Caller-side contract: `cents` rows are the centroid elements widened
     * to double (float→double widening is exact, so float-corpus products
     * are bit-identical to [[VectorKernel.dotOrNull]]'s per-element
-    * `toDouble`); `centFirstNull(t)` is the first null-element index in
-    * centroid t (Int.MaxValue if none); `nb2s(t)`/`nb2Null(t)` carry
-    * dot(cent, cent) computed with the same left-to-right accumulation.
+    * `toDouble`); `nb2s(t)`/`nb2Null(t)` carry dot(cent, cent)
+    * computed with the same left-to-right accumulation (`nb2Null(t)`:
+    * centroid t has a null element).
     */
   def nearestCentroid(v: ArrayData, vIsFloat: Boolean,
-      cents: Array[Array[Double]], centFirstNull: Array[Int],
-      nb2s: Array[Double], nb2Null: Array[Boolean]): Int = {
+      cents: Array[Array[Double]], nb2s: Array[Double],
+      nb2Null: Array[Boolean]): Int = {
     val vLen = if (v == null) 0 else v.numElements()
     // one pass over v: first null element, and dot(v, v) (null if any
     // null element — the overlap is the whole vector)
@@ -275,8 +275,8 @@ object VectorKernelNearestK {
     * the windowed row set, so the probed-list SET per query is identical
     * to the pre-rewrite plan. Returns min(k, nCentroids) indices. */
   def nearestCentroids(v: ArrayData, vIsFloat: Boolean,
-      cents: Array[Array[Double]], centFirstNull: Array[Int],
-      nb2s: Array[Double], nb2Null: Array[Boolean], k: Int): Array[Int] = {
+      cents: Array[Array[Double]], nb2s: Array[Double],
+      nb2Null: Array[Boolean], k: Int): Array[Int] = {
     val n = cents.length
     val vLen = if (v == null) 0 else v.numElements()
     var vFirstNull = Int.MaxValue
@@ -349,8 +349,7 @@ object VectorKernelNearestK {
   * centroids in a driver-frozen matrix (see [[VectorKernelNearestK]]);
   * the multi-probe selection as one codegen'd pass. Never null. */
 case class NearestCentroids(child: Expression, cents: Array[Array[Double]],
-    centFirstNull: Array[Int], nb2s: Array[Double], nb2Null: Array[Boolean],
-    k: Int)
+    nb2s: Array[Double], nb2Null: Array[Boolean], k: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   require(cents.nonEmpty, "nearest_centroids needs at least one centroid")
   require(k >= 1, "k must be >= 1")
@@ -373,13 +372,12 @@ case class NearestCentroids(child: Expression, cents: Array[Array[Double]],
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       VectorKernelNearestK.nearestCentroids(
         child.eval(input).asInstanceOf[ArrayData], isFloat,
-        cents, centFirstNull, nb2s, nb2Null, k))
+        cents, nb2s, nb2Null, k))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
     val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val fnRef = ctx.addReferenceObj("centFirstNull", centFirstNull, "int[]")
     val nb2Ref = ctx.addReferenceObj("nb2s", nb2s, "double[]")
     val nbnRef = ctx.addReferenceObj("nb2Null", nb2Null, "boolean[]")
     val childGen = child.genCode(ctx)
@@ -391,7 +389,7 @@ case class NearestCentroids(child: Expression, cents: Array[Array[Double]],
         |  new org.apache.spark.sql.catalyst.util.GenericArrayData(
         |    graft.functions.VectorKernelNearestK.nearestCentroids(
         |      ${childGen.isNull} ? null : ${childGen.value}, $isF,
-        |      $centsRef, $fnRef, $nb2Ref, $nbnRef, $kStr));
+        |      $centsRef, $nb2Ref, $nbnRef, $kStr));
       """.stripMargin
     ev.copy(code = childGen.code + resultCode, isNull = FalseLiteral)
   }
@@ -407,7 +405,7 @@ case class NearestCentroids(child: Expression, cents: Array[Array[Double]],
   * Never null: the all-null-sims row resolves to index 0, as the window's
   * list_id tie-break did. */
 case class NearestCentroid(child: Expression, cents: Array[Array[Double]],
-    centFirstNull: Array[Int], nb2s: Array[Double], nb2Null: Array[Boolean])
+    nb2s: Array[Double], nb2Null: Array[Boolean])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   require(cents.nonEmpty, "nearest_centroid needs at least one centroid")
 
@@ -430,13 +428,12 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]],
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
     VectorKernelNearest.nearestCentroid(
       child.eval(input).asInstanceOf[ArrayData], isFloat,
-      cents, centFirstNull, nb2s, nb2Null)
+      cents, nb2s, nb2Null)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
     val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val fnRef = ctx.addReferenceObj("centFirstNull", centFirstNull, "int[]")
     val nb2Ref = ctx.addReferenceObj("nb2s", nb2s, "double[]")
     val nbnRef = ctx.addReferenceObj("nb2Null", nb2Null, "boolean[]")
     val childGen = child.genCode(ctx)
@@ -445,7 +442,7 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]],
       code"""
         |int ${ev.value} = graft.functions.VectorKernelNearest.nearestCentroid(
         |  ${childGen.isNull} ? null : ${childGen.value}, $isF,
-        |  $centsRef, $fnRef, $nb2Ref, $nbnRef);
+        |  $centsRef, $nb2Ref, $nbnRef);
       """.stripMargin
     ev.copy(code = childGen.code + resultCode, isNull = FalseLiteral)
   }

@@ -286,7 +286,7 @@ object AnnSearch {
       while (i < vecs.length) {
         val v = vecs(i)
         val t = graft.functions.VectorKernelNearest.nearestCentroid(
-          v, isFloat, cm.mats, cm.firstNull, cm.nb2s, cm.nb2Null)
+          v, isFloat, cm.mats, cm.nb2s, cm.nb2Null)
         counts(t) += 1
         if (v != null) {
           val n = math.min(dim, v.numElements())
@@ -337,13 +337,14 @@ object AnnSearch {
     * list_id-ASCENDING rows (Spark's own ordering for the id type, so the
     * kernels' first-index tie-break equals the old window's
     * `list_id asc`), elements widened to double (exact for float
-    * corpora), null elements masked with their first index, centroid
-    * self-dots precomputed with the same left-to-right accumulation as
-    * VecDot — see [[graft.functions.VectorKernelNearest]]'s contract.
+    * corpora; a null element leaves a 0.0 slot), centroid self-dots
+    * precomputed with the same left-to-right accumulation as VecDot and
+    * flagged null (`nb2Null`) when the centroid holds a null element —
+    * see [[graft.functions.VectorKernelNearest]]'s contract.
     * `listIds` maps kernel indices back to list ids (codegen'd
     * element_at). */
   private[graft] final case class CentMatrix(rows: Array[org.apache.spark.sql.Row],
-      mats: Array[Array[Double]], firstNull: Array[Int], nb2s: Array[Double],
+      mats: Array[Array[Double]], nb2s: Array[Double],
       nb2Null: Array[Boolean], idType: org.apache.spark.sql.types.DataType) {
     def listIds: Column =
       array(rows.toIndexedSeq.map(r => litOf(r.get(0), idType)): _*)
@@ -430,7 +431,6 @@ object AnnSearch {
       centRows: Array[org.apache.spark.sql.Row],
       idType: org.apache.spark.sql.types.DataType): CentMatrix = {
     val mats = new Array[Array[Double]](centRows.length)
-    val firstNull = new Array[Int](centRows.length)
     val nb2s = new Array[Double](centRows.length)
     val nb2Null = new Array[Boolean](centRows.length)
     centRows.zipWithIndex.foreach { case (r, t) =>
@@ -453,11 +453,10 @@ object AnnSearch {
         i += 1
       }
       mats(t) = m
-      firstNull(t) = fn
       nb2s(t) = acc
       nb2Null(t) = fn != Int.MaxValue
     }
-    CentMatrix(centRows, mats, firstNull, nb2s, nb2Null, idType)
+    CentMatrix(centRows, mats, nb2s, nb2Null, idType)
   }
 
   private[graft] def ivfAssign(c: DataFrame, cents: DataFrame): DataFrame = {
@@ -468,7 +467,7 @@ object AnnSearch {
     val idx = org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.NearestCentroid(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("cv")),
-        cm.mats, cm.firstNull, cm.nb2s, cm.nb2Null))
+        cm.mats, cm.nb2s, cm.nb2Null))
     c.select(col("neighbor_id"), col("cv"),
       element_at(cm.listIds, idx + 1).as("list_id"))
   }
@@ -502,7 +501,7 @@ object AnnSearch {
       val idx = org.apache.spark.sql.graft.ColumnBridge.column(
         graft.functions.NearestCentroids(
           org.apache.spark.sql.graft.ColumnBridge.expression(col("qv")),
-          cm.mats, cm.firstNull, cm.nb2s, cm.nb2Null, nprobe))
+          cm.mats, cm.nb2s, cm.nb2Null, nprobe))
       q0.select(col("query_id"), col("qv"), explode(idx).as("__t"))
         .select(col("query_id"), col("qv"),
           element_at(cm.listIds, col("__t") + 1).as("list_id"))
@@ -845,7 +844,7 @@ object AnnSearch {
           val sv = slices(i)(j)
           val cm = cms(j)
           val t = graft.functions.VectorKernelNearest.nearestCentroid(
-            sv, isFloat, cm.mats, cm.firstNull, cm.nb2s, cm.nb2Null)
+            sv, isFloat, cm.mats, cm.nb2s, cm.nb2Null)
           counts(j)(t) += 1
           if (sv != null) {
             val n = math.min(sub, sv.numElements())
@@ -885,7 +884,7 @@ object AnnSearch {
         graft.functions.NearestCentroid(
           org.apache.spark.sql.graft.ColumnBridge.expression(
             slice(vec, j * sub + 1, sub)),
-          cm.mats, cm.firstNull, cm.nb2s, cm.nb2Null))
+          cm.mats, cm.nb2s, cm.nb2Null))
     }: _*)
 
   /** Per-query ADC lookup table, FLAT: lut[j·ksubⱼ-offset + k] =

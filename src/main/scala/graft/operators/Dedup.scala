@@ -101,25 +101,26 @@ object Dedup {
     * precomputed per ROW — in the join condition it would be two double
     * ceils per PAIR) prunes before the merge. Beyond broadcast size, a
     * partitioned cartesian still beats candidate generation in this
-    * regime: each task scores one (partA, partB) block in codegen. */
-  private def hashAllPairs(sets: DataFrame, theta: Double,
+    * regime: each task scores one (partA, partB) block in codegen.
+    *
+    * `hs` is the per-doc ascending hash array (the stored arrays as-is
+    * for [[jaccardPairsFromStored]]); returns the prefiltered
+    * (doc_a, doc_b, hsa, hsb) pairs for the caller to verify. */
+  private def hashAllPairs(sets: DataFrame, hs: Column, theta: Double,
       useBroadcast: Boolean): DataFrame = {
     // both branches read this frame; the exchange makes them share one
     // computed copy (ReuseExchange) instead of re-hashing twice
     val hashed = sets.select(col("doc"), col("sz"),
-        ceil(lit(theta) * col("sz")).cast("int").as("minsz"),
-        sort_array(transform(col("sh"), g => xxhash64(g))).as("hs"))
+        ceil(lit(theta) * col("sz")).cast("int").as("minsz"), hs.as("hs"))
       .transform(Par.spread(_, col("doc")))
     val ba = hashed.select(col("doc").as("doc_a"), col("sz").as("sza"),
       col("minsz").as("minsza"), col("hs").as("hsa"))
     val bb = hashed.select(col("doc").as("doc_b"), col("sz").as("szb"),
       col("minsz").as("minszb"), col("hs").as("hsb"))
-    val cands = ba.crossJoin(if (useBroadcast) broadcast(bb) else bb)
+    ba.crossJoin(if (useBroadcast) broadcast(bb) else bb)
       .where(col("doc_a") < col("doc_b") &&
         col("sza") >= col("minszb") && col("szb") >= col("minsza") &&
         sortedLongJaccardGECol(col("hsa"), col("hsb"), theta))
-      .select(col("doc_a"), col("doc_b"))
-    verifyJaccard(cands, sets, theta)
   }
 
   /** Early-exit `hash-jaccard ≥ θ` — identical decisions to filtering on
@@ -252,24 +253,8 @@ object Dedup {
       octet_length(col("g")).as("glen"))
     val freqH = exh.groupBy("gh")
       .agg(count(lit(1)).as("gdf"), min(col("glen")).as("glen"))
-    // ONE eager stats job over the hashed shingles; the doc count for the
-    // gate heuristic comes from the raw input (a metadata-cheap count —
-    // counting docs with zero shingles only overestimates allPairs, which
-    // biases the gate toward the conservative sparse path)
-    val stats = freqH.agg(count(lit(1)).as("vocab"),
-      coalesce(sum(col("gdf") * col("gdf")), lit(0L)).as("sumf2"),
-      coalesce(sum(col("gdf")), lit(0L)).as("totinst"),
-      coalesce(sum(col("gdf") * col("glen")), lit(0L)).as("instbytes")).head()
-    val vocabSize = stats.getLong(0)
-    val sumF2 = stats.getLong(1)
-    val totInstances = stats.getLong(2)
-    val instBytes = stats.getLong(3)
-    if (vocabSize == 0) { // no doc produced any shingle — empty result
-      return sets.select(col("doc").as("doc_a"), col("doc").as("doc_b"),
-        lit(0.0).as("jaccard")).where(lit(false))
-    }
     // doc count for the gate heuristics: with cacheSets the stats job
-    // above has just materialized the sets cache, so counting the CACHED
+    // has just materialized the sets cache, so counting the CACHED
     // frame is a cache-scan, while df.count() re-runs the caller's whole
     // input lineage (in c1/c11 that is the gate + surprisal + exact-dedup
     // semi-join chain — measured ~0.5 s per call, r19 optimization
@@ -277,39 +262,72 @@ object Dedup {
     // participate in no pair, so this is the more faithful allPairs
     // population; any gate flip it causes picks between strategies whose
     // outputs are identical (DedupSpec pins strategy independence
-    // against brute force for all three strategies).
-    val nDocs = if (cacheSets) sets.count() else df.count()
-    val allPairs = nDocs * math.max(nDocs - 1, 0) / 2
-    // estimated in-memory bytes of the sorted shingle-set table (string
-    // bytes + 16 B/element array overhead + 48 B/row)
-    val setsBytes = instBytes.toDouble + 16.0 * totInstances + 48.0 * nDocs
-    // dense corpus: blocking would keep most pairs anyway → all-pairs
-    // merge scoring beats candidate generation. Broadcast the set table
-    // when it fits (≤256 MB); up to 4 GB fall back to a partitioned
-    // cartesian (each task scores one block pair); beyond that the corpus
-    // is big enough that candidate generation wins again.
-    val dense = setsBytes <= 4e9 && sumF2 / 2 >= allPairs / 4
-    // broadcast gate on the HASH table (16 B/element + row overhead) —
-    // the hot side carries hashes, not strings
-    val hashBytes = 16.0 * totInstances + 48.0 * nDocs
-    val avgSz = totInstances.toDouble / math.max(nDocs, 1L)
+    // against brute force for all three strategies). Without cacheSets
+    // the raw input's (metadata-cheap) count is used — counting docs
+    // with zero shingles only overestimates allPairs, which biases the
+    // gate toward the conservative sparse path.
+    densityGate(sets, freqH, Some(col("glen")),
+        if (cacheSets) sets.count() else df.count(), strategy)(
+      (nWords, bc) => bitsetAllPairs(ex,
+        ex.groupBy("g").agg(count(lit(1)).as("gdf")), nWords, theta, bc),
+      bc => verifyJaccard(hashAllPairs(sets,
+        sort_array(transform(col("sh"), g => xxhash64(g))), theta, bc)
+        .select(col("doc_a"), col("doc_b")), sets, theta),
+      verifyJaccard(
+        jaccardCandidates(exh.select(col("doc"), col("sz"), col("gh")),
+          freqH.select(col("gh"), col("gdf")), theta, newIds = None),
+        sets, theta))
+  }
+
+  /** The density gate of the Jaccard serves ([[jaccardPairsBy]],
+    * [[jaccardPairsFromStored]]): ONE eager stats job over the (gh, gdf)
+    * frequency table, the doc count `nDocs` (skipped when no doc has a
+    * gram; `sets` only shapes that empty result), then the dispatch.
+    * A dense corpus (most pairs share a gram) keeps ~all pairs through
+    * prefix blocking, so all-pairs scoring beats candidate generation
+    * while the working set fits in 4 GB — the 16 B/element + 48 B/row
+    * hash table, plus `gramBytes`' string bytes for a scratch set table
+    * (the stored serve never loads strings). The all-pairs side
+    * broadcasts up to 256 MB of hash table and is a partitioned
+    * cartesian beyond. Of the two dense representations, the
+    * sorted-hash `merge` costs ~2·avgSz steps/pair with zero setup and
+    * `bitset` (given the word count) vocab/64 words/pair plus a
+    * vocabulary id pipeline; bitsets win once allPairs·avgSz ≈ 1e10
+    * amortizes that (char-grams at 100k docs: 393 s merged vs ~90 s
+    * bitset; word-shingles at 5k docs the reverse). Output is
+    * strategy-independent (verification is exact); DedupSpec and the
+    * d24 spec pin forced-sparse ≡ forced-dense ≡ scratch. */
+  private def densityGate(sets: DataFrame, freq: DataFrame,
+      gramBytes: Option[Column], nDocs: => Long, strategy: JaccardStrategy)(
+      bitset: (Int, Boolean) => DataFrame, merge: Boolean => DataFrame,
+      sparse: => DataFrame): DataFrame = {
+    val stats = freq.agg(count(lit(1)).as("vocab"),
+      Seq(coalesce(sum(col("gdf") * col("gdf")), lit(0L)).as("sumf2"),
+        coalesce(sum(col("gdf")), lit(0L)).as("totinst")) ++
+        gramBytes.map(b =>
+          coalesce(sum(col("gdf") * b), lit(0L)).as("instbytes")): _*)
+      .head()
+    val vocabSize = stats.getLong(0)
+    val sumF2 = stats.getLong(1)
+    val totInstances = stats.getLong(2)
+    val stringBytes = if (gramBytes.isDefined) stats.getLong(3).toDouble else 0.0
+    if (vocabSize == 0) { // no doc produced any gram — empty result
+      return sets.select(col("doc").as("doc_a"), col("doc").as("doc_b"),
+        lit(0.0).as("jaccard")).where(lit(false))
+    }
+    val n = nDocs
+    val allPairs = n * math.max(n - 1, 0) / 2
+    // estimated in-memory bytes: 16 B/element array overhead + 48 B/row
+    val hashBytes = 16.0 * totInstances + 48.0 * n
+    val dense = stringBytes + 16.0 * totInstances + 48.0 * n <= 4e9 &&
+      sumF2 / 2 >= allPairs / 4
+    val avgSz = totInstances.toDouble / math.max(n, 1L)
     val nWords = ((vocabSize + 64 + 63) / 64).toInt
-    val bitsetBytes = nDocs.toDouble * nWords * 8
-    // Two dense representations, chosen by measured per-pair work:
-    // the sorted-hash merge costs ~2·avgSz steps/pair with zero setup;
-    // dense bitsets cost vocab/64 words/pair but need a vocabulary id
-    // pipeline (window + broadcast join + groupBy). Bitsets win in the
-    // heavy-dense regime — large sets over a tiny vocabulary — once
-    // total pair work amortizes the setup (measured crossover around
-    // allPairs·avgSz ≈ 1e10: char-grams at 100k docs ran 393 s merged
-    // vs ~90 s bitset; word-shingles at 5k docs the reverse).
+    val bitsetBytes = n.toDouble * nWords * 8
     val bitsetWins = vocabSize <= BitsetVocabMax && bitsetBytes <= 4e9 &&
       nWords * 2 < avgSz && allPairs.toDouble * avgSz >= 1e10
-    def runBitset() =
-      bitsetAllPairs(ex, ex.groupBy("g").agg(count(lit(1)).as("gdf")),
-        nWords, theta, useBroadcast = bitsetBytes <= 256e6)
-    def runMerge() =
-      hashAllPairs(sets, theta, useBroadcast = hashBytes <= 256e6)
+    def runBitset() = bitset(nWords, bitsetBytes <= 256e6)
+    def runMerge() = merge(hashBytes <= 256e6)
     strategy match {
       case JaccardStrategy.DenseBitset =>
         require(vocabSize <= BitsetVocabMax,
@@ -318,11 +336,7 @@ object Dedup {
       case JaccardStrategy.DenseMerge => runMerge()
       case JaccardStrategy.Auto if dense =>
         if (bitsetWins) runBitset() else runMerge()
-      case _ => // Sparse forced, or Auto on a sparse corpus
-        verifyJaccard(
-          jaccardCandidates(exh.select(col("doc"), col("sz"), col("gh")),
-            freqH.select(col("gh"), col("gdf")), theta, newIds = None),
-          sets, theta)
+      case _ => sparse // Sparse forced, or Auto on a sparse corpus
     }
   }
 
@@ -348,16 +362,14 @@ object Dedup {
     * exact. The length-ratio conjunct (J ≥ θ ⇒ |A| ≥ θ·|B| and
     * symmetrically) prunes before the pair materializes.
     *
-    * `newIds` (the delta face, d22's streaming batches): restrict to
-    * candidates touching a listed doc on EITHER side. The prefix rank
-    * computes over the full posting frame AS OF THE BATCH — a shared
-    * total order at that instant, so the prefix filter is lossless for
-    * every pair that exists at batch time; a true pair is emitted in
-    * the batch its LATER member arrives (both rows present, both
-    * prefixes ranked under the same order), false candidates never
-    * verify, and a doc is new in exactly one batch (the id-anti-join
-    * refresh), so per-batch emissions are disjoint and their union
-    * equals the full serve exactly — no valve caveat, nothing dropped. */
+    * `newIds` (the delta face, d22's streaming batches): candidates
+    * touching a listed doc, by [[bucketPairs]]' delta rule. The prefix
+    * rank computes over the full posting frame AS OF THE BATCH — a
+    * shared total order at that instant, so the prefix filter is
+    * lossless for every pair that exists at batch time (both rows
+    * present, both prefixes ranked under the same order); false
+    * candidates never verify, so the union of deltas equals the full
+    * serve exactly — no valve caveat, nothing dropped. */
   private def jaccardCandidates(ex: DataFrame, freq: DataFrame,
       theta: Double, newIds: Option[DataFrame]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -367,25 +379,47 @@ object Dedup {
       .where(col("rnk") <=
         (col("sz") - ceil(lit(theta) * col("sz")) + 1).cast("int"))
       .select(col("doc"), col("sz"), col("gh"))
-    val cond = col("a.gh") === col("b.gh") && col("a.doc") < col("b.doc") &&
-      col("a.sz") >= ceil(lit(theta) * col("b.sz")) &&
-      col("b.sz") >= ceil(lit(theta) * col("a.sz"))
-    val a = prefix.alias("a")
-    val b = prefix.alias("b")
-    def pairCols(j: DataFrame): DataFrame =
-      j.select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-    val raw = newIds match {
-      case None => pairCols(a.join(b, cond))
+    bucketPairs(prefix, "doc", Seq("gh"), newIds)(
+        col("a.sz") >= ceil(lit(theta) * col("b.sz")),
+        col("b.sz") >= ceil(lit(theta) * col("a.sz")))
+      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
+      .distinct()
+  }
+
+  /** The one pair-join rule of the bucketed pair families (minhash
+    * bands, Hamming chunks, edit variant keys, Jaccard prefixes): `keyed`
+    * equi-joined with itself on `on`, the sides aliased `a` and `b`.
+    * `None` self-joins under `a.id < b.id`. `Some(ids)` (the id column
+    * is the frame's first) joins the full table against its
+    * ids-restricted slice under `a.id ≠ b.id` and re-orients each match
+    * so `a` holds the smaller id: a pair of two listed ids matches
+    * twice, identically, and the caller's pair dedup collapses it.
+    * Driven with a batch's genuinely-new ids over the post-append table,
+    * every pair is emitted exactly once across a feed, in the batch
+    * where its later member arrives, and the union over batches equals
+    * the `None` output over the final table (R17PropertySpec checks
+    * every family). `filter` stays INSIDE the join condition (the
+    * [[hammingPairs]] measurement) and must be symmetric in `a`/`b`. */
+  private def bucketPairs(keyed: DataFrame, id: String, on: Seq[String],
+      newIds: Option[DataFrame])(filter: Column*): DataFrame = {
+    def cond(idRule: Column) =
+      (on.map(k => col(s"a.$k") === col(s"b.$k")) ++ (idRule +: filter))
+        .reduce(_ && _)
+    newIds match {
+      case None =>
+        keyed.alias("a").join(keyed.alias("b"),
+          cond(col(s"a.$id") < col(s"b.$id")))
       case Some(nw) =>
-        val ids = nw.select(col(nw.columns.head).as("doc"))
-        val aNew = prefix.join(ids, Seq("doc"), "left_semi").alias("a")
-        val bNew = prefix.join(ids, Seq("doc"), "left_semi").alias("b")
-        // both-sides-new pairs appear in both branches; the trailing
-        // distinct dedups them inside the batch
-        pairCols(aNew.join(b, cond))
-          .unionByName(pairCols(a.join(bNew, cond)))
+        val fresh = keyed.join(nw.select(col(nw.columns.head).as(id)),
+          Seq(id), "left_semi")
+        val aLow = col(s"a.$id") < col(s"b.$id")
+        def side(x: String) =
+          struct(keyed.columns.toSeq.map(c => col(s"$x.$c").as(c)): _*)
+        keyed.alias("a").join(fresh.alias("b"),
+            cond(col(s"a.$id") =!= col(s"b.$id")))
+          .select(when(aLow, side("a")).otherwise(side("b")).as("a"),
+            when(aLow, side("b")).otherwise(side("a")).as("b"))
     }
-    raw.distinct()
   }
 
   /** Near-dup SURVIVORS — the keep-one-per-cluster discipline layered on
@@ -1105,18 +1139,26 @@ object Dedup {
   /** The banding half of [[minhashLshPairs]], runnable from a LIVE
     * [[minhashSets]] frame or a persisted signature table (the signature
     * length is `size(sig)` — not re-derived — so a stored index carries
-    * its own configuration). */
+    * its own configuration).
+    *
+    * `newIds` restricts to pairs INVOLVING a delta — the per-micro-batch
+    * kernel of STREAMING near-dup maintenance
+    * ([[graft.pipeline.SilverIndex.nearDupBatch]]): run against the
+    * post-append signature table with the batch's genuinely-new ids,
+    * every near-dup pair is emitted exactly once, in the batch where its
+    * later-arriving member lands ([[bucketPairs]]), so the union over
+    * batches ≡ the from-scratch output. At scale the all-docs band side
+    * comes from the persisted signature table (band keys are per-doc
+    * deterministic, so a deployment can persist them append-only
+    * alongside the signatures); the delta's join cost is ∝ bucket
+    * collisions with the delta, never the corpus pair space. */
   def minhashPairsFromSets(sets: DataFrame, rowsPerBand: Int,
-      theta: Double): DataFrame = {
-    val banded = bandKeys(sets, rowsPerBand)
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val candidates = a.join(b,
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .distinct()
-
+      theta: Double, newIds: Option[DataFrame] = None): DataFrame = {
+    val candidates =
+      bucketPairs(bandKeys(sets, rowsPerBand), "doc", Seq("band", "bucket"),
+          newIds)()
+        .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
+        .distinct()
     verifyJaccard(candidates, sets.select(col("doc"), col("sh")), theta)
   }
 
@@ -1134,36 +1176,6 @@ object Dedup {
           xxhash64(b, slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
-  }
-
-  /** [[minhashPairsFromSets]] restricted to pairs INVOLVING a delta:
-    * candidates between `newIds` docs and the FULL signature frame
-    * (both orientations, canonicalized to doc_a < doc_b), then the same
-    * exact-Jaccard verification. This is the per-micro-batch kernel of
-    * STREAMING near-dup maintenance: run against the post-append
-    * signature table with the batch's genuinely-new ids, every near-dup
-    * pair is emitted exactly once — in the batch where its later-
-    * arriving member lands (old–old pairs were emitted in an earlier
-    * batch; new–new pairs collapse under the canonicalized distinct).
-    * Union over batches ≡ the from-scratch [[minhashPairsFromSets]]
-    * output. At scale the all-docs band side comes from the persisted
-    * signature table (band keys are per-doc deterministic, so a
-    * deployment can persist them append-only alongside the signatures);
-    * the join cost is ∝ bucket collisions with the delta, never the
-    * corpus pair space. */
-  def minhashPairsDelta(sets: DataFrame, newIds: DataFrame,
-      rowsPerBand: Int, theta: Double): DataFrame = {
-    val banded = bandKeys(sets, rowsPerBand)
-    val fresh = banded.join(
-      newIds.select(col(newIds.columns.head).as("doc")), Seq("doc"),
-      "left_semi")
-    val candidates = banded.alias("a").join(fresh.alias("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc") =!= col("b.doc"))
-      .select(least(col("a.doc"), col("b.doc")).as("doc_a"),
-        greatest(col("a.doc"), col("b.doc")).as("doc_b"))
-      .distinct()
-    verifyJaccard(candidates, sets.select(col("doc"), col("sh")), theta)
   }
 
   /** 64-bit SimHash per document over distinct word n-gram shingles
@@ -1190,8 +1202,17 @@ object Dedup {
     * must agree EXACTLY on at least one of `maxDist + 1` disjoint bit
     * chunks (pigeonhole), so the join keys on (chunk, chunk-value)
     * buckets and never goes all-pairs; the exact Hamming bound filters
-    * inside the codegen'd join condition. */
-  def hammingPairs(docs: DataFrame, maxDist: Int): DataFrame = {
+    * inside the codegen'd join condition.
+    *
+    * `newIds`: pairs where AT LEAST ONE side is listed — what a
+    * streaming refresh ([[graft.pipeline.SilverIndex.simhashPairsBatch]],
+    * [[graft.pipeline.SilverIndex.frameNearDupBatch]]) emits for an
+    * arriving batch, so every pair surfaces exactly once across the
+    * feed's lifetime, in the batch its later member arrives
+    * ([[bucketPairs]]). One side of the bucket join is the new slice
+    * (batch-sized); the full side never self-joins. */
+  def hammingPairs(docs: DataFrame, maxDist: Int,
+      newIds: Option[DataFrame] = None): DataFrame = {
     val numChunks = maxDist + 1
     val chunkBits = 64 / numChunks
     // chunkBits = 64 (maxDist = 0) would shift-wrap the mask to 0 and
@@ -1204,57 +1225,16 @@ object Dedup {
       }: _*)))
       .withColumnRenamed("pos", "chunk")
       .withColumnRenamed("col", "ckey")
-    val a = chunked.alias("a")
-    val b = chunked.alias("b")
+    def dist = graft.functions.TextFunctions.hamming64(
+      col("a.simhash"), col("b.simhash"))
     // hamming filter INSIDE the join condition: buckets are coarse (2^chunkBits
     // per chunk), so at scale most bucket-collision pairs fail the distance
     // bound — rejecting them in the codegen'd join output beats shuffling
     // the full candidate set through the pair-dedup (measured at 100k docs:
     // 155M candidate rows, 68 s → 4 s)
-    a.join(b, col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
-        col("a.doc") < col("b.doc") &&
-        graft.functions.TextFunctions.hamming64(
-          col("a.simhash"), col("b.simhash")) <= maxDist)
+    bucketPairs(chunked, "doc", Seq("chunk", "ckey"), newIds)(dist <= maxDist)
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"),
-        graft.functions.TextFunctions.hamming64(
-          col("a.simhash"), col("b.simhash")).cast("int").as("hamming"))
-      .dropDuplicates("doc_a", "doc_b")
-  }
-
-  /** Incremental face of [[hammingPairs]] (the [[minhashPairsDelta]]
-    * discipline for 64-bit signature frames): pairs within `maxDist`
-    * where AT LEAST ONE side is in `newIds` — what a streaming refresh
-    * emits for an arriving batch so every pair surfaces exactly once
-    * across the feed's lifetime (old↔old pairs were emitted by the
-    * batches that introduced them). One side of the pigeonhole-bucket
-    * join is the new slice (batch-sized); the full side never
-    * self-joins. Pairs are canonicalized (least, greatest) so a
-    * new↔new pair appears once. */
-  def hammingPairsDelta(docs: DataFrame, newIds: DataFrame,
-      maxDist: Int): DataFrame = {
-    val numChunks = maxDist + 1
-    val chunkBits = 64 / numChunks
-    val chunkMask = if (chunkBits >= 64) -1L else (1L << chunkBits) - 1
-    val chunked = docs.select(col("doc"), col("simhash"),
-      posexplode(array((0 until numChunks).map { c =>
-        shiftrightunsigned(col("simhash"), c * chunkBits)
-          .bitwiseAND(lit(chunkMask))
-      }: _*)))
-      .withColumnRenamed("pos", "chunk")
-      .withColumnRenamed("col", "ckey")
-    val fresh = chunked.join(
-      newIds.select(col(newIds.columns.head).as("doc")), Seq("doc"),
-      "left_semi")
-    chunked.alias("a").join(fresh.alias("b"),
-        col("a.chunk") === col("b.chunk") &&
-          col("a.ckey") === col("b.ckey") &&
-          col("a.doc") =!= col("b.doc") &&
-          graft.functions.TextFunctions.hamming64(
-            col("a.simhash"), col("b.simhash")) <= maxDist)
-      .select(least(col("a.doc"), col("b.doc")).as("doc_a"),
-        greatest(col("a.doc"), col("b.doc")).as("doc_b"),
-        graft.functions.TextFunctions.hamming64(
-          col("a.simhash"), col("b.simhash")).cast("int").as("hamming"))
+        dist.cast("int").as("hamming"))
       .dropDuplicates("doc_a", "doc_b")
   }
 
@@ -1331,21 +1311,41 @@ object Dedup {
     * ([[graft.pipeline.SilverIndex.editPairsFromIndex]]). The
     * hot-variant valve applies HERE, at serve time, because variant
     * occupancy is a corpus-wide property the per-row append cannot
-    * know. */
+    * know.
+    *
+    * `newIds`: every pair touching a listed id, for the streaming face
+    * of the persisted edit-pair index
+    * ([[graft.pipeline.SilverIndex.editPairsBatch]], d18). `keyed` is
+    * then the full table INCLUDING the new rows; each pair is emitted
+    * once, in the batch its later id arrives ([[bucketPairs]]), with
+    * str_a/str_b following the id orientation. The valve is evaluated
+    * over the full table AS OF THE BATCH, so each delta matches what the
+    * full serve would emit over that snapshot. NOTE the valve's
+    * accumulation semantics (ADVICE r17): variant occupancy grows
+    * monotonically, so with a finite `maxVariantOcc` a pair emitted
+    * while its variant key was still under the ceiling REMAINS in the
+    * accumulated pairs table after the key crosses it, while a
+    * from-scratch serve would drop it — the union of deltas equals
+    * serve-time output exactly only when the valve is off
+    * (`Long.MaxValue`, the default). With the valve on, the accumulated
+    * table is a SUPERSET of the serve output restricted to pairs that
+    * were cold at emission time — operationally the desirable reading
+    * (a pair verified under the exact levenshtein check never
+    * un-verifies), but not the serve equality; consumers needing the
+    * serve semantics re-filter against [[keptVariantKeys]] at read
+    * time. */
   def editPairsFromKeys(keyed: DataFrame, maxDist: Int,
-      maxVariantOcc: Long = Long.MaxValue): DataFrame = {
+      maxVariantOcc: Long = Long.MaxValue,
+      newIds: Option[DataFrame] = None): DataFrame = {
     require(maxDist == 1 || maxDist == 2,
       s"symmetric-delete blocking is exact for maxDist 1 or 2: $maxDist")
     require(maxVariantOcc >= 2, s"maxVariantOcc must be >= 2: $maxVariantOcc")
-    val kept = keptVariantKeys(keyed, maxVariantOcc)
-    val a = kept.alias("a")
-    val b = kept.alias("b")
-    a.join(b, col("a.vk") === col("b.vk") &&
-        col("a.id") < col("b.id") &&
-        levenshtein(col("a.str"), col("b.str")) <= maxDist)
+    def dist = levenshtein(col("a.str"), col("b.str"))
+    bucketPairs(keptVariantKeys(keyed, maxVariantOcc), "id", Seq("vk"),
+        newIds)(dist <= maxDist)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.str").as("str_a"), col("b.str").as("str_b"),
-        levenshtein(col("a.str"), col("b.str")).cast("long").as("dist"))
+        dist.cast("long").as("dist"))
       .dropDuplicates("id_a", "id_b")
   }
 
@@ -1360,51 +1360,6 @@ object Dedup {
         .select(col("vk"))
       keyed.join(hot, Seq("vk"), "left_anti")
     }
-
-  /** DELTA edit pairs — every candidate pair touching a NEW id, for
-    * the streaming face of the persisted edit-pair index (d18): the
-    * [[hammingPairsDelta]] shape over variant keys. `keyed` is the
-    * full (id, str, vk) table INCLUDING the new rows; `newIds` the
-    * one-column frame of ids arriving this batch. Pairs are
-    * canonicalized (least, greatest) by id so a new↔new pair appears
-    * once; the valve is evaluated over the full table AS OF THE BATCH,
-    * so each delta matches what [[editPairsFromKeys]] would emit over
-    * that snapshot. NOTE the valve's accumulation semantics (ADVICE
-    * r17): variant occupancy grows monotonically, so with a finite
-    * `maxVariantOcc` a pair emitted while its variant key was still
-    * under the ceiling REMAINS in the accumulated pairs table after
-    * the key crosses it, while a from-scratch serve
-    * ([[graft.pipeline.SilverIndex.editPairsFromIndex]]) would drop
-    * it — the union of deltas equals serve-time output exactly only
-    * when the valve is off (`Long.MaxValue`, the default). With the
-    * valve on, the accumulated table is a SUPERSET of the serve
-    * output restricted to pairs that were cold at emission time —
-    * operationally the desirable reading (a pair verified under the
-    * exact levenshtein check never un-verifies), but not the serve
-    * equality; consumers needing the serve semantics re-filter
-    * against [[keptVariantKeys]] at read time. */
-  def editPairsDelta(keyed: DataFrame, newIds: DataFrame, maxDist: Int,
-      maxVariantOcc: Long = Long.MaxValue): DataFrame = {
-    require(maxDist == 1 || maxDist == 2,
-      s"symmetric-delete blocking is exact for maxDist 1 or 2: $maxDist")
-    require(maxVariantOcc >= 2, s"maxVariantOcc must be >= 2: $maxVariantOcc")
-    val kept = keptVariantKeys(keyed, maxVariantOcc)
-    val fresh = kept.join(
-      newIds.select(col(newIds.columns.head).as("id")), Seq("id"),
-      "left_semi")
-    kept.alias("a").join(fresh.alias("b"),
-        col("a.vk") === col("b.vk") &&
-          col("a.id") =!= col("b.id") &&
-          levenshtein(col("a.str"), col("b.str")) <= maxDist)
-      .select(least(col("a.id"), col("b.id")).as("id_a"),
-        greatest(col("a.id"), col("b.id")).as("id_b"),
-        when(col("a.id") < col("b.id"), col("a.str"))
-          .otherwise(col("b.str")).as("str_a"),
-        when(col("a.id") < col("b.id"), col("b.str"))
-          .otherwise(col("a.str")).as("str_b"),
-        levenshtein(col("a.str"), col("b.str")).cast("long").as("dist"))
-      .dropDuplicates("id_a", "id_b")
-  }
 
   /** Quality-aware canonical selection over near-dup clusters — the
     * production dedup shape: instead of keeping an ARBITRARY survivor
@@ -1500,11 +1455,21 @@ object Dedup {
     val ex = sets
       .select(col("doc"), col("sz"), explode(col("sh")).as("g"))
       .select(col("doc"), col("sz"), xxhash64(col("g")).as("gh"))
-    val cands = containmentCandidates(ex, theta, newIds = None)
+    verifyContainment(containmentCandidates(ex, theta, newIds = None),
+      sets, "sh", theta)
+  }
+
+  /** The exact containment verify, over whichever per-doc array column
+    * `arr` of `sets` holds the distinct grams (the string sets of the
+    * scratch operator, the stored hash arrays of the served one): one
+    * array_intersect per surviving candidate; containment = n_shared /
+    * the TRUE distinct-gram count `sz`. */
+  private def verifyContainment(cands: DataFrame, sets: DataFrame,
+      arr: String, theta: Double): DataFrame =
     cands
-      .join(sets.select(col("doc").as("doc_s"), col("sh").as("sh_s"),
+      .join(sets.select(col("doc").as("doc_s"), col(arr).as("sh_s"),
         col("sz").as("sz_s")), "doc_s")
-      .join(sets.select(col("doc").as("doc_b"), col("sh").as("sh_b")),
+      .join(sets.select(col("doc").as("doc_b"), col(arr).as("sh_b")),
         "doc_b")
       .withColumn("n_shared",
         size(array_intersect(col("sh_s"), col("sh_b"))).cast("long"))
@@ -1513,7 +1478,6 @@ object Dedup {
       .where(col("containment") >= theta)
       .select(col("doc_s").as("doc_small"), col("doc_b").as("doc_big"),
         col("n_shared"), col("containment"))
-  }
 
   /** The asymmetric rarest-prefix candidate stage of
     * [[containmentPairs]], over an exploded (doc, sz, gh) posting frame
@@ -1540,6 +1504,10 @@ object Dedup {
     * the union of deltas equals the full serve (every true pair is
     * candidate-reachable in the batch its later member arrives, by the
     * same any-prefix losslessness; false candidates never verify).
+    * The delta keeps two orientations rather than [[bucketPairs]]' one
+    * join: the prefix side and the full posting side are different
+    * frames, so a new doc must be looked up as the prefix (small) side
+    * AND as the posting (big) side.
     *
     * +2, not the textbook +1: the verification predicate is the IEEE
     * compare shared/sz >= θ, and both floor((1−θ)·sz) here and that
@@ -1615,58 +1583,36 @@ object Dedup {
     * THETA-FREE: the threshold (and the rarest-prefix it sizes) is a
     * serve-time choice over the same stored rows, so one index answers
     * any audit threshold — see [[containmentCandidates]] for why the
-    * prefix is never stored. */
-  private[graft] def containmentPairsFromStored(stored: DataFrame,
-      theta: Double): DataFrame = {
-    require(theta > 0.0 && theta <= 1.0,
-      s"theta must be in (0, 1]: $theta")
-    val st = graft.ManagedCache.swap("Dedup.containmentPairsFromStored",
-      stored.select(col("doc"), col("sz"), col("hashes")))
-    val ex = st.select(col("doc"), col("sz"),
-      explode(col("hashes")).as("gh"))
-    verifyContainmentHashes(containmentCandidates(ex, theta, None), st,
-      theta)
-  }
-
-  /** DELTA containment pairs — every pair touching a NEW doc, for the
-    * streaming face of the persisted containment index (d20): the
-    * [[editPairsDelta]] shape over shingle-hash postings. `stored` is
-    * the full (doc, sz, hashes) table INCLUDING the new rows; `newIds`
-    * the one-column frame of docs arriving this batch. The rarity
+    * prefix is never stored.
+    *
+    * `newIds`: every pair touching a listed doc, for the streaming face
+    * of the persisted containment index
+    * ([[graft.pipeline.SilverIndex.containmentPairsBatch]], d20).
+    * `stored` is then the full table INCLUDING the new rows; the rarity
     * ranking computes over the table AS OF THE BATCH (choice-
-    * independent — [[containmentCandidates]]), so the union of deltas
-    * equals [[containmentPairsFromStored]] over the final table
-    * EXACTLY, with no valve caveat (the prefix filter is lossless,
-    * nothing is dropped). */
-  private[graft] def containmentPairsDelta(stored: DataFrame,
-      newIds: DataFrame, theta: Double): DataFrame = {
-    require(theta > 0.0 && theta <= 1.0,
-      s"theta must be in (0, 1]: $theta")
-    val st = graft.ManagedCache.swap("Dedup.containmentPairsDelta",
-      stored.select(col("doc"), col("sz"), col("hashes")))
-    val ex = st.select(col("doc"), col("sz"),
-      explode(col("hashes")).as("gh"))
-    verifyContainmentHashes(
-      containmentCandidates(ex, theta, Some(newIds)), st, theta)
+    * independent), so each pair is emitted once, in the batch its later
+    * member arrives, and the union of deltas equals the full serve over
+    * the final table EXACTLY, with no valve caveat (the prefix filter is
+    * lossless, nothing is dropped). */
+  private[graft] def containmentPairsFromStored(stored: DataFrame,
+      theta: Double, newIds: Option[DataFrame] = None): DataFrame = {
+    val (st, ex) = storedPostings(stored, theta,
+      "Dedup.containmentPairsFromStored")
+    verifyContainment(containmentCandidates(ex, theta, newIds), st,
+      "hashes", theta)
   }
 
-  /** The exact verify of the stored-hash containment family: one
-    * array_intersect per surviving candidate against the stored
-    * arrays; containment = n_shared / TRUE distinct-shingle count. */
-  private def verifyContainmentHashes(cands: DataFrame, st: DataFrame,
-      theta: Double): DataFrame =
-    cands
-      .join(st.select(col("doc").as("doc_s"), col("hashes").as("h_s"),
-        col("sz").as("sz_s")), "doc_s")
-      .join(st.select(col("doc").as("doc_b"), col("hashes").as("h_b")),
-        "doc_b")
-      .withColumn("n_shared",
-        size(array_intersect(col("h_s"), col("h_b"))).cast("long"))
-      .withColumn("containment",
-        col("n_shared").cast("double") / col("sz_s"))
-      .where(col("containment") >= theta)
-      .select(col("doc_s").as("doc_small"), col("doc_b").as("doc_big"),
-        col("n_shared"), col("containment"))
+  /** The opening of both stored-hash serves: the θ check, the cached
+    * (doc, sz, hashes) table in the serve's [[graft.ManagedCache]]
+    * slot, and its exploded (doc, sz, gh) postings. */
+  private def storedPostings(stored: DataFrame, theta: Double,
+      slot: String): (DataFrame, DataFrame) = {
+    require(theta > 0.0 && theta <= 1.0,
+      s"theta must be in (0, 1]: $theta")
+    val st = graft.ManagedCache.swap(slot,
+      stored.select(col("doc"), col("sz"), col("hashes")))
+    (st, st.select(col("doc"), col("sz"), explode(col("hashes")).as("gh")))
+  }
 
   /** [[jaccardPairsBy]]'s symmetric pairs served from a stored
     * (doc, sz, hashes) table — the SAME artifact the containment serve
@@ -1690,114 +1636,42 @@ object Dedup {
     * verify's failure mode and probability verbatim, ~m²/2⁶⁵ per pair
     * (~10⁻⁹ at 10⁵ distinct grams). The gate's d22 entry pins exact
     * equality with d2's brute-force string oracle at sf0.01 every
-    * battery. */
+    * battery.
+    *
+    * `newIds`: every pair touching a listed doc, for the streaming face
+    * of the persisted shingle index
+    * ([[graft.pipeline.SilverIndex.jaccardPairsBatch]], d22). `stored`
+    * is then the full table INCLUDING the new rows; the density gate is
+    * skipped (whatever `strategy`) and the prefix candidates run, their
+    * order computed over the table AS OF THE BATCH — lossless for every
+    * pair existing then, so each pair is emitted once, in the batch its
+    * later member arrives, and the union of deltas equals the full
+    * serve over the final table EXACTLY. */
   private[graft] def jaccardPairsFromStored(stored: DataFrame,
       theta: Double,
-      strategy: JaccardStrategy = JaccardStrategy.Auto): DataFrame = {
-    require(theta > 0.0 && theta <= 1.0,
-      s"theta must be in (0, 1]: $theta")
-    val st = graft.ManagedCache.swap("Dedup.jaccardPairsFromStored",
-      stored.select(col("doc"), col("sz"), col("hashes")))
-    val ex = st.select(col("doc"), col("sz"),
-      explode(col("hashes")).as("gh"))
+      strategy: JaccardStrategy = JaccardStrategy.Auto,
+      newIds: Option[DataFrame] = None): DataFrame = {
+    val (st, ex) = storedPostings(stored, theta,
+      "Dedup.jaccardPairsFromStored")
     val freq = ex.groupBy("gh").agg(count(lit(1)).as("gdf"))
-    // the scratch operator's density gate, re-derived from the STORED
-    // postings (one eager stats job — the jaccardPairsBy shape): a
-    // dense corpus (small vocabulary, most pairs share a gram) keeps
-    // ~all pairs through prefix blocking, so candidate generation costs
-    // more than scoring every pair. The string-bytes term drops out —
-    // the stored serve never loads strings — so the working-set gate
-    // runs on the 16 B/element hash table the pair scan actually reads.
-    // Output is strategy-independent (verification is exact either
-    // way); the d24 spec pins forced-sparse ≡ forced-dense ≡ scratch.
-    val stats = freq.agg(count(lit(1)).as("vocab"),
-      coalesce(sum(col("gdf") * col("gdf")), lit(0L)).as("sumf2"),
-      coalesce(sum(col("gdf")), lit(0L)).as("totinst")).head()
-    val vocabSize = stats.getLong(0)
-    val sumF2 = stats.getLong(1)
-    val totInstances = stats.getLong(2)
-    if (vocabSize == 0) {
-      return st.select(col("doc").as("doc_a"), col("doc").as("doc_b"),
-        lit(0.0).as("jaccard")).where(lit(false))
-    }
-    val nDocs = st.count()
-    val allPairs = nDocs * math.max(nDocs - 1, 0) / 2
-    val hashBytes = 16.0 * totInstances + 48.0 * nDocs
-    val avgSz = totInstances.toDouble / math.max(nDocs, 1L)
-    val nWords = ((vocabSize + 64 + 63) / 64).toInt
-    val bitsetBytes = nDocs.toDouble * nWords * 8
-    val dense = hashBytes <= 4e9 && sumF2 / 2 >= allPairs / 4
-    val bitsetWins = vocabSize <= BitsetVocabMax && bitsetBytes <= 4e9 &&
-      nWords * 2 < avgSz && allPairs.toDouble * avgSz >= 1e10
-    // bitsetAllPairs is gram-type-generic (the vocabulary id window
-    // orders by the gram column, long or string) — feed it the stored
-    // hash postings directly
-    def runBitset() = bitsetAllPairs(
-      ex.select(col("doc"), col("sz"), col("gh").as("g")),
-      freq.select(col("gh").as("g"), col("gdf")),
-      nWords, theta, useBroadcast = bitsetBytes <= 256e6)
-    def runMerge() =
-      hashAllPairsFromStored(st, theta, useBroadcast = hashBytes <= 256e6)
-    strategy match {
-      case JaccardStrategy.DenseBitset =>
-        require(vocabSize <= BitsetVocabMax,
-          s"DenseBitset needs vocab <= $BitsetVocabMax, measured $vocabSize")
-        runBitset()
-      case JaccardStrategy.DenseMerge => runMerge()
-      case JaccardStrategy.Auto if dense =>
-        if (bitsetWins) runBitset() else runMerge()
-      case _ =>
-        verifyJaccardHashes(jaccardCandidates(ex, freq, theta, None), st,
-          theta)
-    }
-  }
-
-  /** [[hashAllPairs]] over STORED rows — the dense-regime all-pairs
-    * merge with the hash/sort stage already paid at refresh time: the
-    * stored arrays are ascending-sorted by construction, so each pair
-    * costs one early-exit GE prefilter ([[graft.functions
-    * .SortedLongJaccardGE]]) and survivors one exact merge for the
-    * value — no per-pair transform, no per-pair sort, no string load. */
-  private def hashAllPairsFromStored(st: DataFrame, theta: Double,
-      useBroadcast: Boolean): DataFrame = {
-    val hashed = st.select(col("doc"), col("sz"),
-        ceil(lit(theta) * col("sz")).cast("int").as("minsz"),
-        col("hashes").as("hs"))
-      .transform(Par.spread(_, col("doc")))
-    val ba = hashed.select(col("doc").as("doc_a"), col("sz").as("sza"),
-      col("minsz").as("minsza"), col("hs").as("hsa"))
-    val bb = hashed.select(col("doc").as("doc_b"), col("sz").as("szb"),
-      col("minsz").as("minszb"), col("hs").as("hsb"))
-    ba.crossJoin(if (useBroadcast) broadcast(bb) else bb)
-      .where(col("doc_a") < col("doc_b") &&
-        col("sza") >= col("minszb") && col("szb") >= col("minsza") &&
-        sortedLongJaccardGECol(col("hsa"), col("hsb"), theta))
-      .withColumn("jaccard", sortedLongJaccardCol(col("hsa"), col("hsb")))
-      .where(col("jaccard") >= theta)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-  }
-
-  /** DELTA Jaccard pairs — every pair touching a NEW doc, for the
-    * streaming face of the persisted shingle index (d22): the
-    * [[containmentPairsDelta]] shape over the symmetric criterion.
-    * `stored` is the full (doc, sz, hashes) table INCLUDING the new
-    * rows; `newIds` the one-column frame of docs arriving this batch.
-    * The prefix order computes over the table AS OF THE BATCH (lossless
-    * for every pair existing then — [[jaccardCandidates]]), so the
-    * union of deltas equals [[jaccardPairsFromStored]] over the final
-    * table EXACTLY, each pair emitted once, in the batch its later
-    * member arrives. */
-  private[graft] def jaccardPairsDelta(stored: DataFrame,
-      newIds: DataFrame, theta: Double): DataFrame = {
-    require(theta > 0.0 && theta <= 1.0,
-      s"theta must be in (0, 1]: $theta")
-    val st = graft.ManagedCache.swap("Dedup.jaccardPairsDelta",
-      stored.select(col("doc"), col("sz"), col("hashes")))
-    val ex = st.select(col("doc"), col("sz"),
-      explode(col("hashes")).as("gh"))
-    val freq = ex.groupBy("gh").agg(count(lit(1)).as("gdf"))
-    verifyJaccardHashes(
-      jaccardCandidates(ex, freq, theta, Some(newIds)), st, theta)
+    def sparse =
+      verifyJaccardHashes(jaccardCandidates(ex, freq, theta, newIds), st,
+        theta)
+    if (newIds.isDefined) sparse
+    else densityGate(st, freq, None, st.count(), strategy)(
+      // bitsetAllPairs is gram-type-generic (the vocabulary id window
+      // orders by the gram column, long or string) — feed it the stored
+      // hash postings directly
+      (nWords, bc) => bitsetAllPairs(
+        ex.select(col("doc"), col("sz"), col("gh").as("g")),
+        freq.select(col("gh").as("g"), col("gdf")), nWords, theta, bc),
+      // the stored arrays are ascending-sorted by construction: each pair
+      // costs one early-exit GE prefilter and survivors one exact merge
+      bc => hashAllPairs(st, col("hashes"), theta, bc)
+        .withColumn("jaccard", sortedLongJaccardCol(col("hsa"), col("hsb")))
+        .where(col("jaccard") >= theta)
+        .select(col("doc_a"), col("doc_b"), col("jaccard")),
+      sparse)
   }
 
   /** The exact verify of the stored-hash Jaccard family: one codegen

@@ -478,7 +478,7 @@ object SilverIndex {
     * streaming face; drive it with [[onEachBatch]], home = `sigPath`) —
     * [[pairDeltaBatch]] over frame fingerprints: it appends the new
     * docs' fingerprints and emits exactly the pairs touching them
-    * ([[Dedup.hammingPairsDelta]] over frame keys, canonicalized; the
+    * ([[Dedup.hammingPairs]] over frame keys with `newIds`; the
     * [[nearDupBatch]] pair contract). */
   def frameNearDupBatch(batch: DataFrame,
       batchId: Long, idCol: String, frameIdxCol: String,
@@ -491,11 +491,11 @@ object SilverIndex {
           .select(col("doc"),
             (col("doc") * frameStride + col("frame_idx")).as("fid"),
             col("fingerprint"))
-        Dedup.hammingPairsDelta(
+        Dedup.hammingPairs(
           keyed.select(col("fid").as("doc"),
             col("fingerprint").as("simhash")),
-          keyed.join(newIds, Seq("doc"), "left_semi").select("fid"),
-          maxDist)
+          maxDist,
+          Some(keyed.join(newIds, Seq("doc"), "left_semi").select("fid")))
     }
 
   // ------------------------- symmetric-delete edit-pair index (d18)
@@ -542,17 +542,17 @@ object SilverIndex {
     * streaming face; drive it with [[onEachBatch]], home = `sigPath`) —
     * [[pairDeltaBatch]] over variant keys: it appends the new ids'
     * deletion variants and emits exactly the pairs touching them
-    * ([[graft.operators.Dedup.editPairsDelta]], canonicalized; the
+    * ([[graft.operators.Dedup.editPairsFromKeys]] with `newIds`; the
     * [[nearDupBatch]] pair contract). */
   def editPairsBatch(batch: DataFrame, batchId: Long,
       idCol: String, strCol: String, maxDist: Int, maxVariantOcc: Long,
       sigPath: String, pairsPath: String): Unit =
     pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
       refreshEditIndex(_, idCol, strCol, maxDist, sigPath))(
-      graft.operators.Dedup.editPairsDelta(
+      newIds => graft.operators.Dedup.editPairsFromKeys(
         editIndex(batch.sparkSession, sigPath)
           .select(col("doc").as("id"), col("str"), col("vk")),
-        _, maxDist, maxVariantOcc))
+        maxDist, maxVariantOcc, Some(newIds)))
 
   // ---------------- persisted containment-pairs index (d20, r19)
 
@@ -616,7 +616,8 @@ object SilverIndex {
     * streaming face; drive it with [[onEachBatch]], home = `sigPath`) —
     * [[pairDeltaBatch]] over shingle-hash rows: it appends the new docs'
     * rows and emits exactly the pairs touching them
-    * ([[graft.operators.Dedup.containmentPairsDelta]] — rarity ranked
+    * ([[graft.operators.Dedup.containmentPairsFromStored]] with
+    * `newIds` — rarity ranked
     * as-of-batch, choice-independent, so the union of deltas ≡ the full
     * serve with NO valve caveat; the [[nearDupBatch]] pair contract). */
   def containmentPairsBatch(batch: DataFrame,
@@ -624,10 +625,10 @@ object SilverIndex {
       theta: Double, sigPath: String, pairsPath: String): Unit =
     pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
       refreshContainmentIndex(_, idCol, textCol, n, sigPath))(
-      graft.operators.Dedup.containmentPairsDelta(
+      newIds => graft.operators.Dedup.containmentPairsFromStored(
         containmentIndex(batch.sparkSession, sigPath)
           .select(col("doc"), col("sz"), col("hashes")),
-        _, theta))
+        theta, Some(newIds)))
 
   /** Symmetric exact-Jaccard pairs served from the SAME persisted
     * shingle-hash artifact [[refreshContainmentIndex]] maintains — the
@@ -656,7 +657,8 @@ object SilverIndex {
     * over the shared shingle-hash artifact (d22's streaming face; drive
     * it with [[onEachBatch]], home = `sigPath`) — [[pairDeltaBatch]]
     * appending the new docs' rows and emitting the SYMMETRIC
-    * criterion's delta ([[graft.operators.Dedup.jaccardPairsDelta]] —
+    * criterion's delta ([[graft.operators.Dedup.jaccardPairsFromStored]]
+    * with `newIds` —
     * prefix order as-of-batch, union of deltas ≡ the full serve, each
     * pair exactly once). */
   def jaccardPairsBatch(batch: DataFrame,
@@ -664,10 +666,10 @@ object SilverIndex {
       theta: Double, sigPath: String, pairsPath: String): Unit =
     pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
       refreshContainmentIndex(_, idCol, textCol, n, sigPath))(
-      graft.operators.Dedup.jaccardPairsDelta(
+      newIds => graft.operators.Dedup.jaccardPairsFromStored(
         containmentIndex(batch.sparkSession, sigPath)
           .select(col("doc"), col("sz"), col("hashes")),
-        _, theta))
+        theta, newIds = Some(newIds)))
 
   // ---------------- persisted simhash signature index (d25, r19)
 
@@ -717,7 +719,8 @@ object SilverIndex {
     * streaming face; drive it with [[onEachBatch]], home = `sigPath`) —
     * [[pairDeltaBatch]] over signature rows: it appends the new docs'
     * signatures and emits exactly the Hamming pairs touching them
-    * ([[graft.operators.Dedup.hammingPairsDelta]] — chunk buckets are
+    * ([[graft.operators.Dedup.hammingPairs]] with `newIds` — chunk
+    * buckets are
     * corpus-state-free, so the union of deltas ≡ the full serve, each
     * pair exactly once). */
   def simhashPairsBatch(batch: DataFrame,
@@ -725,10 +728,10 @@ object SilverIndex {
       maxDist: Int, sigPath: String, pairsPath: String): Unit =
     pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
       refreshSimhashIndex(_, idCol, textCol, shingleN, sigPath))(
-      graft.operators.Dedup.hammingPairsDelta(
+      newIds => graft.operators.Dedup.hammingPairs(
         simhashIndex(batch.sparkSession, sigPath)
           .select(col("doc"), col("simhash")),
-        _, maxDist))
+        maxDist, Some(newIds)))
 
   /** p6 staged-swap erasure for the simhash signature table. */
   def eraseSimhashIndex(spark: SparkSession, path: String,
@@ -2085,7 +2088,8 @@ object SilverIndex {
     * [[refreshMinhash]] anti-join discipline), then (2) emits the
     * near-dup pairs INVOLVING those new docs against the full
     * post-append signature table
-    * ([[graft.operators.Dedup.minhashPairsDelta]]) into `pairsPath`.
+    * ([[graft.operators.Dedup.minhashPairsFromSets]] with `newIds`)
+    * into `pairsPath`.
     *
     * The pair contract every per-batch emitter here shares: each pair
     * lands exactly once — in the batch where its later-arriving member
@@ -2105,8 +2109,9 @@ object SilverIndex {
       pairsPath: String): Unit =
     pairDeltaBatch(batch, batchId, idCol, sigPath, pairsPath)(
       refreshMinhash(_, idCol, textCol, n, numHashes, sigPath))(
-      graft.operators.Dedup.minhashPairsDelta(
-        minhashIndex(batch.sparkSession, sigPath), _, rowsPerBand, theta))
+      newIds => graft.operators.Dedup.minhashPairsFromSets(
+        minhashIndex(batch.sparkSession, sigPath), rowsPerBand, theta,
+        Some(newIds)))
 
   // ------------------------------------------------------------- erasure
 

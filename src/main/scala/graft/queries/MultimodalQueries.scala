@@ -65,6 +65,26 @@ object MultimodalQueries {
       ()
     }
 
+  /** m8/m9's frames keyed `fid = doc_id·100000 + frame_idx` (the pair
+    * key space both queries band over): (fid, frame). */
+  private def frameKeys(s: SparkSession, dir: String): DataFrame =
+    neardupFrames(s, dir).select(
+      (col("doc_id") * lit(100000L) + col("frame_idx")).as("fid"),
+      col("frame"))
+
+  /** m8/m9's pair diagnostics: each (doc_a, doc_b, hamming) frame pair
+    * as (fid_a, fid_b, hamming, same_md5) — whether the two frames are
+    * also byte-identical. */
+  private def withMd5Diagnostics(pairs: DataFrame,
+      keyed: DataFrame): DataFrame = {
+    def side(s: String) = keyed.select(col("fid").as(s"doc_$s"),
+      md5(col("frame")).as(s"md5_$s"))
+    pairs.join(side("a"), Seq("doc_a")).join(side("b"), Seq("doc_b"))
+      .select(col("doc_a").as("fid_a"), col("doc_b").as("fid_b"),
+        col("hamming"),
+        (col("md5_a") === col("md5_b")).cast("long").as("same_md5"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // m9 (r16): m8's near-dup pairs SERVED FROM THE PERSISTED
     // fingerprint index — frames are append-heavy in a real feed, and
@@ -76,19 +96,9 @@ object MultimodalQueries {
     // so m8's oracle applies VERBATIM; the md5 diagnostics join is
     // recomputed in-gate (it is pair diagnostics, not index content).
     "m9_frame_index" -> ((s, dir) => {
-      val pairs = graft.pipeline.SilverIndex.framePairs(
-        s, m9Path(s, dir), frameStride = 100000L, maxDist = 2)
-      val keyed = neardupFrames(s, dir).select(
-        (col("doc_id") * lit(100000L) + col("frame_idx")).as("fid"),
-        col("frame"))
-      val a = keyed.select(col("fid").as("doc_a"),
-        md5(col("frame")).as("md5_a"))
-      val b = keyed.select(col("fid").as("doc_b"),
-        md5(col("frame")).as("md5_b"))
-      pairs.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-        .select(col("doc_a").as("fid_a"), col("doc_b").as("fid_b"),
-          col("hamming"),
-          (col("md5_a") === col("md5_b")).cast("long").as("same_md5"))
+      withMd5Diagnostics(graft.pipeline.SilverIndex.framePairs(
+        s, m9Path(s, dir), frameStride = 100000L, maxDist = 2),
+        frameKeys(s, dir))
     }),
     "m1_binary_meta" -> ((s, dir) =>
       t(s, dir, "documents")
@@ -202,21 +212,11 @@ object MultimodalQueries {
     // hamming via bit_count(xor) in DuckDB vs the lossless pigeonhole
     // banding here).
     "m8_frame_neardup" -> ((s, dir) => {
-      val keyed = neardupFrames(s, dir).select(
-        (col("doc_id") * lit(100000L) + col("frame_idx")).as("fid"),
-        col("frame"))
-      val pairs = graft.operators.Dedup.hammingPairs(
+      val keyed = frameKeys(s, dir)
+      withMd5Diagnostics(graft.operators.Dedup.hammingPairs(
         keyed.select(col("fid").as("doc"),
           Multimodal.dhashFingerprint(col("frame")).as("simhash")),
-        maxDist = 2)
-      val a = keyed.select(col("fid").as("doc_a"),
-        md5(col("frame")).as("md5_a"))
-      val b = keyed.select(col("fid").as("doc_b"),
-        md5(col("frame")).as("md5_b"))
-      pairs.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-        .select(col("doc_a").as("fid_a"), col("doc_b").as("fid_b"),
-          col("hamming"),
-          (col("md5_a") === col("md5_b")).cast("long").as("same_md5"))
+        maxDist = 2), keyed)
     }),
 
     "m4_frame_dedup" -> ((s, dir) => {

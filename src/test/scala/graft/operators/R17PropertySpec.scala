@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{PropHelper, SparkTestBase}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -73,7 +74,7 @@ class R17PropertySpec extends SparkTestBase with PropHelper {
     }
   }
 
-  // --------------------------- editPairsDelta partitions the pairs
+  // --------------------- editPairsFromKeys' deltas partition the pairs
 
   test("editPairsDelta over random batch arrivals: the per-batch deltas " +
       "partition editPairs' output — every pair exactly once, in the " +
@@ -100,8 +101,8 @@ class R17PropertySpec extends SparkTestBase with PropHelper {
         seen = seen ++ b
         val keyed = Dedup.editVariantKeys(seen.toDF("id", "str"),
           "id", "str", 1)
-        val delta = Dedup.editPairsDelta(keyed,
-          b.map(_._1).toDF("id"), maxDist = 1)
+        val delta = Dedup.editPairsFromKeys(keyed, maxDist = 1,
+          newIds = Some(b.map(_._1).toDF("id")))
           .select("id_a", "id_b", "dist").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         emitted ++= delta
@@ -110,6 +111,68 @@ class R17PropertySpec extends SparkTestBase with PropHelper {
         s"a pair was emitted twice: ${emitted.diff(emitted.distinct)}")
       assert(emitted.toSeq.sorted == want,
         s"delta union ${emitted.toSeq.sorted} != one-shot $want")
+    }
+  }
+
+  // ----------------- every pair family's delta partitions its full serve
+
+  test("minhash, hamming, stored Jaccard and stored containment: over " +
+      "random batch arrivals the per-batch deltas partition the full " +
+      "serve over the final table — every pair exactly once") {
+    val s = spark
+    import s.implicits._
+    // name → (per-doc table from (id, text), serve over that table with
+    // an optional new-id slice)
+    val families: Seq[(String, DataFrame => DataFrame,
+        (DataFrame, Option[DataFrame]) => DataFrame)] = Seq(
+      ("minhash", Dedup.minhashSets(_, "id", "text", 1, 16),
+        (t, nw) => Dedup.minhashPairsFromSets(t, 2, 0.5, nw)),
+      ("hamming", Dedup.simhashDocs(_, "id", "text", 1),
+        (t, nw) => Dedup.hammingPairs(t, 12, nw)),
+      ("stored jaccard", Dedup.containmentDocRows(_, "id", "text", 1),
+        (t, nw) => Dedup.jaccardPairsFromStored(t, 0.5, newIds = nw)),
+      ("stored containment", Dedup.containmentDocRows(_, "id", "text", 1),
+        (t, nw) => Dedup.containmentPairsFromStored(t, 0.6, nw)))
+    // short texts over a five-word vocabulary: exact and near duplicates
+    // are common, so batches carry new↔new as well as new↔old pairs; ids
+    // are shuffled, so a later batch may carry the smaller id of a pair
+    val genDocs: Gen[List[(Long, String)]] = for {
+      n <- Gen.choose(6, 14)
+      texts <- Gen.listOfN(n, Gen.choose(2, 5).flatMap(k =>
+        Gen.listOfN(k, Gen.oneOf("a", "b", "c", "d", "e"))
+          .map(_.mkString(" "))))
+      seed <- Gen.long
+    } yield new scala.util.Random(seed)
+      .shuffle((1 to n).map(_.toLong).toList).zip(texts)
+    def collectRows(df: DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq
+    families.foreach { case (name, table, serve) =>
+      var sameBatchPairs = 0
+      forAllGen(genDocs, trials = 3) { rows =>
+        val want = collectRows(serve(table(rows.toDF("id", "text")), None))
+        // the edit case's schedule: three arrival batches by row stripe,
+        // the table grows cumulatively
+        val batches = rows.grouped(math.max(1, rows.size / 3 + 1)).toSeq
+        var seen = Seq.empty[(Long, String)]
+        val emitted = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
+        batches.foreach { b =>
+          seen = seen ++ b
+          val delta = collectRows(serve(table(seen.toDF("id", "text")),
+            Some(b.map(_._1).toDF("doc"))))
+          val ids = b.map(_._1).toSet
+          sameBatchPairs += delta.count(_.take(2).forall(d =>
+            ids(d.asInstanceOf[Long])))
+          emitted ++= delta
+        }
+        val keys = emitted.map(_.take(2))
+        assert(keys.size == keys.distinct.size,
+          s"$name: a pair was emitted twice: ${keys.diff(keys.distinct)}")
+        assert(emitted.map(_.mkString("|")).sorted ==
+            want.map(_.mkString("|")).sorted,
+          s"$name: delta union ${emitted.sortBy(_.mkString("|"))} != " +
+            s"full serve ${want.sortBy(_.mkString("|"))}")
+      }
+      assert(sameBatchPairs > 0, s"$name: no trial emitted a new↔new pair")
     }
   }
 

@@ -97,8 +97,9 @@ class StreamingNearDupSpec extends SparkTestBase {
             .localCheckpoint(true)
           SilverIndex.refreshMinhash(batch, "doc_id", "text", 2, 64,
             s"$root/sig")
-          Dedup.minhashPairsDelta(
-              SilverIndex.minhashIndex(s, s"$root/sig"), newIds, 4, 0.5)
+          Dedup.minhashPairsFromSets(
+              SilverIndex.minhashIndex(s, s"$root/sig"), 4, 0.5,
+              newIds = Some(newIds))
             .write.mode("append").parquet(s"$root/pairs")
           ()
       }
