@@ -105,8 +105,7 @@ case class VecSumFixed(
       s"vec_sum_fixed requires array<float|double>, got ${other.simpleString}")
   }
 
-  private lazy val isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private lazy val isFloat: Boolean = floatElems(child.dataType)
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](2 * dim)
 

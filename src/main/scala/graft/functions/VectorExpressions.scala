@@ -33,9 +33,6 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
           s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
     }
 
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   // a null ELEMENT null-propagates like the zip_with/aggregate
   // composition (and DuckDB's list functions) — the result is null, not
   // a dot product that silently read the hole as 0.0
@@ -43,11 +40,11 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     VectorKernel.dotOrNull(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      isFloat(left), isFloat(right))
+      floatElems(left.dataType), floatElems(right.dataType))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lf = isFloat(left)
-    val rf = isFloat(right)
+    val lf = floatElems(left.dataType)
+    val rf = floatElems(right.dataType)
     nullSafeCodeGen(ctx, ev, (x, y) => {
       val r = ctx.freshName("r")
       s"""
@@ -365,14 +362,11 @@ case class NearestCentroids(child: Expression, cents: Array[Array[Double]],
       s"nearest_centroids requires array<float|double>, got ${other.simpleString}")
   }
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       VectorKernelNearestK.nearestCentroids(
-        child.eval(input).asInstanceOf[ArrayData], isFloat,
-        cents, nb2s, nb2Null, k))
+        child.eval(input).asInstanceOf[ArrayData],
+        floatElems(child.dataType), cents, nb2s, nb2Null, k))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -381,7 +375,7 @@ case class NearestCentroids(child: Expression, cents: Array[Array[Double]],
     val nb2Ref = ctx.addReferenceObj("nb2s", nb2s, "double[]")
     val nbnRef = ctx.addReferenceObj("nb2Null", nb2Null, "boolean[]")
     val childGen = child.genCode(ctx)
-    val isF = isFloat.toString
+    val isF = floatElems(child.dataType).toString
     val kStr = k.toString
     val resultCode =
       code"""
@@ -420,15 +414,12 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]],
       s"nearest_centroid requires array<float|double>, got ${other.simpleString}")
   }
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   // a NULL input vector must reach the kernel (it resolves to index 0,
   // the window-shape edge), so bypass UnaryExpression's null short-circuit
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
     VectorKernelNearest.nearestCentroid(
-      child.eval(input).asInstanceOf[ArrayData], isFloat,
-      cents, nb2s, nb2Null)
+      child.eval(input).asInstanceOf[ArrayData],
+      floatElems(child.dataType), cents, nb2s, nb2Null)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -437,7 +428,7 @@ case class NearestCentroid(child: Expression, cents: Array[Array[Double]],
     val nb2Ref = ctx.addReferenceObj("nb2s", nb2s, "double[]")
     val nbnRef = ctx.addReferenceObj("nb2Null", nb2Null, "boolean[]")
     val childGen = child.genCode(ctx)
-    val isF = isFloat.toString
+    val isF = floatElems(child.dataType).toString
     val resultCode =
       code"""
         |int ${ev.value} = graft.functions.VectorKernelNearest.nearestCentroid(
@@ -516,20 +507,19 @@ case class VecNormQuantI8(child: Expression, levels: Int)
       s"vec_norm_quant_i8 requires array<float|double>, got ${other.simpleString}")
   }
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   // a null ELEMENT also nulls the result (the norm is null) — handled
   // inside the kernel, which returns null past nullSafeEval
   override protected def nullSafeEval(v: Any): Any =
-    VectorKernel.normQuantI8(v.asInstanceOf[ArrayData], isFloat, levels)
+    VectorKernel.normQuantI8(v.asInstanceOf[ArrayData],
+      floatElems(child.dataType), levels)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
       val r = ctx.freshName("r")
+      val isF = floatElems(child.dataType)
       s"""
          |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.VectorKernel.normQuantI8($v, $isFloat, $levels);
+         |  graft.functions.VectorKernel.normQuantI8($v, $isF, $levels);
          |if ($r == null) {
          |  ${ev.isNull} = true;
          |} else {
@@ -558,15 +548,15 @@ case class HyperplaneSig(child: Expression, offset: Int, bits: Int)
       s"hyperplane_sig requires array<float|double>, got ${other.simpleString}")
   }
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override protected def nullSafeEval(v: Any): Any =
-    VectorKernel.hyperplaneSig(v.asInstanceOf[ArrayData], offset, bits, isFloat)
+    VectorKernel.hyperplaneSig(v.asInstanceOf[ArrayData], offset, bits,
+      floatElems(child.dataType))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val isF = floatElems(child.dataType)
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernel.hyperplaneSig($c, $offset, $bits, $isFloat)")
+      s"graft.functions.VectorKernel.hyperplaneSig($c, $offset, $bits, $isF)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -690,21 +680,18 @@ case class PqLut(child: Expression, books: Array[Array[Array[Double]]],
       s"pq_lut requires array<float|double>, got ${other.simpleString}")
   }
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   // a NULL query vector must reach the kernel (it yields the all-null
   // table, as the per-entry columns did), so bypass the null short-circuit
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    VectorKernelPq.lut(child.eval(input).asInstanceOf[ArrayData], isFloat,
-      books, sub)
+    VectorKernelPq.lut(child.eval(input).asInstanceOf[ArrayData],
+      floatElems(child.dataType), books, sub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
     val booksRef = ctx.addReferenceObj("books", books, "double[][][]")
     val childGen = child.genCode(ctx)
-    val isF = isFloat.toString
+    val isF = floatElems(child.dataType).toString
     val resultCode =
       code"""
         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
@@ -731,11 +718,8 @@ case class PqLut(child: Expression, books: Array[Array[Array[Double]]],
 case class VecSub(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def isFloat(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
   override def dataType: DataType = {
-    val f = isFloat(left) && isFloat(right)
+    val f = floatElems(left.dataType) && floatElems(right.dataType)
     ArrayType(if (f) FloatType else DoubleType, containsNull = true)
   }
   override def prettyName: String = "vec_sub"
@@ -753,11 +737,11 @@ case class VecSub(left: Expression, right: Expression)
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     VectorKernelSub.sub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      isFloat(left), isFloat(right))
+      floatElems(left.dataType), floatElems(right.dataType))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lf = isFloat(left)
-    val rf = isFloat(right)
+    val lf = floatElems(left.dataType)
+    val rf = floatElems(right.dataType)
     defineCodeGen(ctx, ev, (x, y) =>
       s"graft.functions.VectorKernelSub.sub($x, $y, $lf, $rf)")
   }

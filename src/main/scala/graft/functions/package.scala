@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
 
 /** Column-level API for the graft function surface.
   *
@@ -13,6 +14,14 @@ package object functions {
 
   private def col(e: Expression): Column = ColumnBridge.column(e)
   private[graft] def expr(c: Column): Expression = ColumnBridge.expression(c)
+
+  /** Is `dt` an array of floats? The vector kernels read float elements
+    * with `getFloat` and widen them; every other element type they
+    * accept is read as double. */
+  private[graft] def floatElems(dt: DataType): Boolean = dt match {
+    case ArrayType(et, _) => et == FloatType
+    case _ => false
+  }
 
   /** rapidfuzz `fuzz.ratio` (normalized Indel similarity × 100). */
   def fuzz_ratio(a: Column, b: Column): Column = col(FuzzRatio(expr(a), expr(b)))

@@ -175,10 +175,10 @@ object AnnSearch {
     * only to their probed lists.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
-      refine: Boolean = true): DataFrame = {
+      vecCol: String, k: Int, nlist: Int = 16,
+      nprobe: Int = 4): DataFrame = {
     val c = ivfCorpus(corpus, idCol, vecCol)
-    val cents = ivfCentroids(c, nlist, refine)
+    val cents = ivfCentroids(c, nlist)
     val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     ivfTopKFromAssigned(q0, ivfAssign(c, cents), cents, k, nprobe)
   }
@@ -198,116 +198,124 @@ object AnnSearch {
       .dropDuplicates("neighbor_id")
 
   /** Coarse quantizer over an [[ivfCorpus]]-shaped frame: `nlist`
-    * deterministic hash-sampled seeds, then (by default) two Lloyd
-    * refinement passes — assign every training vector to its nearest
-    * seed, recenter each list on the member MEAN over fixed-point longs
-    * (element × 2²⁴, summed as integers) so the result is
-    * bit-deterministic across partitionings. Returns a
+    * deterministic hash-sampled seeds refined by two Lloyd passes
+    * ([[lloyd]] over one subspace holding each vector whole). Returns a
     * driver-materialized (list_id, centv) frame of ≤ nlist rows (list
-    * ids = seed doc ids, a stable labeling).
+    * ids = seed doc ids, a stable labeling). */
+  private[graft] def ivfCentroids(c: DataFrame, nlist: Int): DataFrame =
+    lloyd(c, nlist, 1, None).head
+
+  /** The ONE quantizer trainer, behind both [[ivfCentroids]] (one
+    * subspace, each vector whole: `sub = None`) and [[pqCodebookFrames]]
+    * (m width-`sub` subspaces): `k` deterministic hash-sampled seeds per
+    * subspace, then two Lloyd passes — assign every training vector to
+    * its nearest centroid, recenter each list on the member MEAN over
+    * fixed-point longs (element × 2²⁴, summed as integers) so the result
+    * is bit-deterministic across partitionings. Returns m
+    * driver-materialized (list_id, centv) frames of ≤ k rows each, in
+    * list_id-ascending order.
     *
-    * Training runs on a DETERMINISTIC HASH SAMPLE of at most `maxTrain`
-    * rows (the `maxTrain` smallest `xxhash64(id)` — the seed selection's
-    * own ordering, so seeds are always the sample's first nlist rows):
-    * one distributed TakeOrdered job collects the sample and the Lloyd
-    * iterations then run DRIVER-SIDE against the exact same kernel
-    * statics the distributed pass used ([[graft.functions
-    * .VectorKernelNearest.nearestCentroid]] for assignment,
+    * Training runs on a DETERMINISTIC HASH SAMPLE of at most 2¹⁶ rows
+    * (≈ 16 MB driver-side at 64 dims; the smallest `xxhash64(id)` — the
+    * seed selection's own ordering, so seeds are always the sample's
+    * first k rows, and every subspace draws the SAME sampled ids): one
+    * distributed TakeOrdered job collects the sample and the Lloyd
+    * iterations then run DRIVER-SIDE, all m subspaces per pass, against
+    * the exact same kernel statics the distributed pass used ([[graft
+    * .functions.VectorKernelNearest.nearestCentroid]] for assignment —
+    * identical tie-breaks, null handling, double ordering —
     * [[graft.functions.VecAggKernel.roundFixed]] for the fixed-point
     * sums) — bit-identical means when the corpus fits the cap (every
-    * golden-pinned sf), one Spark job instead of 1 + 2·iterations.
-    * This is the FAISS training discipline: quantizers train on a
-    * bounded sample (64k rows at 64 dims ≈ 16 MB driver-side), because
-    * at 10¹¹ vectors a full-corpus Lloyd pass per iteration is a
-    * corpus scan that buys nothing a large sample doesn't. */
-  private[graft] def ivfCentroids(c: DataFrame, nlist: Int,
-      refine: Boolean = true, iterations: Int = 2,
-      maxTrain: Int = 1 << 16): DataFrame = {
+    * golden-pinned sf, a2–a6/a9/a10/d9), one Spark job instead of
+    * 1 + 2·iterations. This is the FAISS training discipline: quantizers
+    * train on a bounded sample, because at 10¹¹ vectors a full-corpus
+    * Lloyd pass per iteration is a corpus scan that buys nothing a large
+    * sample doesn't.
+    *
+    * Count semantics mirror the distributed groupBy: every assigned row
+    * counts (null vectors land on index 0 and dilute that list's mean
+    * via n), null ELEMENTS are skipped per position, a vector longer than
+    * the list width contributes its first `width` elements, and lists
+    * with zero members drop out. Mean elements match the vector column's
+    * element type — float in the lake tables, double in synthetic or
+    * derived frames (a Float in a double-typed Row slot is a runtime
+    * ClassCastException at codegen time). */
+  private def lloyd(c: DataFrame, k: Int, m: Int,
+      sub: Option[Int]): IndexedSeq[DataFrame] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{StructField, StructType}
     val spark = c.sparkSession
     val idType = c.schema("neighbor_id").dataType
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("list_id", idType),
-      org.apache.spark.sql.types.StructField("centv",
-        c.schema("cv").dataType)))
-    def centFrame(rows: Array[org.apache.spark.sql.Row]) =
+    val vecType = c.schema("cv").dataType
+    val centSchema = StructType(Seq(StructField("list_id", idType),
+      StructField("centv", vecType)))
+    def centFrame(rows: Array[Row]) =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), centSchema)
-    // ONE distributed job: the hash-ordered training sample; its first
-    // nlist rows are exactly the seed set the pre-sample code selected
-    // with limit(nlist)
+    // ONE distributed job: the hash-ordered training sample
     val trainRows = c
       .withColumn("__h", xxhash64(col("neighbor_id")))
       .orderBy(col("__h"), col("neighbor_id"))
-      .limit(math.max(nlist, maxTrain))
-      .select(col("neighbor_id").as("list_id"), col("cv").as("centv"))
+      .limit(math.max(k, 1 << 16))
+      .select(col("neighbor_id"), col("cv"))
       .collect()
-    val seedRows = trainRows.take(nlist)
-    if (!refine || seedRows.isEmpty) return centFrame(seedRows)
-    val dim = seedRows.head.getAs[scala.collection.Seq[Any]](1).length
-    // mean elements must match the vector column's element type — the
-    // embedding column is float in the lake tables but double in
-    // synthetic/derived frames, and a Float in a double-typed Row slot
-    // is a runtime ClassCastException at codegen time
-    val isFloat = c.schema("cv").dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
-    val toElem: Double => Any =
-      if (isFloat) d => d.toFloat else d => d
+    val seedRows = trainRows.take(k)
+    if (seedRows.isEmpty) return IndexedSeq.fill(m)(centFrame(seedRows))
+    def part(v: scala.collection.Seq[Any], j: Int): scala.collection.Seq[Any] =
+      sub.fold(v)(w => if (v == null) null else v.slice(j * w, (j + 1) * w))
+    val width = sub.getOrElse(
+      seedRows.head.getAs[scala.collection.Seq[Any]](1).length)
+    val isFloat = graft.functions.floatElems(vecType)
+    val toElem: Double => Any = if (isFloat) d => d.toFloat else d => d
     val scale = (1L << 24).toDouble
-    // training vectors wrapped ONCE for the kernel calls
-    val vecs: Array[org.apache.spark.sql.catalyst.util.ArrayData] =
-      trainRows.map { r =>
-        val s = r.getAs[scala.collection.Seq[Any]](1)
-        if (s == null) null
-        else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-          s.toArray)
-      }
-    // driver-side Lloyd: per-iteration, assignment via the SAME argmax
-    // kernel the distributed narrow map compiles
-    // (VectorKernelNearest.nearestCentroid — identical tie-breaks, null
-    // handling, double ordering) and per-list means via the SAME
-    // fixed-point rounding (VecAggKernel.roundFixed) — so a corpus at or
-    // under maxTrain produces bit-identical centroids to the r7
-    // distributed passes (golden hashes a2–a6/a9/a10/d9 unchanged).
-    // Count semantics mirror the old groupBy: every assigned row counts
-    // (null vectors land on index 0 and dilute that list's mean via n),
-    // null ELEMENTS are skipped per position, and lists with zero
-    // members drop out of the refined set.
-    def sortCentRows(rows: Array[org.apache.spark.sql.Row])
-        : Array[org.apache.spark.sql.Row] =
-      sortRowsById(rows, idType, centFrame)
-    var cents = seedRows
-    (1 to iterations).foreach { _ =>
-      val cm = centMatrixFromSortedRows(sortCentRows(cents), idType)
-      val sums = Array.fill(cm.rows.length)(new Array[Long](dim))
-      val counts = new Array[Long](cm.rows.length)
+    // per-row subspace vectors wrapped ONCE for the kernel calls
+    val parts: Array[Array[ArrayData]] = trainRows.map { r =>
+      val s = r.getAs[scala.collection.Seq[Any]](1)
+      Array.tabulate[ArrayData](m)(j =>
+        if (s == null) null else new GenericArrayData(part(s, j).toArray))
+    }
+    var cents: IndexedSeq[Array[Row]] = (0 until m).map(j =>
+      seedRows.map(r => Row(r.get(0),
+        part(r.getAs[scala.collection.Seq[Any]](1), j))))
+    (1 to 2).foreach { _ =>
+      val cms = cents.map(rows =>
+        centMatrixFromSortedRows(sortRowsById(rows, idType, centFrame), idType))
+      val sums = cms.map(cm => Array.fill(cm.rows.length)(new Array[Long](width)))
+      val counts = cms.map(cm => new Array[Long](cm.rows.length))
       var i = 0
-      while (i < vecs.length) {
-        val v = vecs(i)
-        val t = graft.functions.VectorKernelNearest.nearestCentroid(
-          v, isFloat, cm.mats, cm.nb2s, cm.nb2Null)
-        counts(t) += 1
-        if (v != null) {
-          val n = math.min(dim, v.numElements())
-          var e = 0
-          while (e < n) {
-            if (!v.isNullAt(e)) {
-              val x = if (isFloat) v.getFloat(e).toDouble else v.getDouble(e)
-              sums(t)(e) += graft.functions.VecAggKernel.roundFixed(x * scale)
+      while (i < parts.length) {
+        var j = 0
+        while (j < m) {
+          val v = parts(i)(j)
+          val cm = cms(j)
+          val t = graft.functions.VectorKernelNearest.nearestCentroid(
+            v, isFloat, cm.mats, cm.nb2s, cm.nb2Null)
+          counts(j)(t) += 1
+          if (v != null) {
+            val n = math.min(width, v.numElements())
+            var e = 0
+            while (e < n) {
+              if (!v.isNullAt(e)) {
+                val x = if (isFloat) v.getFloat(e).toDouble else v.getDouble(e)
+                sums(j)(t)(e) += graft.functions.VecAggKernel.roundFixed(x * scale)
+              }
+              e += 1
             }
-            e += 1
           }
+          j += 1
         }
         i += 1
       }
-      cents = cm.rows.indices.iterator.filter(counts(_) > 0).map { t =>
-        val n = counts(t).toDouble
-        org.apache.spark.sql.Row(cm.rows(t).get(0),
-          Array.tabulate[Any](dim)(e => toElem(sums(t)(e) / scale / n)).toSeq)
-      }.toArray
+      cents = cms.indices.map { j =>
+        val cm = cms(j)
+        cm.rows.indices.filter(counts(j)(_) > 0).map { t =>
+          val n = counts(j)(t).toDouble
+          Row(cm.rows(t).get(0),
+            Array.tabulate[Any](width)(e => toElem(sums(j)(t)(e) / scale / n)).toSeq)
+        }.toArray
+      }
     }
-    centFrame(sortCentRows(cents))
+    cents.map(centFrame)
   }
 
   /** Assign every corpus vector to its single nearest centroid →
@@ -415,7 +423,7 @@ object AnnSearch {
     * via a tiny LocalRelation sort otherwise (exotic id types only;
     * never silently unsorted — the matrix tie-break contract depends on
     * it). */
-  private def sortRowsById(rows: Array[org.apache.spark.sql.Row],
+  private[graft] def sortRowsById(rows: Array[org.apache.spark.sql.Row],
       idType: org.apache.spark.sql.types.DataType,
       frame: Array[org.apache.spark.sql.Row] => DataFrame)
       : Array[org.apache.spark.sql.Row] = listIdOrdering(idType) match {
@@ -754,8 +762,8 @@ object AnnSearch {
     dim / m
   }
 
-  /** Per-subspace PQ codebooks: the IVF quantizer ([[ivfCentroids]] —
-    * hash-sampled seeds + fixed-point Lloyd) run on each width-`sub`
+  /** Per-subspace PQ codebooks: the IVF quantizer's trainer ([[lloyd]]
+    * — hash-sampled seeds + fixed-point Lloyd) run on each width-`sub`
     * slice of an [[ivfCorpus]]-shaped frame. centMatrix's
     * list_id-ascending ordering makes code j a stable index into mats. */
   private[graft] def pqCodebooks(c: DataFrame, m: Int, ksub: Int,
@@ -765,116 +773,13 @@ object AnnSearch {
   /** The codebooks as (list_id, centv) frames — the persistable form
     * ([[graft.pipeline.SilverIndex.refreshIvfPq]] freezes these);
     * [[centMatrix]]'s list_id-ascending ordering reproduces the code →
-    * mats-index mapping exactly on reload.
-    *
-    * All m subspaces train in ONE pass over ONE sample: the hash sample
-    * keys on `neighbor_id`, not the subvector, so every subspace draws
-    * the SAME sampled ids — a single corpus TakeOrdered (capped at
-    * `maxTrain` rows, the [[ivfCentroids]] FAISS-style training
-    * discipline) collects the sample, and the Lloyd iterations run
-    * DRIVER-SIDE per subspace against the same kernel statics the
-    * distributed explode + VecSumFixed shape compiled. Bit-identical at
-    * or under the cap — same seeds, same argmin kernel per slice, same
-    * fixed-point rounding, reduction-order-free sums (golden a9/a10
-    * hashes pin it) — and ONE driver action instead of 3 (r7) or 3·m
-    * (r5); action latency is the whole cost of quantizer training below
-    * corpus sizes that saturate a task. */
+    * mats-index mapping exactly on reload. All m subspaces train in ONE
+    * pass over ONE hash sample ([[lloyd]]): one driver action instead of
+    * 3 (r7) or 3·m (r5) — action latency is the whole cost of quantizer
+    * training below corpus sizes that saturate a task. */
   private[graft] def pqCodebookFrames(c: DataFrame, m: Int, ksub: Int,
-      sub: Int, maxTrain: Int = 1 << 16): IndexedSeq[DataFrame] = {
-    val spark = c.sparkSession
-    val idType = c.schema("neighbor_id").dataType
-    val elemType = c.schema("cv").dataType
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("list_id", idType),
-      org.apache.spark.sql.types.StructField("centv", elemType)))
-    def centFrame(rows: Seq[org.apache.spark.sql.Row]) =
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), centSchema)
-    // ONE distributed job: the hash-ordered training sample (the
-    // ivfCentroids discipline — seeds are its first ksub rows, and all
-    // m subspaces train on the same sampled ids as driver-side slices)
-    val trainRows = c
-      .withColumn("__h", xxhash64(col("neighbor_id")))
-      .orderBy(col("__h"), col("neighbor_id"))
-      .limit(math.max(ksub, maxTrain))
-      .select(col("neighbor_id"), col("cv"))
-      .collect()
-    val seedRows = trainRows.take(ksub)
-    def sliceSeq(v: scala.collection.Seq[Any], j: Int): Any =
-      if (v == null) null else v.slice(j * sub, (j + 1) * sub)
-    var cents: IndexedSeq[IndexedSeq[org.apache.spark.sql.Row]] =
-      (0 until m).map { j =>
-        seedRows.toIndexedSeq.map(r => org.apache.spark.sql.Row(
-          r.get(0), sliceSeq(r.getAs[scala.collection.Seq[Any]](1), j)))
-      }
-    if (seedRows.isEmpty) return cents.map(centFrame)
-    val isFloat = elemType match {
-      case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType, _) => true
-      case _ => false
-    }
-    val toElem: Double => Any = if (isFloat) d => d.toFloat else d => d
-    val scale = (1L << 24).toDouble
-    // per-row subspace slices wrapped ONCE for the kernel calls
-    val slices: Array[Array[org.apache.spark.sql.catalyst.util.ArrayData]] =
-      trainRows.map { r =>
-        val s = r.getAs[scala.collection.Seq[Any]](1)
-        Array.tabulate(m)(j =>
-          if (s == null) null
-          else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-            s.slice(j * sub, (j + 1) * sub).toArray))
-      }
-    // driver-side Lloyd over the sample, all m subspaces per pass — the
-    // same kernel statics as the distributed explode + VecSumFixed shape
-    // it replaces (bit-identical at or under the cap; the golden a9/a10
-    // hashes pin it), with zero corpus re-scans per iteration
-    (1 to 2).foreach { _ =>
-      val cms = cents.map { rows =>
-        centMatrixFromSortedRows(
-          sortRowsById(rows.toArray, idType, rs => centFrame(rs.toSeq)),
-          idType)
-      }
-      val sums = Array.tabulate(m)(j =>
-        Array.fill(cms(j).rows.length)(new Array[Long](sub)))
-      val counts = Array.tabulate(m)(j => new Array[Long](cms(j).rows.length))
-      var i = 0
-      while (i < slices.length) {
-        var j = 0
-        while (j < m) {
-          val sv = slices(i)(j)
-          val cm = cms(j)
-          val t = graft.functions.VectorKernelNearest.nearestCentroid(
-            sv, isFloat, cm.mats, cm.nb2s, cm.nb2Null)
-          counts(j)(t) += 1
-          if (sv != null) {
-            val n = math.min(sub, sv.numElements())
-            var e = 0
-            while (e < n) {
-              if (!sv.isNullAt(e)) {
-                val x = if (isFloat) sv.getFloat(e).toDouble
-                  else sv.getDouble(e)
-                sums(j)(t)(e) += graft.functions.VecAggKernel
-                  .roundFixed(x * scale)
-              }
-              e += 1
-            }
-          }
-          j += 1
-        }
-        i += 1
-      }
-      cents = (0 until m).map { j =>
-        val cm = cms(j)
-        cm.rows.indices.iterator.filter(counts(j)(_) > 0).map { t =>
-          val n = counts(j)(t).toDouble
-          org.apache.spark.sql.Row(cm.rows(t).get(0),
-            Array.tabulate[Any](sub)(e =>
-              toElem(sums(j)(t)(e) / scale / n)).toSeq)
-        }.toIndexedSeq
-      }
-    }
-    cents.map(centFrame)
-  }
+      sub: Int): IndexedSeq[DataFrame] =
+    lloyd(c, ksub, m, Some(sub))
 
   /** m-code PQ encoding of `vec`: one [[graft.functions.NearestCentroid]]
     * argmin per subspace — a narrow codegen map, no exchange. */
@@ -1072,39 +977,42 @@ object AnnSearch {
     // legs suffix the rescoreMult).
     require(m > 0 && ksub > 1, s"need m > 0, ksub > 1: m=$m ksub=$ksub")
     val c = ivfCorpus(corpus, idCol, vecCol)
-    val ix = ivfPqCoded(c, nlist, m, ksub, residual, cacheSlot)
     val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val probes0 = probeLists(q0, ix.cents, nprobe,
-      idTypeFallback = Some(ix.listIdType))
-    // per-probe coarse term dot(q, c_L): ≤ |Q|·nprobe rows joined with
-    // the ≤ nlist centroid rows — never an nlist-sized literal
-    val probes1 =
-      if (residual)
-        probes0.join(broadcast(ix.cents), "list_id")
-          .withColumn("__qcdot", VectorFunctions.dot(col("qv"), col("centv")))
-          .drop("centv")
-      else probes0.withColumn("__qcdot", lit(0.0))
-    val probes = probes1
-      .withColumn("__lut", pqQueryLut(col("qv"), ix.cms, ix.sub))
-      .withColumn("__qn", VectorFunctions.norm(col("qv")))
-    val cand = broadcast(probes).join(ix.codes, "list_id")
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("qscore", pqAdcCosineStored(col("__lut"), col("__qn"),
-        col("__qcdot"), col("codes"), col("rnorm2"), ix.cms))
-    exactRescore(pqCandTop(cand, k * rescoreMult), c, q0, k)
+    ivfPqSearch(q0, ivfPqCoded(c, nlist, m, ksub, residual, cacheSlot), c,
+      k, nprobe, rescoreMult, residual)
   }
 
-  /** The trained-and-encoded IVF-PQ state shared by [[ivfPqTopK]] and
-    * [[knnJoinIvfPq]]: frozen coarse quantizer, per-subspace codebooks,
-    * and the materialized (neighbor_id, list_id, codes, rnorm2) code
-    * table — the persisted-index shape ([[graft.pipeline.SilverIndex]]
-    * at scale). Materialized for the same codegen-deferral reason as
-    * [[pqTopK]]: un-materialized, the m-kernel encode re-runs per
-    * candidate pair. */
-  private case class IvfPqIndex(cents: DataFrame, cms: Seq[CentMatrix],
+  /** The trained-and-encoded IVF-PQ state — frozen coarse quantizer,
+    * per-subspace codebooks, and the (neighbor_id, list_id, codes,
+    * rnorm2) code table: built in memory by [[ivfPqCoded]], loaded from
+    * the persisted index by
+    * [[graft.pipeline.SilverIndex.ivfPqTopKFromIndex]]. */
+  private[graft] case class IvfPqIndex(cents: DataFrame, cms: Seq[CentMatrix],
       sub: Int, codes: DataFrame,
       listIdType: org.apache.spark.sql.types.DataType)
 
+  /** Assigned (neighbor_id, cv, list_id) rows beside their coarse
+    * centroid, `cv` replaced by the residual `cv − centv` — the frame
+    * residual codebooks train on and [[ivfPqEncode]] encodes. */
+  private[graft] def ivfResiduals(assigned: DataFrame,
+      cents: DataFrame): DataFrame =
+    assigned.join(broadcast(cents), "list_id")
+      .select(col("neighbor_id"), col("list_id"), col("centv"),
+        VectorFunctions.sub(col("cv"), col("centv")).as("cv"))
+
+  /** The residual IVF-PQ encoder: assigned (neighbor_id, cv, list_id) →
+    * (neighbor_id, list_id, codes, rnorm2), per-row deterministic against
+    * frozen quantizers. */
+  private[graft] def ivfPqEncode(assigned: DataFrame, cents: DataFrame,
+      cms: Seq[CentMatrix], sub: Int): DataFrame =
+    ivfResiduals(assigned, cents)
+      .withColumn("codes", pqEncode(col("cv"), cms, sub))
+      .select(col("neighbor_id"), col("list_id"), col("codes"),
+        pqReconNorm2(col("centv"), col("codes"), cms, sub).as("rnorm2"))
+
+  /** Train and encode an [[IvfPqIndex]] over an [[ivfCorpus]]-shaped
+    * frame, the code table materialized (the [[pqTopK]] codegen-deferral
+    * reason). `residual = false` encodes the raw vectors instead. */
   private def ivfPqCoded(c: DataFrame, nlist: Int, m: Int, ksub: Int,
       residual: Boolean, cacheSlot: String, dimHint: Int = -1): IvfPqIndex = {
     // dimHint: skip the first-row dim probe job when the caller already
@@ -1118,23 +1026,53 @@ object AnnSearch {
       } else pqSubDim(c, m)
     val cents = ivfCentroids(c, nlist)
     val assigned = ivfAssign(c, cents)
-    // codebooks train on what they will encode: residuals against the
-    // assigned coarse centroid (or raw vectors in the measurement shape)
-    val train =
+    val (cms, coded) =
+      if (residual) {
+        val cms = pqCodebooks(ivfResiduals(assigned, cents)
+          .select("neighbor_id", "cv"), m, ksub, sub)
+        (cms, ivfPqEncode(assigned, cents, cms, sub))
+      } else {
+        val cms = pqCodebooks(assigned.select("neighbor_id", "cv"), m, ksub, sub)
+        (cms, assigned.withColumn("codes", pqEncode(col("cv"), cms, sub))
+          .select(col("neighbor_id"), col("list_id"), col("codes"),
+            pqCodeNorm2(col("codes"), cms).as("rnorm2")))
+      }
+    IvfPqIndex(cents, cms, sub, graft.ManagedCache.swap(cacheSlot, coded),
+      assigned.schema("list_id").dataType)
+  }
+
+  /** IVF-PQ probe rows (list_id, query_id, qv, __qcdot, __lut, __qn), ≤
+    * nprobe per (query_id, qv) row of `q0`: the per-probe coarse term
+    * dot(q, c_L) joins the ≤ nlist centroid rows (never an nlist-sized
+    * literal; 0 for raw codes). */
+  private def ivfPqProbes(q0: DataFrame, ix: IvfPqIndex, nprobe: Int,
+      residual: Boolean): DataFrame = {
+    val probes = probeLists(q0, ix.cents, nprobe,
+      idTypeFallback = Some(ix.listIdType))
+    val coarse =
       if (residual)
-        assigned.join(broadcast(cents), "list_id")
-          .select(col("neighbor_id"), col("list_id"), col("centv"),
-            VectorFunctions.sub(col("cv"), col("centv")).as("cv"))
-      else assigned.select(col("neighbor_id"), col("list_id"), col("cv"))
-    val cms = pqCodebooks(train.select("neighbor_id", "cv"), m, ksub, sub)
-    val coded = train.withColumn("codes", pqEncode(col("cv"), cms, sub))
-    val rn2 =
-      if (residual) pqReconNorm2(col("centv"), col("codes"), cms, sub)
-      else pqCodeNorm2(col("codes"), cms)
-    val c8 = graft.ManagedCache.swap(cacheSlot,
-      coded.select(col("neighbor_id"), col("list_id"), col("codes"),
-        rn2.as("rnorm2")))
-    IvfPqIndex(cents, cms, sub, c8, assigned.schema("list_id").dataType)
+        probes.join(broadcast(ix.cents), "list_id")
+          .withColumn("__qcdot", VectorFunctions.dot(col("qv"), col("centv")))
+          .drop("centv")
+      else probes.withColumn("__qcdot", lit(0.0))
+    coarse.withColumn("__lut", pqQueryLut(col("qv"), ix.cms, ix.sub))
+      .withColumn("__qn", VectorFunctions.norm(col("qv")))
+  }
+
+  /** The broadcast-shape IVF-PQ search behind [[ivfPqTopK]] and
+    * [[graft.pipeline.SilverIndex.ivfPqTopKFromIndex]]: probe rows
+    * broadcast into the code table, ADC-scored candidates, the top
+    * k·rescoreMult per query exact-rescored against `c` (an
+    * [[ivfCorpus]]-shaped frame). */
+  private[graft] def ivfPqSearch(q0: DataFrame, ix: IvfPqIndex,
+      c: DataFrame, k: Int, nprobe: Int, rescoreMult: Int,
+      residual: Boolean = true): DataFrame = {
+    val cand = broadcast(ivfPqProbes(q0, ix, nprobe, residual))
+      .join(ix.codes, "list_id")
+      .where(col("query_id") =!= col("neighbor_id"))
+      .withColumn("qscore", pqAdcCosineStored(col("__lut"), col("__qn"),
+        col("__qcdot"), col("codes"), col("rnorm2"), ix.cms))
+    exactRescore(pqCandTop(cand, k * rescoreMult), c, q0, k)
   }
 
   /** [[knnJoinIvf]] at PQ-code candidate resolution — the kNN-graph
@@ -1143,10 +1081,11 @@ object AnnSearch {
     * [[ivfPqTopK]]'s machinery) and only the surviving k·rescoreMult
     * per query touch float vectors again. All broadcast shapes are
     * replaced by partitioned joins, since BOTH sides are corpus-sized:
-    *  - probers shuffle on `list_id` BEFORE the per-query LUT is
-    *    derived (projections don't collapse across an Exchange, so the
-    *    wire carries the vector + two doubles, not the m·ksub-double
-    *    LUT), then meet the code table in a partitioned equi-join;
+    *  - probers derive the per-query LUT BEFORE they shuffle on
+    *    `list_id` (the Exchange is the materialization barrier that
+    *    keeps the LUT kernel from re-running per candidate; the wire
+    *    carries the m·ksub-double LUT, not the vector), then meet the
+    *    code table in a partitioned equi-join;
     *  - the exact rescore is [[exactRescoreShuffled]] — candidate pairs
     *    join the float corpus on each side key instead of broadcasting
     *    a |corpus|·k·rescoreMult pair set through the driver.
@@ -1185,12 +1124,6 @@ object AnnSearch {
     val ix = ivfPqCoded(c, nlist, m, ksub, residual = true,
       "AnnSearch.knnJoinIvfPq.codes", dimHint = dimHint)
     val q0 = c.select(col("neighbor_id").as("query_id"), col("cv").as("qv"))
-    val probes0 = probeLists(q0, ix.cents, nprobe,
-      idTypeFallback = Some(ix.listIdType))
-    val probes1 = probes0.join(broadcast(ix.cents), "list_id")
-      .withColumn("__qcdot", VectorFunctions.dot(col("qv"), col("centv")))
-      .drop("centv")
-      .withColumn("__qn", VectorFunctions.norm(col("qv")))
     // LUT BEFORE the exchange, deliberately: physical planning folds a
     // Project adjacent to a join into the join's OUTPUT projection, so
     // a lut computed "just under" the candidate join would re-run its
@@ -1200,8 +1133,7 @@ object AnnSearch {
     // materialization barrier: each probe row's table is computed once,
     // shipped once (m·ksub doubles/row — the byte price of the barrier),
     // and only read per candidate.
-    val probes = probes1
-      .withColumn("__lut", pqQueryLut(col("qv"), ix.cms, ix.sub))
+    val probes = ivfPqProbes(q0, ix, nprobe, residual = true)
       .drop("qv")
       .repartition(col("list_id"))
     val cand = probes.join(ix.codes, "list_id")

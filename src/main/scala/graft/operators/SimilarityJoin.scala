@@ -293,9 +293,9 @@ object SimilarityJoin {
     // reference semantics ({**job, **pay, "score"}): right wins on a
     // left/right collision, and the computed score wins over any input
     // column already named scoreCol
-    val keptLeftNames = left.columns
+    val keptLeftNames = left.columns.toSeq
       .filterNot(overlapping.contains).filterNot(_ == cfg.scoreCol)
-    val keptRightNames = right.columns.filterNot(_ == cfg.scoreCol)
+    val keptRightNames = right.columns.toSeq.filterNot(_ == cfg.scoreCol)
 
     // per-LEFT-ROW id: top-k must be per left row, not per key value —
     // two left rows sharing a key each get their own k matches

@@ -59,7 +59,7 @@ object TemporalJoins {
         .withColumn(ts, col(leftTs))
         .withColumn(tag, lit(1))
         .withColumn(payload, lit(null).cast(payloadType))
-        .withColumn(leftStruct, struct(left.columns.map(col): _*))) {
+        .withColumn(leftStruct, struct(left.columns.toSeq.map(col): _*))) {
       case (df, (n, dt)) => df.withColumn(n, lit(null).cast(dt))
     }.select(sideCols.map(col): _*)
 
@@ -92,7 +92,7 @@ object TemporalJoins {
     }
 
     withinTol.select(
-      left.columns.map(n => col(s"$leftStruct.`$n`").as(n)) ++
+      left.columns.toSeq.map(n => col(s"$leftStruct.`$n`").as(n)) ++
         (rightTs +: rightCols).map(n =>
           col(s"__graft_match.`$n`").as(s"$rightPrefix$n")): _*)
   }

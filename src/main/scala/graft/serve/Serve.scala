@@ -38,7 +38,7 @@ object Serve {
     * (unique up to fully-identical rows). */
   private def ordered(t: DataFrame, ds: Dataset): DataFrame = {
     val primary = if (ds.desc) col(ds.sortKey).desc else col(ds.sortKey).asc
-    val tiebreak = t.columns.filterNot(_ == ds.sortKey).sorted.map(col(_).asc)
+    val tiebreak = t.columns.toSeq.filterNot(_ == ds.sortKey).sorted.map(col(_).asc)
     t.orderBy(primary +: tiebreak: _*)
   }
 

@@ -1310,20 +1310,33 @@ class SilverIndexSpec extends SparkTestBase {
   test("driver quantizer caches are LRU-capped: a capped-out entry " +
       "reloads from parquet and serves identical rows") {
     val prop = "graft.silverindex.cacheCap"
-    val pathA = tmp("silver-lru-a")
-    val pathB = tmp("silver-lru-b")
+    val q = emb.where(col("vec_id") % 50 === 0)
+    // (kind, refresh, serve): the IVF centroids and the IVF-PQ centroids
+    // + codebooks all live in the driver's frozen-quantizer cache
+    val kinds: Seq[(String, (DataFrame, String) => Unit,
+        String => DataFrame)] = Seq(
+      ("ivf",
+        (c, p) => SilverIndex.refreshIvf(c, "vec_id", "embedding",
+          nlist = 4, path = p),
+        p => SilverIndex.ivfAssigned(spark, p)),
+      ("ivf-pq",
+        (c, p) => SilverIndex.refreshIvfPq(c, "vec_id", "embedding",
+          nlist = 4, m = 8, ksub = 16, path = p),
+        p => SilverIndex.ivfPqTopKFromIndex(q, emb, "vec_id", "embedding",
+          p, k = 5, nprobe = 2, rescoreMult = 10)))
     sys.props(prop) = "1"
-    try {
-      SilverIndex.refreshIvf(emb, "vec_id", "embedding", nlist = 4,
-        path = pathA)
-      val first = rowSet(SilverIndex.ivfAssigned(spark, pathA))
-      // building + reading B evicts A's centroid entry at cap 1
-      SilverIndex.refreshIvf(emb.where(col("vec_id") % 2 === 0),
-        "vec_id", "embedding", nlist = 4, path = pathB)
-      assert(rowSet(SilverIndex.ivfAssigned(spark, pathB)).nonEmpty)
+    try kinds.foreach { case (kind, refresh, serve) =>
+      val pathA = tmp(s"silver-lru-$kind-a")
+      val pathB = tmp(s"silver-lru-$kind-b")
+      refresh(emb, pathA)
+      val first = rowSet(serve(pathA))
+      assert(first.nonEmpty, kind)
+      // building + reading B evicts A's entries at cap 1
+      refresh(emb.where(col("vec_id") % 2 === 0), pathB)
+      assert(rowSet(serve(pathB)).nonEmpty, kind)
       // A reloads through the miss path — identical rows
-      assert(rowSet(SilverIndex.ivfAssigned(spark, pathA)) == first,
-        "an evicted cache entry must reload identically")
+      assert(rowSet(serve(pathA)) == first,
+        s"$kind: an evicted cache entry must reload identically")
     } finally sys.props -= prop
   }
 
