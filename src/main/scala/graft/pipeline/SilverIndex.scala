@@ -1154,17 +1154,14 @@ object SilverIndex {
       org.apache.spark.sql.types.StructType)]
 
   /** The fingerprint-validated rows of the quantizer table at `dir`: a
-    * cache hit, else the parquet table, collected and cached. `built` (a
-    * just-written build the caller holds driver-side) always replaces
-    * the entry. */
-  private def frozenRows(spark: SparkSession, dir: String,
-      built: Option[DataFrame] = None)
+    * cache hit, else the parquet table, collected and cached. */
+  private def frozenRows(spark: SparkSession, dir: String)
       : (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
     val fp = fingerprint(LakeIO.fsFor(spark, dir), dir)
     frozenCache.get(dir) match {
-      case Some((hfp, r, sch)) if hfp == fp && built.isEmpty => (r, sch)
+      case Some((hfp, r, sch)) if hfp == fp => (r, sch)
       case _ =>
-        val df = built.getOrElse(spark.read.parquet(dir))
+        val df = spark.read.parquet(dir)
         val r = df.collect()
         frozenCache.put(dir, (fp, r, df.schema))
         (r, df.schema)
@@ -1187,8 +1184,11 @@ object SilverIndex {
     if (hasDataFiles(spark, centPath(path))) loadCents(spark, path)
     else {
       val built = AnnSearch.ivfCentroids(c, nlist)
-      built.write.mode("overwrite").parquet(centPath(path))
-      frozenRows(spark, centPath(path), Some(built))
+      val dir = centPath(path)
+      built.write.mode("overwrite").parquet(dir)
+      // seed the cache: the builder already holds the rows driver-side
+      frozenCache.put(dir, (fingerprint(LakeIO.fsFor(spark, dir), dir),
+        built.collect(), built.schema))
       built
     }
   }
@@ -1304,33 +1304,45 @@ object SilverIndex {
     val c = AnnSearch.ivfCorpus(corpus, idCol, vecCol)
     val sub = AnnSearch.pqSubDim(c, m)
     val cents = frozenCents(c, nlist, path)
-    val books =
-      if (hasDataFiles(spark, bookPath(path))) {
-        // a mismatched re-run fails loudly
-        val (stored, width) = loadCodebooks(spark, path)
-        require(stored.size == m, s"index at $path has ${stored.size} " +
-          s"subspaces, refresh requested $m — rebuild, don't mix")
-        require(width == sub, s"index at $path has subvector width " +
-          s"$width, refresh derived $sub — rebuild, don't mix")
-        stored
-      } else {
-        val frames = AnnSearch.pqCodebookFrames(AnnSearch.ivfResiduals(
-          AnnSearch.ivfAssign(c, cents), cents).select("neighbor_id", "cv"),
-          m, ksub, sub)
-        frames.zipWithIndex.map { case (f, j) =>
-            f.select(lit(j).as("subspace"), col("list_id"), col("centv"))
-          }.reduce(_ unionAll _)
-          .write.mode("overwrite").parquet(bookPath(path))
-        frames.map(AnnSearch.centMatrix)
+    val trainBooks = !hasDataFiles(spark, bookPath(path))
+    // a first build (no code table yet, so appendNew's anti-join passes
+    // `c` through whole) assigns the corpus once: the codebook training
+    // sample and the encode both read one cached assignment
+    val firstAssigned =
+      if (trainBooks && !hasDataFiles(spark, codesPath(path)))
+        Some(AnnSearch.ivfAssign(c, cents).persist())
+      else None
+    try {
+      val books =
+        if (!trainBooks) {
+          // a mismatched re-run fails loudly
+          val (stored, width) = loadCodebooks(spark, path)
+          require(stored.size == m, s"index at $path has ${stored.size} " +
+            s"subspaces, refresh requested $m — rebuild, don't mix")
+          require(width == sub, s"index at $path has subvector width " +
+            s"$width, refresh derived $sub — rebuild, don't mix")
+          stored
+        } else {
+          val frames = AnnSearch.pqCodebookFrames(AnnSearch.ivfResiduals(
+            firstAssigned.getOrElse(AnnSearch.ivfAssign(c, cents)), cents)
+            .select("neighbor_id", "cv"), m, ksub, sub)
+          frames.zipWithIndex.map { case (f, j) =>
+              f.select(lit(j).as("subspace"), col("list_id"), col("centv"))
+            }.reduce(_ unionAll _)
+            .write.mode("overwrite").parquet(bookPath(path))
+          frames.map(AnnSearch.centMatrix)
+        }
+      // the id anti-join runs on the raw corpus, below the assignment, so
+      // a delta refresh assigns and encodes only the new ids
+      appendNew(c, "neighbor_id", codesPath(path), storedKey = "neighbor_id",
+          partitionCols = Seq("list_id"), shape = listColocated) { fresh =>
+        AnnSearch.ivfPqEncode(
+            firstAssigned.getOrElse(AnnSearch.ivfAssign(fresh, cents)),
+            cents, books, sub)
+          .select(col("neighbor_id"), col("codes"), col("rnorm2"),
+            col("list_id"))
       }
-    // the id anti-join runs on the raw corpus, below the assignment, so
-    // a delta refresh assigns and encodes only the new ids
-    appendNew(c, "neighbor_id", codesPath(path), storedKey = "neighbor_id",
-        partitionCols = Seq("list_id"), shape = listColocated) { fresh =>
-      AnnSearch.ivfPqEncode(AnnSearch.ivfAssign(fresh, cents), cents, books,
-          sub)
-        .select(col("neighbor_id"), col("codes"), col("rnorm2"), col("list_id"))
-    }
+    } finally firstAssigned.foreach(_.unpersist())
   }
 
   /** The frozen per-subspace codebooks reloaded as the kernel matrices,

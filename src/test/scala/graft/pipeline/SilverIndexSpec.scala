@@ -214,6 +214,52 @@ class SilverIndexSpec extends SparkTestBase {
     assert(e.getMessage.contains("subspaces"))
   }
 
+  test("ivf-pq: the first build assigns the corpus once") {
+    import org.apache.spark.sql.catalyst.expressions.Slice
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the coarse assignment is the NearestCentroid over a whole vector
+    // (the PQ encode's run over slices); a cached relation is a leaf here
+    def assigns(p: LogicalPlan): Boolean = p.exists(_.expressions.exists(
+      _.exists {
+        case n: graft.functions.NearestCentroid =>
+          !n.child.isInstanceOf[Slice]
+        case _ => false
+      }))
+    def caches(p: LogicalPlan) =
+      p.collect { case r: InMemoryRelation => r.cacheBuilder }
+    val plans = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[LogicalPlan]())
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = { plans.add(qe.optimizedPlan); () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    org.apache.spark.graft.ListenerBusBridge.flush(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val r = try {
+      val r = SilverIndex.refreshIvfPq(emb, "vec_id", "embedding",
+        nlist = 8, m = 8, ksub = 16, path = tmp("silver-ivfpq-once"))
+      org.apache.spark.graft.ListenerBusBridge.flush(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(r.appended == emb.count())
+    import scala.jdk.CollectionConverters._
+    val seen = plans.asScala.toList
+    // no action assigns the corpus itself; the codebook training sample
+    // and the code-table write both read one cached assignment
+    assert(!seen.exists(assigns),
+      s"${seen.count(assigns)} actions assign the corpus themselves")
+    val reads = seen.flatMap(caches)
+    assert(reads.size == 2 && reads.distinct.size == 1,
+      s"expected two reads of one cached assignment, saw ${reads.size}")
+    assert(!reads.head.isCachedColumnBuffersLoaded,
+      "the assignment stays cached after the build")
+  }
+
   test("bm25 postings: base+delta refresh == from-scratch; index queries match live") {
     val path = tmp("silver-post")
     val base = docs.where(col("doc_id") % 4 =!= 0)
